@@ -519,7 +519,7 @@ def embedding_near_dup_gemm(df: DataFrame, id_col: str, vec_col: str,
     Catalyst's interpreted higher-order-function dot product, at the
     cost of one Arrow transfer of each block.
 
-    Trade-offs vs the expression variant (which remains the default):
+    Trade-offs vs the expression variant:
     parallelism is one task per BLOCK (no salting — the GEMM wants the
     whole block), and a block must fit in one executor's memory
     (n×d vectors + the n×n similarity triangle; ~20k×64 floats ≈
@@ -647,17 +647,19 @@ def semdedup_keep(corpus: DataFrame, id_col: str, vec_col: str,
                   nlist: int | None = 16, threshold: float = 0.97,
                   train_iters: int = 2,
                   centroids: list[list[float]] | None = None,
-                  rows_per_cluster: int = 256,
-                  impl: str = "expr") -> DataFrame:
+                  rows_per_cluster: int = 256) -> DataFrame:
     """SemDeDup (semantic dedup over embeddings): k-means-cluster the
     corpus, find near-identical pairs *within* clusters only, keep one
     representative per duplicate component.
 
     Composition of the existing scale primitives: the IVF coarse
-    quantizer (similarity.ivf_centroids — codegen'd literal assignment,
-    no shuffle) provides the blocking, embedding_near_dup does the
-    within-cluster pair scan (all-pairs only inside a cluster, never
-    across the corpus), and dup_clusters collapses pairs to components.
+    quantizer (similarity.ivf_centroids) provides the blocking,
+    embedding_near_dup_gemm does the within-cluster pair scan (one BLAS
+    M·Mᵀ per cluster — all-pairs only inside a cluster, never across the
+    corpus), and dup_clusters collapses pairs to components. Cluster
+    assignment runs BLAS-side too (similarity.assign_pandas): with
+    constant cluster size nlist grows with n, and an expression-tree
+    assignment would be O(n·nlist·dim) interpreted terms.
     Pass ``centroids`` (e.g. from a persisted IVF index) to skip
     training — the build-once/probe-many pattern.
 
@@ -668,46 +670,22 @@ def semdedup_keep(corpus: DataFrame, id_col: str, vec_col: str,
     nlist makes the scan O(n²/nlist): measured 193 s at a 10x scale
     step (20k vectors, nlist=8) vs ~4 s with scaled blocking — at
     100 TB a fixed cluster count is the difference between a dedup
-    pass and an all-pairs job.
-
-    ``impl`` picks the within-cluster pair-scan strategy: ``"expr"``
-    (default, Catalyst expression dot products — no Python workers)
-    or ``"gemm"`` (``embedding_near_dup_gemm`` — one BLAS multiply
-    per cluster via applyInPandas; same pair contract, much faster
-    per pair; constant-size clusters from ``nlist=None`` are exactly
-    the block shape it wants).
+    pass and an all-pairs job — and constant-size clusters are exactly
+    the block shape the GEMM pair scan wants.
 
     Returns (id, cluster_id, keep): every corpus row appears; rows with
     no near-duplicate keep cluster_id = own id and keep = true.
     """
     from corkscrew_spark.operators import similarity
 
-    if impl not in ("expr", "gemm"):
-        raise ValueError(f"impl must be 'expr' or 'gemm', got {impl!r}")
-
     if nlist is None:
         # footer-count only (aggregate pushdown); one tiny job
         nlist = max(8, corpus.count() // rows_per_cluster)
     cents = centroids if centroids is not None else similarity.ivf_centroids(
         corpus, id_col, vec_col, nlist=nlist, iters=train_iters)
-    if impl == "gemm":
-        # constant cluster size means nlist ∝ n: the expression-tree
-        # assignment would be O(n·nlist·dim) interpreted terms — the
-        # Arrow GEMM assignment keeps the whole pass BLAS-side
-        # (assignment parity is exact up to float-reorder ties at
-        # cluster boundaries — blocking-only effect, same class as
-        # k-means seeding)
-        assigned = similarity.assign_pandas(corpus, vec_col, cents,
-                                            "_semcid")
-    else:
-        assigned = corpus.withColumn(
-            "_semcid", similarity.assign_expr(
-                f"transform(`{vec_col}`, x -> cast(x as double))",
-                cents))
-    scan = (embedding_near_dup_gemm if impl == "gemm"
-            else embedding_near_dup)
-    pairs = scan(assigned, id_col, vec_col, "_semcid",
-                 threshold=threshold)
+    assigned = similarity.assign_pandas(corpus, vec_col, cents, "_semcid")
+    pairs = embedding_near_dup_gemm(assigned, id_col, vec_col, "_semcid",
+                                    threshold=threshold)
     comps = dup_clusters(pairs, "id_a", "id_b")
     return (
         corpus.select(F.col(id_col).alias("id"))
@@ -725,9 +703,7 @@ def semdedup_keep(corpus: DataFrame, id_col: str, vec_col: str,
 # ---------------------------------------------------------------------------
 
 def dup_clusters(pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b",
-                 max_iter: int = 20, star_after: int = 4,
-                 hops_per_round: int = 2,
-                 ckpt_inner_hop: bool = False) -> DataFrame:
+                 max_iter: int = 20, star_after: int = 4) -> DataFrame:
     """Connected components over near-dup pairs: the step that turns pair
     lists (from any of the strategies above) into the actual dedup
     decision. Returns (doc_id, cluster_id, keep) where cluster_id is the
@@ -735,23 +711,20 @@ def dup_clusters(pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b",
     representative per cluster.
 
     Two-phase algorithm. Phase 1: iterative min-label propagation
-    (label(x) ← min(label(x), min label of neighbors)) —
-    ``hops_per_round`` propagation hops per convergence round, fused
-    into ONE checkpointed job (a hop's output feeds the next hop's
-    neighbor-min join AND merge join; exchange reuse dedupes the double
-    read — measured faster than materializing the inner hop at both 32
-    and 8 cores, see the in-loop comment). The round's convergence flag
-    count rides the checkpoint job as an observed aggregate — one
-    action per round, zero probe actions. The fixpoint check on the
-    round's last hop is sound
-    because it certifies the operator applied to the previous hop's
-    output changed nothing. Hops needed = graph diameter; near-dup
-    clusters are normally shallow (dup sets, not social graphs), so
-    this converges in a handful of rounds. Phase 2: if the graph hasn't
-    converged after ``star_after`` rounds
-    (``hops_per_round``·``star_after`` hops), the diameter is
-    adversarially large (templated-spam chains —
-    exactly when dedup matters most), so the remaining work routes to
+    (label(x) ← min(label(x), min label of neighbors)) — two propagation
+    hops per convergence round, fused into ONE checkpointed job (the
+    first hop's output feeds the second hop's neighbor-min join AND
+    merge join; exchange reuse dedupes the double read — see the in-loop
+    comment). The round's convergence flag count rides the checkpoint
+    job as an observed aggregate — one action per round, zero probe
+    actions. The fixpoint check on the round's last hop is sound because
+    it certifies the operator applied to the previous hop's output
+    changed nothing. Hops needed = graph diameter; near-dup clusters are
+    normally shallow (dup sets, not social graphs), so this converges in
+    a handful of rounds. Phase 2: if the graph hasn't converged after
+    ``star_after`` rounds (2·``star_after`` hops), the diameter is
+    adversarially large (templated-spam chains — exactly when dedup
+    matters most), so the remaining work routes to
     graph.connected_components_star, whose large-star/small-star
     contraction finishes in O(log n) rounds instead of O(diameter).
     ``max_iter`` caps phase 1 (jointly with ``star_after``) and RAISES
@@ -773,7 +746,7 @@ def dup_clusters(pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b",
     # labels₀ stays LAZY (one distinct over the checkpointed edge scan):
     # it is only read inside round 1's plan — twice, like any inner-hop
     # frame, and exchange reuse dedupes that read exactly as it does for
-    # the fused hops (same A/B family as ckpt_inner_hop above). The old
+    # the fused hops (same A/B family as the inner hop below). The old
     # eager checkpoint was one more job + barrier per call.
     labels = (
         edges.select(F.col("src").alias("node"))
@@ -783,7 +756,7 @@ def dup_clusters(pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b",
     converged = False
     for _ in range(min(max_iter, star_after)):
         updated = None
-        for _hop in range(hops_per_round):
+        for _hop in range(2):
             neighbor_min = (
                 edges.join(labels, edges["dst"] == labels["node"])
                 .groupBy("src")
@@ -799,18 +772,14 @@ def dup_clusters(pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b",
                     (F.col("nbr_label") < F.col("label")).alias("changed"),
                 )
             )
-            labels = updated.drop("changed")
-            # ckpt_inner_hop materializes between fused hops (hop h's
-            # output feeds hop h+1 twice — the neighbor-min join and the
-            # merge join). Default OFF: a 3-way interleaved A/B at 32
-            # AND 8 cores (r13) measured exchange reuse catching the
-            # double reference — lazy two-hop won at both core counts
-            # (32c: 3.93 s vs 4.14 s ckpt'd vs 4.44 s one-hop on
+            # The inner hop stays lazy although its output is read
+            # twice (neighbor-min join and merge join): exchange reuse
+            # catches the double reference. A 3-way interleaved A/B at
+            # 32 AND 8 cores measured lazy two-hop fastest (32c: 3.93 s
+            # vs 4.14 s checkpointing the inner hop vs 4.44 s one-hop on
             # dedup_clusters; 8c: 4.06/4.33/4.45) with 3 fewer jobs per
-            # query; the r12 driver flag on this shape was host burst
-            # (the untouched control queries swung identically).
-            if ckpt_inner_hop and _hop < hops_per_round - 1:
-                labels = labels.localCheckpoint(eager=True)
+            # query than the checkpointed variant.
+            labels = updated.drop("changed")
         # `changed` reflects the round's FINAL hop only — zero changes
         # mean the propagation operator is at its fixpoint (labels
         # constant per component = the component minimum), regardless of

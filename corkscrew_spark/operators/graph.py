@@ -425,8 +425,7 @@ def weighted_shortest_paths(edges: DataFrame, source: str,
                             src_col: str = "src", dst_col: str = "dst",
                             weight_col: str = "weight",
                             max_rounds: int = 30,
-                            directed: bool = True,
-                            hops_per_round: int = 2) -> DataFrame:
+                            directed: bool = True) -> DataFrame:
     """Single-source shortest path distances under non-negative edge
     weights — Bellman-Ford by synchronous rounds as DataFrame joins
     (the SSSP every Pregel-style system ships; Dijkstra's priority queue
@@ -434,16 +433,16 @@ def weighted_shortest_paths(edges: DataFrame, source: str,
 
     Per round: tentative distances join out-edges (one shuffle on the
     edge key), candidate = dist + weight, new dist = min(old, best
-    candidate). ``hops_per_round`` chains that relaxation h times INSIDE
-    one round (each step min-merged per node before the next expansion,
-    so candidate volume stays <= |V| between steps): the iteration count
-    — and with it the number of synchronization barriers and driver
-    round-trips, the real cost of Pregel loops on a cluster — drops to
-    ceil(diameter / h) for the same total edge-join work. Rounds stop
-    early at fixpoint; localCheckpoint after every round keeps the plan
-    O(1). Negative weights raise (Bellman-Ford would need |V|-1 forced
-    rounds and a negative-cycle check — out of scope for path costs,
-    which are non-negative).
+    candidate). Each round chains that relaxation twice (the first step
+    min-merged per node before the second expansion, so candidate volume
+    stays <= |V| between steps): the iteration count — and with it the
+    number of synchronization barriers and driver round-trips, the real
+    cost of Pregel loops on a cluster — drops to ceil(diameter / 2) for
+    the same total edge-join work. Rounds stop early at fixpoint;
+    localCheckpoint after every round keeps the plan O(1). Negative
+    weights raise (Bellman-Ford would need |V|-1 forced rounds and a
+    negative-cycle check — out of scope for path costs, which are
+    non-negative).
 
     Returns (node, dist DOUBLE, hops BIGINT) for every reachable node;
     ``hops`` is the hop count of the minimal-cost path (min-dist ties
@@ -476,8 +475,6 @@ def weighted_shortest_paths(edges: DataFrame, source: str,
     dists = spark.createDataFrame(
         [(source, 0.0, 0)], "node string, dist double, hops long"
     ).localCheckpoint(eager=True)
-    if hops_per_round < 1:
-        raise ValueError("hops_per_round must be >= 1")
 
     def _min_merge(df: DataFrame) -> DataFrame:
         return (
@@ -489,7 +486,7 @@ def weighted_shortest_paths(edges: DataFrame, source: str,
 
     for _ in range(max_rounds):
         acc = dists
-        for _h in range(hops_per_round):
+        for _h in range(2):
             cand = (
                 acc.join(e, acc["node"] == e["src"])
                 .select(
@@ -622,10 +619,9 @@ class Graph:
     """Unified graph facade bundling an edge DataFrame with the iterative
     operators — the ergonomic surface the reference exposes through its
     graph loader (pkg/graph/graph_loader.go builds one graph object and
-    hangs path/neighborhood queries off it; SURVEY §4 suggested the same
-    API could front multiple backends). Methods delegate to the
-    module-level operators, so plans and guarantees are identical; the
-    class only fixes the column-name contract once.
+    hangs path/neighborhood queries off it). Each method delegates to
+    exactly one module-level operator, so plans and guarantees are
+    identical; the class only fixes the column-name contract once.
 
     >>> g = Graph(edges)                  # (src, dst[, weight]) columns
     >>> g.k_hop(["C1"], 3)
@@ -666,38 +662,11 @@ class Graph:
             F.count("*").alias("degree"))
 
     def k_hop(self, sources: list[str], max_depth: int,
-              directed: bool = False, backend: str = "iterative") -> DataFrame:
-        """``backend="iterative"`` (default) runs the frontier-BFS in
-        this module; ``"cte"`` runs Spark 4's WITH RECURSIVE — one
-        Catalyst plan, the literal rendering of the reference's
-        recursive SQL (graph_cte.py). Identical schema and values."""
-        if backend == "cte":
-            from corkscrew_spark.operators.graph_cte import k_hop_cte
-
-            return k_hop_cte(self._e(), sources, max_depth=max_depth,
-                             directed=directed)
-        if backend != "iterative":
-            raise ValueError(f"unknown backend {backend!r}")
+              directed: bool = False) -> DataFrame:
         return k_hop(self._e(), sources, max_depth=max_depth, directed=directed)
 
     def shortest_path(self, src: str, dst: str, max_depth: int = 10,
-                      directed: bool = False,
-                      method: str = "bfs") -> DataFrame:
-        """``method="bfs"`` expands one frontier from src;
-        ``"bidirectional"`` meets in the middle — same result, O(b^(d/2))
-        instead of O(b^d) frontier volume for long-distance queries;
-        ``"cte"`` runs the whole search as ONE Spark 4 recursive CTE
-        (array path accumulation + cycle guard, graph_cte.py)."""
-        if method == "bidirectional":
-            return shortest_path_bidirectional(
-                self._e(), src, dst, max_depth=max_depth, directed=directed)
-        if method == "cte":
-            from corkscrew_spark.operators.graph_cte import shortest_path_cte
-
-            return shortest_path_cte(self._e(), src, dst,
-                                     max_depth=max_depth, directed=directed)
-        if method != "bfs":
-            raise ValueError(f"unknown method {method!r}")
+                      directed: bool = False) -> DataFrame:
         return shortest_path(self._e(), src, dst, max_depth=max_depth,
                              directed=directed)
 
@@ -744,20 +713,11 @@ class Graph:
         view)."""
         return label_propagation(self._e(), iters=iters)
 
-    def connected_components(self, method: str = "label") -> DataFrame:
-        """(node, component) under min-reachable-id labels.
-
-        ``method="label"``: per-round min-label propagation — O(diameter)
-        rounds, right for shallow clusters (near-dup components).
-        ``method="star"``: large-star/small-star contraction — O(log n)
-        rounds, the scale path for deep/chain-shaped graphs.
-        Both return identical labels (asserted in tests/test_graph.py).
-        """
-        if method == "star":
-            return connected_components_star(
-                self.edges, self.src_col, self.dst_col)
-        if method != "label":
-            raise ValueError(f"unknown method {method!r}")
+    def connected_components(self) -> DataFrame:
+        """(node, component) under min-reachable-id labels, via
+        ``dedup.dup_clusters``: min-label propagation for shallow
+        components, switching to star contraction by itself when its
+        rounds run out on deep ones."""
         from corkscrew_spark.operators.dedup import dup_clusters
 
         labels = dup_clusters(
@@ -917,104 +877,6 @@ def label_propagation(edges: DataFrame, src_col: str = "src",
         if it % 2 == 1 and it != iters - 1:
             labels = labels.localCheckpoint(eager=True)
     return labels
-
-
-def shortest_path_bidirectional(edges: DataFrame, src: str, dst: str,
-                                max_depth: int = 10,
-                                directed: bool = False) -> DataFrame:
-    """``shortest_path`` by meet-in-the-middle BFS — identical result
-    contract (min depth, lexicographically-smallest path tie-break, same
-    (depth, path) schema), different scale envelope: two frontiers of
-    radius d/2 instead of one of radius d, so the expanded volume is
-    O(2·b^(d/2)) instead of O(b^d) on branching factor b — the
-    difference between feasible and not for long-distance queries on
-    100 TB-scale graphs.
-
-    Each round expands the SMALLER frontier (cheapest next layer) and
-    intersects the frontiers; the first non-empty intersection is at
-    minimum total depth because the explored depth sum grows by exactly
-    1 per round. Every min-depth path has a vertex whose exact forward/
-    backward distances equal the current split, so the intersection
-    can't miss it; per-side lex-min paths + a final min over meeting
-    nodes reproduce the unidirectional tie-break (equality asserted in
-    tests/test_graph.py).
-    """
-    spark = edges.sparkSession
-    if src == dst:
-        return spark.createDataFrame([(0, [src])],
-                                     "depth int, path array<string>")
-    ef = _prep(edges, directed).localCheckpoint(eager=True)
-    # backward expansion walks edges dst→src
-    eb = ef.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-
-    f_frontier = spark.createDataFrame([(src, [src])],
-                                       "node string, path array<string>")
-    b_frontier = spark.createDataFrame([(dst, [dst])],
-                                       "node string, path array<string>")
-    f_visited = f_frontier.select("node").localCheckpoint(eager=True)
-    b_visited = b_frontier.select("node").localCheckpoint(eager=True)
-    f_size, b_size = 1, 1
-
-    def _meet(total_depth: int) -> DataFrame:
-        met = (
-            f_frontier.join(
-                b_frontier.select(F.col("node"),
-                                  F.col("path").alias("bpath")),
-                "node")
-            .select(F.concat(
-                F.col("path"),
-                F.slice(F.col("bpath"), 2, F.greatest(
-                    F.size("bpath") - 1, F.lit(0)))).alias("full"))
-        )
-        return met.agg(F.min("full").alias("path")).filter(
-            F.col("path").isNotNull()
-        ).select(F.lit(total_depth).alias("depth"), "path")
-
-    for total in range(1, max_depth + 1):
-        # One action per round: the expanded side's checkpoint job also
-        # reports its size and whether it touches the OTHER side's
-        # frontier (a left-join marker — the same node intersection the
-        # _meet probe tested as a separate action). The full meet (path
-        # assembly + lex-min) only runs once, on the meeting round.
-        if f_size <= b_size:
-            f_frontier, m = ckpt_observe(
-                f_frontier.join(ef, f_frontier["node"] == ef["src"])
-                .select(ef["dst"].alias("node"),
-                        F.concat(F.col("path"), F.array(ef["dst"]))
-                        .alias("path"))
-                .join(f_visited, "node", "left_anti")
-                .groupBy("node").agg(F.min("path").alias("path"))
-                .join(b_frontier.select("node").withColumn(
-                    "__m", F.lit(1)), "node", "left"),
-                F.count(F.lit(1)).alias("n"),
-                F.count(F.col("__m")).alias("met"),
-            )
-            f_frontier = f_frontier.drop("__m")
-            f_size = m["n"]
-            if f_size == 0:
-                break
-            f_visited = f_visited.unionByName(f_frontier.select("node"))
-        else:
-            b_frontier, m = ckpt_observe(
-                b_frontier.join(eb, b_frontier["node"] == eb["src"])
-                .select(eb["dst"].alias("node"),
-                        F.concat(F.array(eb["dst"]), F.col("path"))
-                        .alias("path"))
-                .join(b_visited, "node", "left_anti")
-                .groupBy("node").agg(F.min("path").alias("path"))
-                .join(f_frontier.select("node").withColumn(
-                    "__m", F.lit(1)), "node", "left"),
-                F.count(F.lit(1)).alias("n"),
-                F.count(F.col("__m")).alias("met"),
-            )
-            b_frontier = b_frontier.drop("__m")
-            b_size = m["n"]
-            if b_size == 0:
-                break
-            b_visited = b_visited.unionByName(b_frontier.select("node"))
-        if m["met"]:
-            return _meet(total)
-    return spark.createDataFrame([], "depth int, path array<string>")
 
 
 def k_core(edges: DataFrame, k: int, src_col: str = "src",

@@ -1,27 +1,21 @@
-"""Recursive-CTE graph backend (Spark 4 ``WITH RECURSIVE``).
+"""Recursive-CTE k-hop (Spark 4 ``WITH RECURSIVE``).
 
-The reference's R1/R2 graph queries are literally recursive SQL CTEs over
-the edge table — k-hop neighborhood expansion with DISTINCT
-(/root/reference/internal/db/graph_loader.go:435-464) and a recursive
-path CTE with array accumulation + cycle guard + ``ORDER BY depth LIMIT
-1`` (graph_loader.go:402-433). Spark 4.0 added ``WITH RECURSIVE``, so the
-same declarative formulation now runs on Catalyst directly — this module
-is that backend, exposed through ``Graph(...).k_hop(..., backend="cte")``
-alongside the default iterative-join backend in ``operators/graph.py``
-(SURVEY §4 item 1: same API, two interchangeable backends).
+The reference's k-hop neighborhood query is literally a recursive SQL
+CTE over the edge table with DISTINCT
+(internal/db/graph_loader.go:435-464). Spark 4.0 added ``WITH
+RECURSIVE``, so the same declarative formulation runs on Catalyst
+directly: ``k_hop_cte`` hands the whole recursion to the engine in ONE
+plan, with no driver-side loop. It backs the registered
+``graph_khop_cte`` query; every other caller, including the ``Graph``
+facade, uses the frontier BFS in ``operators/graph.py``.
 
-When to pick which: the iterative backend materializes one frontier per
-hop (per-hop dedup, O(depth) barriers — robust on dense/cyclic graphs at
-any scale); the CTE backend hands the whole recursion to Catalyst in ONE
-plan (no driver-side loop, engine-managed repetition) but enumerates
-(node, distance) / path rows per recursion level, so it fits the
-reference's use case — bounded-depth neighborhood/path queries — rather
-than unbounded traversals. Recursion is capped by the engine's
-``spark.sql.cteRecursionLevelLimit`` (default 100) plus our explicit
-depth predicate, so cyclic inputs terminate by construction.
-
-Both backends return identical schemas and values; parity is pinned by
-tests/test_graph.py::TestCteBackend against the iterative oracles.
+The CTE enumerates (node, distance) rows per recursion level, so it
+fits the reference's bounded-depth neighborhood queries rather than
+unbounded traversals. Recursion is capped by the engine's
+``spark.sql.cteRecursionLevelLimit`` (default 100) plus an explicit
+depth predicate, so cyclic inputs terminate by construction. Schema and
+values match ``graph.k_hop``; parity is pinned by
+tests/test_graph.py::TestCteBackend.
 """
 
 from __future__ import annotations
@@ -29,20 +23,8 @@ from __future__ import annotations
 import uuid
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-
-def _edge_view(edges: DataFrame, directed: bool) -> str:
-    """Register the (src, dst) edge relation as a uniquely-named temp
-    view (symmetrized when undirected); returns the view name."""
-    e = edges.select(F.col("src").cast("string").alias("src"),
-                     F.col("dst").cast("string").alias("dst"))
-    if not directed:
-        e = e.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    name = f"__graph_cte_edges_{uuid.uuid4().hex}"
-    e.createOrReplaceTempView(name)
-    return name
+from corkscrew_spark.operators.graph import _prep
 
 
 def k_hop_cte(edges: DataFrame, seeds: list[str], max_depth: int = 3,
@@ -58,8 +40,9 @@ def k_hop_cte(edges: DataFrame, seeds: list[str], max_depth: int = 3,
     its first (= minimum) distance. Same schema/values as graph.k_hop.
     """
     spark = edges.sparkSession
-    view = _edge_view(edges, directed)
-    seeds_name = f"__graph_cte_seeds_{uuid.uuid4().hex}"
+    tag = uuid.uuid4().hex
+    view, seeds_name = f"__graph_cte_edges_{tag}", f"__graph_cte_seeds_{tag}"
+    _prep(edges, directed).createOrReplaceTempView(view)
     spark.createDataFrame([(s,) for s in seeds], "node string") \
         .createOrReplaceTempView(seeds_name)
     try:
@@ -78,32 +61,3 @@ def k_hop_cte(edges: DataFrame, seeds: list[str], max_depth: int = 3,
         spark.catalog.dropTempView(view)
         spark.catalog.dropTempView(seeds_name)
 
-
-def shortest_path_cte(edges: DataFrame, src: str, dst: str,
-                      max_depth: int = 10,
-                      directed: bool = False) -> DataFrame:
-    """Single shortest path src→dst as ONE recursive CTE — the literal
-    Spark rendering of graph_loader.go:402-433: array-accumulated path,
-    ``NOT array_contains`` cycle guard, ``ORDER BY depth, path LIMIT 1``
-    for the deterministic (min-depth, lexicographically smallest)
-    winner. Returns the same 1-row (depth INT, path ARRAY<STRING>) /
-    empty-when-unreachable contract as graph.shortest_path.
-    """
-    spark = edges.sparkSession
-    view = _edge_view(edges, directed)
-    try:
-        return spark.sql(f"""
-            WITH RECURSIVE paths(node, path, depth) AS (
-                SELECT :src, array(:src), 0
-                UNION ALL
-                SELECT e.dst, concat(p.path, array(e.dst)), p.depth + 1
-                FROM paths p JOIN {view} e ON e.src = p.node
-                WHERE p.depth < {int(max_depth)}
-                  AND NOT array_contains(p.path, e.dst)
-            )
-            SELECT CAST(depth AS INT) AS depth, path
-            FROM paths WHERE node = :dst
-            ORDER BY depth ASC, path ASC LIMIT 1
-        """, args={"src": src, "dst": dst})
-    finally:
-        spark.catalog.dropTempView(view)

@@ -857,17 +857,9 @@ def semdedup_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
             e, "vec_id", "embedding", nlist=nlist, iters=1,
             max_train=max(4096, nlist * 32)
         )
-    # strategy pick: BLAS-side ('gemm') at every corpus size. The old
-    # n >= 10k threshold guarded Python-worker spin-up, but the pool is
-    # warm in any long-lived session (and bench.py warms it explicitly
-    # since r12); re-measured r13 with interleaved A/Bs: gemm 0.77× at
-    # n=2000 (3.72 vs 4.86 s) and 0.61× at n=500 (5.51 vs 8.99 s),
-    # exact-equal outputs at sf0.1/sf0.01/sf0.001 — the expression
-    # path's O(n·nlist·dim) interpreted assignment loses at every
-    # measurable size, and at scale gemm was already mandatory
-    # (measured 4.8× at a 2× scale step in r12)
+    # GEMM only: it beat the expression pair scan at every measured size
     res = dedup.semdedup_keep(e, "vec_id", "embedding", threshold=0.4,
-                              centroids=cents, impl="gemm")
+                              centroids=cents)
     return (
         res.filter(~F.col("keep"))
         .select(F.col("id").alias("vec_id"), F.col("cluster_id").alias("kept_id"))

@@ -481,12 +481,13 @@ def resolve_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-forces the cross join and recomputes components with a
     recursive CTE — the Spark side must reach the identical entity
     assignment from blocked candidates only. Per-entity counts come
-    from an aggregate over the (tiny) matched-label frame broadcast
-    back onto the records — every component member is by construction
-    a record, so count-per-cluster on labels equals the per-entity
-    window count without shuffling the full record set (guide §2.3:
-    aggregate the proxy, not the payload; unmatched records are
-    singleton entities, count 1)."""
+    from an aggregate over the matched-label frame joined back onto the
+    records — every component member is by construction a record, so
+    count-per-cluster on labels equals the per-entity window count
+    without a window over the full record set (guide §2.3: aggregate
+    the proxy, not the payload; unmatched records are singleton
+    entities, count 1). The size frame has one row per cluster, so it
+    grows with the data: AQE picks the join strategy, not a hint."""
     from corkscrew_spark.operators.dedup import dup_clusters
     from corkscrew_spark.operators.fuzzy import fuzzy_self_join
 
@@ -524,7 +525,7 @@ def resolve_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
         records.join(ent, "rec_id", "left")
         .select("rec_id",
                 F.coalesce("entity_id", F.col("rec_id")).alias("entity_id"))
-        .join(F.broadcast(sizes), "entity_id", "left")
+        .join(sizes, "entity_id", "left")
         .select(
             "rec_id", "entity_id",
             (F.col("rec_id") == F.col("entity_id")).alias("is_canonical"),

@@ -69,7 +69,7 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def ckpt_observe(df, *metrics, timeout: float = 120.0):
+def ckpt_observe(df, *metrics):
     """Eager ``localCheckpoint`` that also returns observed aggregates
     computed by the SAME materialization job.
 
@@ -85,26 +85,12 @@ def ckpt_observe(df, *metrics, timeout: float = 120.0):
 
     Returns ``(checkpointed_df, metrics_dict)``. The observe node does
     not survive into the checkpointed plan (it scans as ExistingRDD).
-    Robustness: if the metric event is ever lost under listener
-    pressure, the aggregates are re-derived with one cheap job over the
-    already-materialized RDD — convergence never depends on event
-    delivery.
     """
-    import time
-
     from pyspark.sql import Observation
 
     obs = Observation()
     out = df.observe(obs, *metrics).localCheckpoint(eager=True)
-    deadline = time.monotonic() + timeout
-    jo = obs._jo
-    while time.monotonic() < deadline:
-        if jo.getRowOrEmpty().isDefined():
-            return out, obs.get
-        time.sleep(0.002)
-    # Fallback (never observed in practice): recompute over the
-    # materialized scan — same values, one extra small job.
-    return out, out.agg(*metrics).first().asDict()
+    return out, obs.get
 
 
 def spread(df, key):

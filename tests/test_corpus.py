@@ -108,30 +108,6 @@ def test_semdedup_planted_duplicates(spark):
         assert by_id[i].keep and by_id[i].cluster_id == i
 
 
-def test_semdedup_gemm_impl_matches_expr(spark):
-    """impl='gemm' routes the within-cluster scan through the BLAS
-    pair scan — keep-list identical to the expression strategy."""
-    import math
-
-    import pytest
-
-    rows = []
-    for i in range(60):
-        base = [math.cos(0.2 * i + j) for j in range(6)]
-        rows.append((i, base))
-        if i % 7 == 0:
-            rows.append((100 + i, [x * 1.0005 for x in base]))
-    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    kw = dict(nlist=4, threshold=0.999)
-    expr = {(r.id, r.cluster_id, r.keep) for r in dedup.semdedup_keep(
-        vecs, "vec_id", "embedding", impl="expr", **kw).collect()}
-    gemm = {(r.id, r.cluster_id, r.keep) for r in dedup.semdedup_keep(
-        vecs, "vec_id", "embedding", impl="gemm", **kw).collect()}
-    assert expr == gemm and any(not k for _i, _c, k in expr)
-    with pytest.raises(ValueError, match="impl"):
-        dedup.semdedup_keep(vecs, "vec_id", "embedding", impl="blas")
-
-
 def test_semdedup_accepts_precomputed_centroids(spark):
     rows = [(i, [float(i == j) for j in range(4)]) for i in range(4)]
     vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")

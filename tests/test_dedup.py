@@ -177,7 +177,7 @@ def test_embedding_near_dup_gemm_string_ids(spark):
     """The GEMM variant carries the INPUT id type through to the pair
     columns — string doc keys must work identically to long ids, not
     fail at Arrow conversion mid-job (r8 advisor finding), and
-    semdedup_keep(impl='gemm') inherits the fix."""
+    semdedup_keep inherits the fix."""
     rows = [("doc-b", [1.0, 2.0, 3.0], "x"),
             ("doc-a", [1.0, 2.0, 3.001], "x"),
             ("doc-c", [9.0, -1.0, 0.5], "x"),

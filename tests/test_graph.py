@@ -56,9 +56,8 @@ def test_shortest_path_src_equals_dst_is_zero_hops(spark):
 
 
 class TestCteBackend:
-    """Spark 4 WITH RECURSIVE backend (operators/graph_cte.py) must pass
-    the exact scenarios the iterative backend does — the two are
-    interchangeable behind the Graph facade (SURVEY §4 item 1)."""
+    """The Spark 4 WITH RECURSIVE k-hop (operators/graph_cte.py) must pass
+    the exact scenarios the frontier BFS does."""
 
     def test_khop_matches_iterative_scenarios(self, spark):
         from corkscrew_spark.operators.graph_cte import k_hop_cte
@@ -77,23 +76,6 @@ class TestCteBackend:
                 k_hop_cte(e3, ["a"], 10, directed=True).collect()} \
             == {"a": 0, "b": 1, "c": 2}
 
-    def test_shortest_path_matches_iterative_scenarios(self, spark):
-        from corkscrew_spark.operators.graph_cte import shortest_path_cte
-        e = _edges(spark, [("a", "b"), ("a", "c"), ("b", "z"), ("c", "z"),
-                           ("a", "x")])
-        row = shortest_path_cte(e, "a", "z", directed=True).collect()[0]
-        assert row["depth"] == 2 and row["path"] == ["a", "b", "z"]
-        # cycle guard
-        e2 = _edges(spark, [("a", "b"), ("b", "a"), ("b", "c")])
-        row = shortest_path_cte(e2, "a", "c", directed=True).collect()[0]
-        assert row["depth"] == 2 and row["path"] == ["a", "b", "c"]
-        # unreachable -> empty; src == dst -> zero hops
-        e3 = _edges(spark, [("a", "b"), ("c", "d")])
-        assert shortest_path_cte(e3, "a", "d", max_depth=5,
-                                 directed=True).count() == 0
-        row = shortest_path_cte(e3, "a", "a", directed=True).collect()[0]
-        assert row["depth"] == 0 and row["path"] == ["a"]
-
     def test_backends_agree_on_grid(self, spark):
         """Full-result parity on a 4x4 undirected grid from a corner."""
         from corkscrew_spark.operators.graph_cte import k_hop_cte
@@ -110,19 +92,6 @@ class TestCteBackend:
         ct = {(r["node"], r["distance"])
               for r in k_hop_cte(e, ["n00"], 6, directed=False).collect()}
         assert it == ct and len(it) == 16
-
-    def test_facade_backend_selection(self, spark):
-        e = _edges(spark, [("a", "b"), ("b", "c")])
-        g = graph.Graph(e)
-        assert {r["node"]: r["distance"]
-                for r in g.k_hop(["a"], 2, directed=True,
-                                 backend="cte").collect()} \
-            == {"a": 0, "b": 1, "c": 2}
-        row = g.shortest_path("a", "c", directed=True,
-                              method="cte").collect()[0]
-        assert row["depth"] == 2 and row["path"] == ["a", "b", "c"]
-        with pytest.raises(ValueError):
-            g.k_hop(["a"], 2, backend="nope")
 
 
 def test_topo_levels_longest_path(spark):
@@ -264,7 +233,7 @@ class TestStarComponents:
         from corkscrew_spark.operators.graph import Graph
         df = spark.createDataFrame(edges, ["src", "dst"])
         return {r.node: r.component
-                for r in Graph(df).connected_components("label").collect()}
+                for r in Graph(df).connected_components().collect()}
 
     def test_deep_path_graph(self, spark):
         """A 40-hop chain: label propagation's worst case, star's best."""
@@ -290,15 +259,6 @@ class TestStarComponents:
         got = self._star(spark, edges)
         assert got == {"x1": "x1", "x2": "x1", "x3": "x1",
                        "y8": "y8", "y9": "y8"}
-
-    def test_graph_facade_method(self, spark):
-        from corkscrew_spark.operators.graph import Graph
-        df = spark.createDataFrame([("a", "b")], ["src", "dst"])
-        rows = Graph(df).connected_components("star").collect()
-        assert {(r.node, r.component) for r in rows} == {("a", "a"), ("b", "a")}
-        import pytest as _p
-        with _p.raises(ValueError):
-            Graph(df).connected_components("nope")
 
 
 class TestHits:
@@ -392,51 +352,6 @@ class TestLabelPropagation:
         r2 = sorted(map(tuple, g.communities(iters=3).collect()))
         assert r1 == r2
         assert {c for _, c in r1} == {"x"}  # tiny path collapses to min label
-
-
-class TestBidirectionalShortestPath:
-    def _e(self, spark, pairs):
-        return spark.createDataFrame(pairs, "src string, dst string")
-
-    def test_matches_unidirectional_on_grid(self, spark):
-        from corkscrew_spark.operators.graph import (shortest_path,
-                                                     shortest_path_bidirectional)
-        # 4x4 grid: many equal-length paths -> exercises the tie-break
-        pairs = []
-        for r in range(4):
-            for c in range(4):
-                if c < 3:
-                    pairs.append((f"n{r}{c}", f"n{r}{c+1}"))
-                if r < 3:
-                    pairs.append((f"n{r}{c}", f"n{r+1}{c}"))
-        e = self._e(spark, pairs)
-        for a, b in [("n00", "n33"), ("n03", "n30"), ("n11", "n22")]:
-            uni = shortest_path(e, a, b).collect()
-            bi = shortest_path_bidirectional(e, a, b).collect()
-            assert [tuple(r) for r in uni] == [tuple(r) for r in bi]
-
-    def test_directed_odd_length(self, spark):
-        from corkscrew_spark.operators.graph import (shortest_path,
-                                                     shortest_path_bidirectional)
-        e = self._e(spark, [("a", "b"), ("b", "c"), ("c", "d"),
-                            ("a", "x"), ("x", "d"), ("d", "a")])
-        uni = shortest_path(e, "a", "d", directed=True).collect()
-        bi = shortest_path_bidirectional(e, "a", "d", directed=True).collect()
-        assert [tuple(r) for r in uni] == [tuple(r) for r in bi]
-        assert bi[0].depth == 2 and bi[0].path == ["a", "x", "d"]
-
-    def test_unreachable_and_trivial(self, spark):
-        from corkscrew_spark.operators.graph import shortest_path_bidirectional
-        e = self._e(spark, [("a", "b"), ("c", "d")])
-        assert shortest_path_bidirectional(e, "a", "d", max_depth=5).count() == 0
-        triv = shortest_path_bidirectional(e, "a", "a").collect()
-        assert triv[0].depth == 0 and triv[0].path == ["a"]
-
-    def test_direct_edge(self, spark):
-        from corkscrew_spark.operators.graph import shortest_path_bidirectional
-        e = self._e(spark, [("s", "t"), ("s", "m"), ("m", "t")])
-        row = shortest_path_bidirectional(e, "s", "t").collect()[0]
-        assert row.depth == 1 and row.path == ["s", "t"]
 
 
 class TestKCore:
@@ -638,3 +553,31 @@ def test_ckpt_observe_metrics_and_plan(spark):
     empty, me = ckpt_observe(spark.range(5).filter("id < 0"),
                              F.count(F.lit(1)).alias("n"))
     assert me["n"] == 0 and empty.count() == 0
+
+
+def test_triangles_job_count_tripwire(spark, sf_dir):
+    """graph_triangles leaves ``ordered`` lazy and relies on AQE runtime
+    exchange reuse to read it twice without a second build. Static plan
+    dumps cannot show that reuse, so count the jobs one materialization
+    runs: a reuse miss, or an eager checkpoint of ``ordered`` (19 jobs),
+    fails here."""
+    import os
+    import uuid
+
+    from corkscrew_spark.catalog import register_tables
+    from corkscrew_spark.plans.queries import QUERIES
+
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    if not os.path.isdir(sf):
+        pytest.skip(f"no sf0.01 test data next to {sf_dir}")
+    register_tables(spark, sf)  # table registration runs outside the count
+    sc = spark.sparkContext
+    group = f"triangles-tripwire-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "graph_triangles job count")
+    try:
+        QUERIES["graph_triangles"](spark, sf).write.format("noop") \
+            .mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 16, f"graph_triangles ran {len(jobs)} jobs"
