@@ -737,11 +737,10 @@ def dup_clusters(pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b",
     the reference has no dedup subsystem — this is part of the
     beyond-reference training-data surface (SURVEY §7 step 9).
     """
-    edges = (
+    edges, _ = _ckpt_observe(
         pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
         .unionByName(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     # labels₀ stays LAZY (one distinct over the checkpointed edge scan):
     # it is only read inside round 1's plan — twice, like any inner-hop

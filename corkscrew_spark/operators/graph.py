@@ -6,9 +6,14 @@ does topological sorting with an in-memory DFS
 (plugins/aws-provider/discovery/resource_graph.go:580-626). On Spark the
 same semantics are expressed as a bounded driver loop of DataFrame joins:
 
-* each BFS/level iteration is ONE distributed hash join frontier ⋈ edges —
-  the frontier is usually tiny relative to the edge table, so AQE picks a
-  broadcast join from the materialized frontier's runtime size;
+* each BFS/level iteration is ONE distributed hash join frontier ⋈ edges.
+  A checkpoint reports an unknown size to Catalyst, so each round state
+  comes back from ``session.ckpt_observe`` hinted for broadcast when the
+  row count its checkpoint observed fits the broadcast threshold: a small
+  frontier is the build side from the round's first plan and the edge
+  table streams unshuffled; a large one keeps the shuffle plan. Frames
+  that are only a join's probe side (an edge relation joined to the
+  frontier) keep a plain checkpoint, so the hint never picks them;
 * ``localCheckpoint`` after each iteration truncates the lineage so plans
   stay O(1) deep regardless of traversal depth (an unbounded chained plan
   would re-execute every prior hop and blow up the optimizer at depth 10+);
@@ -20,10 +25,10 @@ Extra columns are ignored.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from corkscrew_spark.session import ckpt_observe
+from corkscrew_spark.session import broadcast_if_small, ckpt_observe
 
 
 def _prep(edges: DataFrame, directed: bool) -> DataFrame:
@@ -43,16 +48,22 @@ def k_hop(edges: DataFrame, seeds: list[str], max_depth: int = 3,
     Parity: recursive CTE k-hop with DISTINCT (graph_loader.go:435-464),
     except distances are exact minima (BFS visits each node once, so no
     cycle bookkeeping is needed — a revisit is always ≥ the first visit).
+
+    One checkpointed round per hop. The frontier and the visited set are
+    sized from their observed row counts (``session.ckpt_observe``), so
+    while they fit the broadcast threshold each hop broadcasts them and
+    streams the edge table, with no shuffle of the edges at all.
     """
     spark = edges.sparkSession
     e = _prep(edges, directed)
-    seed_df = spark.createDataFrame(
-        [(s, 0) for s in seeds], "node string, distance int"
-    ).localCheckpoint(eager=True)
+    seed_df, _ = ckpt_observe(spark.createDataFrame(
+        [(s, 0) for s in seeds], "node string, distance int"))
     # visited = union of per-hop checkpointed frontiers; unioning live
     # (instead of re-checkpointing the growing set every hop) avoids
-    # re-materializing all prior hops each iteration.
-    visited = seed_df
+    # re-materializing all prior hops each iteration. The union drops
+    # its pieces' broadcast hints, so it goes back through the size
+    # guard with their summed observed counts.
+    visited, n_visited = seed_df, len(seeds)
     frontier = seed_df
     for depth in range(1, max_depth + 1):
         nxt, m = ckpt_observe(
@@ -67,7 +78,8 @@ def k_hop(edges: DataFrame, seeds: list[str], max_depth: int = 3,
         # probe action per hop (session.ckpt_observe).
         if m["n"] == 0:
             break
-        visited = visited.unionByName(nxt)
+        n_visited += m["n"]
+        visited = broadcast_if_small(visited.unionByName(nxt), n_visited)
         frontier = nxt
     return visited
 
@@ -91,8 +103,9 @@ def shortest_path(edges: DataFrame, src: str, dst: str, max_depth: int = 10,
     e = _prep(edges, directed)
     # (node, path) — one row per reached node, carrying the lexicographically
     # smallest min-depth path to it.
-    frontier = spark.createDataFrame([(src, [src])], "node string, path array<string>")
-    visited = frontier.select("node").localCheckpoint(eager=True)
+    frontier, _ = ckpt_observe(spark.createDataFrame(
+        [(src, [src])], "node string, path array<string>"))
+    visited, n_visited = frontier.select("node"), 1
     for depth in range(1, max_depth + 1):
         # One action per hop: frontier size AND target-hit flag ride the
         # checkpoint job as observed aggregates (previously 3 actions —
@@ -114,7 +127,9 @@ def shortest_path(edges: DataFrame, src: str, dst: str, max_depth: int = 10,
                 F.lit(depth).alias("depth"), "path")
         if m["n"] == 0:
             break
-        visited = visited.unionByName(expanded.select("node"))
+        n_visited += m["n"]
+        visited = broadcast_if_small(
+            visited.unionByName(expanded.select("node")), n_visited)
         frontier = expanded
     return spark.createDataFrame([], "depth int, path array<string>")
 
@@ -130,6 +145,8 @@ def topo_levels(edges: DataFrame, max_depth: int = 100) -> DataFrame:
     Raises ValueError on a cycle (some nodes never settle), matching the
     reference's temp-mark cycle detection.
     """
+    # The edge relation is the probe side of every hop: it stays
+    # unhinted, so the hinted frontier is the one Spark broadcasts.
     e = _prep(edges, directed=True).localCheckpoint(eager=True)
     # |V| observed on the node-set checkpoint's own job: the final
     # unreachable-node check below reduces to a count comparison, so no
@@ -142,7 +159,7 @@ def topo_levels(edges: DataFrame, max_depth: int = 100) -> DataFrame:
     )
     n_nodes = mn["n"]
     sources = nodes.join(e.select(F.col("dst").alias("node")).distinct(), "node", "left_anti")
-    frontier = sources.withColumn("level", F.lit(0)).localCheckpoint(eager=True)
+    frontier, _ = ckpt_observe(sources.withColumn("level", F.lit(0)))
     # Accumulate per-depth frontiers (each already checkpointed) and union
     # once at the end — re-checkpointing the growing union every iteration
     # would re-materialize all prior levels each hop (O(depth²) work).
@@ -223,14 +240,13 @@ def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
 
     Returns (node, rank) with sum(rank) == 1 up to float error.
     """
-    e = (
+    # No repartition before the checkpoint: localCheckpoint drops
+    # outputPartitioning metadata under AQE (measured this round —
+    # downstream plans are identical either way), so a pre-checkpoint
+    # hash layout is a full edge shuffle that buys nothing.
+    e, _ = ckpt_observe(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .distinct()
-        # No repartition before the checkpoint: localCheckpoint drops
-        # outputPartitioning metadata under AQE (measured this round —
-        # downstream plans are identical either way), so a pre-checkpoint
-        # hash layout is a full edge shuffle that buys nothing.
-        .localCheckpoint(eager=True)
     )
     # (node, deg, rank) in ONE aggregation: union src rows (counting 1
     # per out-edge) with dst rows (counting 0) and sum — the node set
@@ -256,11 +272,9 @@ def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
         # first in-loop checkpoint; measured slower). |V| rides the
         # checkpoint job as an observed count — the classic branch no
         # longer pays a separate count action for it.
-        ranks, _m = ckpt_observe(ranks, F.count(F.lit(1)).alias("n"))
+        ranks, mv = ckpt_observe(ranks, F.count(F.lit(1)).alias("n"))
     if reset_nodes is None and reset_df is None:
-        # |V| is only needed for the uniform reset — the personalized
-        # branches below never read it.
-        n_total = _m["n"]
+        n_total = mv["n"]
         # classic path: keep the exact original expression shape —
         # (1-d)/N precomputed, dangling/N in-engine — so the unrolled
         # DuckDB oracle stays bit-compatible (x·(1/N) ≠ x/N in IEEE)
@@ -297,7 +311,7 @@ def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
             seeds = distinct_seeds.withColumn("__is_seed", F.lit(True))
             seed_w = distinct_seeds.agg(
                 (F.lit(1.0) / F.count(F.lit(1))).alias("__seed_w"))
-            ranks = (
+            ranks, mv = ckpt_observe(
                 ranks.join(F.broadcast(seeds), "node", "left")
                 .crossJoin(F.broadcast(seed_w))
                 .withColumn(
@@ -306,8 +320,8 @@ def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
                     .otherwise(0.0),
                 )
                 .drop("__is_seed", "__seed_w")
-                .withColumn("rank", F.col("reset"))
-                .localCheckpoint(eager=True)
+                .withColumn("rank", F.col("reset")),
+                F.count(F.lit(1)).alias("n"),
             )
         else:
             if not reset_nodes:
@@ -326,6 +340,10 @@ def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
                + F.col("dangling") * F.col("reset"))
         )
         carry = ["node", "deg", "reset"]
+    # |V| bounds contrib (one row per reached dst): sized by it, contrib
+    # joins as the broadcast side from the first plan, and ranks is
+    # never shuffled for the update join.
+    n_nodes = mv["n"]
     for it in range(iters):
         # Sinks (deg null) have no out-edges, so the inner join drops them
         # from the contribution shuffle naturally.
@@ -340,7 +358,8 @@ def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
         )
         ranks = (
             ranks.drop("rank")
-            .join(contrib, ranks["node"] == contrib["dst"], "left")
+            .join(broadcast_if_small(contrib, n_nodes),
+                  ranks["node"] == contrib["dst"], "left")
             .crossJoin(F.broadcast(dangling))
             .select(*carry, new_rank.alias("rank"))
         )
@@ -350,7 +369,7 @@ def pagerank(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
         # materialization of the final frame (measured ~0.1-0.3 s/query;
         # lineage stays bounded at two iterations either way).
         if it % 2 == 1 and it != iters - 1:
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks, _ = ckpt_observe(ranks)
     return ranks.select("node", "rank")
 
 
@@ -374,14 +393,13 @@ def triangle_count(edges: DataFrame, src_col: str = "src",
     # ordered orientation, and the closing-edge probe all reuse it (the
     # closing set IS `und` — recomputing it as ordered ∪ reversed +
     # distinct would pay a third dedup shuffle for an identical relation)
-    und = (
+    und, _ = ckpt_observe(
         edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
         .filter(F.col("a") != F.col("b"))
         .unionByName(
             edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b"))
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     deg = und.groupBy(F.col("a").alias("node")).agg(F.count("*").alias("deg"))
     nodes = deg.select("node")
@@ -472,9 +490,8 @@ def weighted_shortest_paths(edges: DataFrame, source: str,
     if _mw["neg"]:
         raise ValueError("weighted_shortest_paths requires non-negative weights")
     spark = edges.sparkSession
-    dists = spark.createDataFrame(
-        [(source, 0.0, 0)], "node string, dist double, hops long"
-    ).localCheckpoint(eager=True)
+    dists, _ = ckpt_observe(spark.createDataFrame(
+        [(source, 0.0, 0)], "node string, dist double, hops long"))
 
     def _min_merge(df: DataFrame) -> DataFrame:
         return (
@@ -538,7 +555,7 @@ def connected_components_star(edges: DataFrame, src_col: str = "src",
       m = min(neighborhood(u) + {u});
     * small-star(u): every neighbor v < u, and u itself, re-attach to m.
 
-    Each half-round is one groupBy(node) min + one join back — two
+    Each half-round is one windowed min per node plus the dedupe — two
     shuffles over the CURRENT edge set, which only shrinks (edges
     canonicalize + dedupe every round). Fixpoint when the canonical edge
     set stops changing; at that point edges form stars centered at
@@ -547,6 +564,7 @@ def connected_components_star(edges: DataFrame, src_col: str = "src",
     Returns (node, component) for every node incident to an input edge
     (self-loop-only nodes map to themselves).
     """
+    # Only ever the preserved side of the final left join: no hint.
     nodes = (
         edges.select(F.col(src_col).alias("node"))
         .unionByName(edges.select(F.col(dst_col).alias("node")))
@@ -566,9 +584,13 @@ def connected_components_star(edges: DataFrame, src_col: str = "src",
         sym = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
             e.select(F.col("b").alias("u"), F.col("a").alias("v"))
         )
-        m = sym.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m"))
-        j = sym.join(m, "u")
+        # m(u) as a window over u's neighbor rows: one shuffle of `sym`
+        # instead of a groupBy shuffle plus a second shuffle of `sym` to
+        # join the minima back (interleaved A/B on the perfbench graph,
+        # local[2] on a 4-CPU guest: 34 vs 54 jobs, 2.4-2.6 vs 3.6 s
+        # median).
+        j = sym.withColumn(
+            "m", F.least(F.min("v").over(Window.partitionBy("u")), F.col("u")))
         if large:
             out = j.filter(F.col("v") > F.col("u")).select(
                 F.col("v").alias("a"), F.col("m").alias("b"))
@@ -576,7 +598,9 @@ def connected_components_star(edges: DataFrame, src_col: str = "src",
             out = j.filter(F.col("v") < F.col("u")).select(
                 F.col("v").alias("a"), F.col("m").alias("b")
             ).unionByName(
-                m.select(F.col("u").alias("a"), F.col("m").alias("b"))
+                # one (u, m) row per neighbor row; the distinct below
+                # keeps one
+                j.select(F.col("u").alias("a"), F.col("m").alias("b"))
             )
         return (
             out.filter(F.col("a") != F.col("b"))
@@ -752,11 +776,10 @@ def hits(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
     )
     # |E| observed on the edge checkpoint's own job (no separate count).
     n_edges = max(_me["n"], 1)
-    nodes = (
+    nodes, _ = ckpt_observe(
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     # The loop keeps SPARSE frames: a node missing from `hubs`/`auth`
     # has score 0 and contributes nothing to the next sums, so the full
@@ -779,32 +802,27 @@ def hits(edges: DataFrame, src_col: str = "src", dst_col: str = "dst",
         # Checkpoint every 2nd iteration, except the last (see pagerank:
         # the caller's action materializes the tail iterations itself).
         if it % 2 == 1 and it != iters - 1:
-            hubs = hubs.localCheckpoint(eager=True)
-    scores = (
+            hubs, _ = ckpt_observe(hubs)
+    # Materialize once, with both L2 norms observed by the same job: the
+    # tail iterations run once, and no second aggregate job reads the
+    # scores back for the norms.
+    scores, norms = ckpt_observe(
         nodes.join(hubs, "node", "left")
         .join(auth, "node", "left")
         .select(
             "node",
             F.coalesce("hub", F.lit(0.0)).alias("hub"),
             F.coalesce("authority", F.lit(0.0)).alias("authority"),
-        )
-        # Materialize once: `scores` is read TWICE below (the norms
-        # aggregate and the final projection), and its lineage holds the
-        # un-checkpointed tail iterations — without this checkpoint the
-        # norms broadcast subtree re-runs those iterations a second time.
-        .localCheckpoint(eager=True)
-    )
-    norms = scores.agg(
+        ),
         F.sqrt(F.sum(F.col("hub") * F.col("hub"))).alias("hn"),
         F.sqrt(F.sum(F.col("authority") * F.col("authority"))).alias("an"),
     )
-    return scores.crossJoin(F.broadcast(norms)).select(
-        "node",
-        F.when(F.col("hn") > 0, F.col("hub") / F.col("hn"))
-        .otherwise(F.lit(0.0)).alias("hub"),
-        F.when(F.col("an") > 0, F.col("authority") / F.col("an"))
-        .otherwise(F.lit(0.0)).alias("authority"),
-    )
+
+    def unit(col: str, norm: float | None):
+        return F.col(col) / F.lit(norm) if norm else F.lit(0.0)
+
+    return scores.select("node", unit("hub", norms["hn"]).alias("hub"),
+                         unit("authority", norms["an"]).alias("authority"))
 
 
 def label_propagation(edges: DataFrame, src_col: str = "src",
@@ -828,24 +846,22 @@ def label_propagation(edges: DataFrame, src_col: str = "src",
 
     Returns (node, community).
     """
-    und = (
+    # No repartition before the checkpoint (see pagerank: the
+    # partitioning metadata does not survive localCheckpoint, so the
+    # extra edge shuffle buys nothing downstream — measured 0.79×
+    # on graph_communities with it removed).
+    und, _ = ckpt_observe(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .unionByName(
             edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
         )
         .distinct()
-        # No repartition before the checkpoint (see pagerank: the
-        # partitioning metadata does not survive localCheckpoint, so the
-        # extra edge shuffle buys nothing downstream — measured 0.79×
-        # on graph_communities with it removed).
-        .localCheckpoint(eager=True)
     )
-    labels = (
+    labels, _ = ckpt_observe(
         und.select(F.col("src").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("community"))
-        .localCheckpoint(eager=True)
     )
     for it in range(iters):
         neighbor_votes = (
@@ -875,7 +891,7 @@ def label_propagation(edges: DataFrame, src_col: str = "src",
         labels = new_labels
         # Every 2nd round, except the last (see pagerank).
         if it % 2 == 1 and it != iters - 1:
-            labels = labels.localCheckpoint(eager=True)
+            labels, _ = ckpt_observe(labels)
     return labels
 
 
@@ -896,14 +912,13 @@ def k_core(edges: DataFrame, k: int, src_col: str = "src",
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    cur = (
+    cur, _ = ckpt_observe(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .unionByName(
             edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     for _ in range(max_iter):
         deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("degree"))

@@ -531,11 +531,18 @@ class TestPersonalizedPagerank:
             pagerank(e, reset_nodes=["a"], reset_df=seeds_df)
 
 
+def _plan(df) -> str:
+    """The physical plan before AQE re-plans anything."""
+    return df._jdf.queryExecution().sparkPlan().toString()
+
+
 def test_ckpt_observe_metrics_and_plan(spark):
     """session.ckpt_observe: the fused convergence probe must report the
     exact aggregates of the materialized rows (including the empty
-    case) and leave a clean checkpointed plan (no lingering observe
-    node — downstream consumers scan the materialized RDD)."""
+    case) and only those, leave a clean checkpointed plan (no lingering
+    observe node — downstream consumers scan the materialized RDD), and
+    hand back a frame that plans as a join's broadcast side exactly
+    when its observed size fits spark.sql.autoBroadcastJoinThreshold."""
     from pyspark.sql import functions as F
 
     from corkscrew_spark.session import ckpt_observe
@@ -546,21 +553,100 @@ def test_ckpt_observe_metrics_and_plan(spark):
         F.count(F.lit(1)).alias("n"),
         F.count(F.when(F.col("changed"), 1)).alias("nc"),
     )
-    assert m["n"] == 100 and m["nc"] == 10
+    assert m == {"n": 100, "nc": 10}  # the caller's names only
     assert ck.count() == 100 and ck.columns == ["id", "changed"]
     assert "Scan ExistingRDD" in ck._jdf.queryExecution().executedPlan().toString()
 
     empty, me = ckpt_observe(spark.range(5).filter("id < 0"),
                              F.count(F.lit(1)).alias("n"))
-    assert me["n"] == 0 and empty.count() == 0
+    assert me == {"n": 0} and empty.count() == 0
+
+    # Checkpoints of Python-built frames report an unknown size to
+    # Catalyst, so only the guard can make either side a broadcast.
+    big = _edges(spark, [(str(i), str(i + 1)) for i in range(2000)]) \
+        .localCheckpoint(eager=True)
+    rows = [("1", 0), ("7", 0)]
+
+    def small_join():
+        small, _ = ckpt_observe(
+            spark.createDataFrame(rows, "node string, distance int"))
+        return _plan(small.join(big, small["node"] == big["src"]))
+
+    plain = spark.createDataFrame(rows, "node string, distance int") \
+        .localCheckpoint(eager=True)
+    assert "SortMergeJoin" in _plan(plain.join(big, plain["node"] == big["src"]))
+    plan = small_join()
+    assert "BroadcastHashJoin" in plan and "BuildLeft" in plan, plan
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "-1")
+        assert "Broadcast" not in small_join()
+        for value in ("10MB", "10485760b"):  # byte strings, as Spark writes them
+            spark.conf.set(key, value)
+            assert "BroadcastHashJoin" in small_join()
+    finally:
+        spark.conf.set(key, before)
 
 
-def test_triangles_job_count_tripwire(spark, sf_dir):
-    """graph_triangles leaves ``ordered`` lazy and relies on AQE runtime
-    exchange reuse to read it twice without a second build. Static plan
-    dumps cannot show that reuse, so count the jobs one materialization
-    runs: a reuse miss, or an eager checkpoint of ``ordered`` (19 jobs),
-    fails here."""
+def test_bytes_conf_parses_spark_byte_strings():
+    from corkscrew_spark.session import _bytes_conf
+
+    assert _bytes_conf("10485760b") == 10 * 1024 * 1024
+    assert _bytes_conf("10MB") == _bytes_conf("10m") == 10 * 1024 * 1024
+    assert _bytes_conf("33554432") == 32 * 1024 * 1024
+    assert _bytes_conf("1g") == 1 << 30
+    assert _bytes_conf("-1") == -1
+    with pytest.raises(ValueError):
+        _bytes_conf("1.5MB")
+
+
+def test_size_guard_leaves_results_unchanged(spark):
+    """k_hop, shortest_path and connected_components_star return the
+    same rows whether the size guard broadcasts (default threshold) or
+    never does (threshold -1)."""
+    pairs = [("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"), ("c", "e"),
+             ("e", "f"), ("x", "y"), ("y", "z"), ("f", "g")]
+
+    def run():
+        e = _edges(spark, pairs)
+        return (
+            sorted(map(tuple, graph.k_hop(e, ["a"], max_depth=3).collect())),
+            [tuple(r) for r in graph.shortest_path(e, "a", "g").collect()],
+            sorted(map(tuple, graph.connected_components_star(e).collect())),
+        )
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    guarded = run()
+    try:
+        spark.conf.set(key, "-1")
+        unguarded = run()
+    finally:
+        spark.conf.set(key, before)
+    assert guarded == unguarded
+    assert guarded[1] == [(5, ["a", "b", "c", "e", "f", "g"])]
+
+
+def test_star_components_second_call_compiles_nothing(spark):
+    """get_spark keeps the codegen stage id out of generated class names,
+    so a warm call reuses every compiled class even though AQE numbers
+    its stages in whatever order they finish."""
+    from corkscrew_spark.operators.graph import connected_components_star
+
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    e = _edges(spark, [(f"n{i}", f"n{i + 1}") for i in range(12)]
+               + [("m1", "m2"), ("m2", "m3")])
+    connected_components_star(e).collect()
+    compiled = metrics.METRIC_COMPILATION_TIME().getCount()
+    connected_components_star(e).collect()
+    assert metrics.METRIC_COMPILATION_TIME().getCount() == compiled
+
+
+def _query_jobs(spark, sf_dir, name) -> int:
+    """Jobs one noop materialization of registered query ``name`` runs at
+    sf0.01, counted under one job group (table registration outside)."""
     import os
     import uuid
 
@@ -570,14 +656,39 @@ def test_triangles_job_count_tripwire(spark, sf_dir):
     sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
     if not os.path.isdir(sf):
         pytest.skip(f"no sf0.01 test data next to {sf_dir}")
-    register_tables(spark, sf)  # table registration runs outside the count
+    register_tables(spark, sf)
     sc = spark.sparkContext
-    group = f"triangles-tripwire-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "graph_triangles job count")
+    group = f"{name}-tripwire-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, f"{name} job count")
     try:
-        QUERIES["graph_triangles"](spark, sf).write.format("noop") \
-            .mode("overwrite").save()
+        QUERIES[name](spark, sf).write.format("noop").mode("overwrite").save()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) <= 16, f"graph_triangles ran {len(jobs)} jobs"
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_triangles_job_count_tripwire(spark, sf_dir):
+    """graph_triangles leaves ``ordered`` lazy and relies on AQE runtime
+    exchange reuse to read it twice without a second build. Static plan
+    dumps cannot show that reuse, so count the jobs one materialization
+    runs: a reuse miss, or an eager checkpoint of ``ordered`` (19 jobs),
+    fails here."""
+    jobs = _query_jobs(spark, sf_dir, "graph_triangles")
+    assert jobs <= 16, f"graph_triangles ran {jobs} jobs"
+
+
+def test_khop_job_count_tripwire(spark, sf_dir):
+    """Each k_hop round broadcasts its frontier and visited set, sized
+    from the counts their checkpoints observed, instead of shuffling the
+    edge table every hop: 13 jobs, 17 without the size guard (one job
+    of slack for AQE scheduling)."""
+    jobs = _query_jobs(spark, sf_dir, "graph_khop")
+    assert jobs <= 14, f"graph_khop ran {jobs} jobs"
+
+
+def test_shortest_path_job_count_tripwire(spark, sf_dir):
+    """shortest_path plans each hop from its observed frontier size, and
+    its seed checkpoint doubles as the visited set: 12 jobs, 14 without
+    the size guard (one job of slack for AQE scheduling)."""
+    jobs = _query_jobs(spark, sf_dir, "graph_shortest_path")
+    assert jobs <= 13, f"graph_shortest_path ran {jobs} jobs"
