@@ -244,27 +244,21 @@ def cmd_maintenance(args: argparse.Namespace) -> int:
         from corkscrew_spark import skipping
 
         preds = _parse_preds(args.pred)
-        stats = skipping.load_stats(args.path)
+        # --any makes each --pred its own DNF branch: files survive when
+        # ANY term may match (the OR-query admission story). Priced by
+        # the governor's own admission call, so this prints exactly
+        # what a scan budget would be checked against
+        branches = [[p] for p in preds] if args.any else [preds]
         try:
-            if args.any:
-                # each --pred is its own DNF branch: files survive when
-                # ANY term may match (the OR-query admission story)
-                branches = [[p] for p in preds]
-                plan = skipping.plan_skip_any(args.path, branches,
-                                              stats=stats)
-            else:
-                plan = skipping.plan_skip(args.path, preds, stats=stats)
+            est, (plan,) = skipping.admit(
+                [skipping.ScanRead(args.path, args.path, branches)])
         except ValueError as ex:
             print(f"error: {ex}", file=sys.stderr)
             return 2
         if plan["fallback"]:
             print(f"full scan: {plan['fallback']}")
             return 0
-        est = (skipping.estimate_scan_any(args.path, branches,
-                                          stats=stats, plan=plan)
-               if args.any else
-               skipping.estimate_scan(args.path, preds, stats=stats,
-                                      plan=plan))
+        est = est["tables"][args.path.lower()]
         tail = ""
         if est.get("rows_est_matched") is not None:
             tail = f", ~{est['rows_est_matched']:,} est. matches"

@@ -234,13 +234,12 @@ class QueryEngine:
     ``SELECT * FROM big_table`` — is estimated at FULL scan and
     enforced too (the most obviously over-budget query must be the
     first one refused, review finding). A registered table with NO
-    skipping stats (or fully-invalidated ones) counts at its honest
-    full-scan bytes — the listing's actual size sum, which
-    ``skipping.estimate_scan`` already returns in the fallback
-    branch — instead of being silently exempt (r10 verdict #1: at
-    100 TB, stats-less tables are exactly the ones admission control
-    must not wave through; ``CORKSCREW_SCAN_BUDGET_ALLOW_NOSTATS=1``
-    restores the legacy exemption). Enforcement stays advisory only
+    usable skipping stats (missing, malformed or fully invalidated)
+    counts at its honest full-scan bytes — the listing's actual size
+    sum (r10 verdict #1: at 100 TB, stats-less tables are exactly the
+    ones admission control must not wave through). The decision is
+    ``skipping.admit``, the one admission function the KQL surface
+    and both dry-runs share. Enforcement stays advisory only
     for what genuinely can't be RESOLVED: references in shapes none
     of the resolvers understand, and unregistered tables — the
     governor exists to stop the 95%-of-100TB scan, not to guess."""
@@ -250,7 +249,6 @@ class QueryEngine:
         self.spark = spark
         self._versioned: dict[str, str] = {}
         self._warehouse: dict[str, str] = {}  # every registered dir
-        self._warehouse_skip: set[str] = set()  # pruning-enabled names
         self._view_sig: dict[str, tuple | None] = {}  # freshness keys
         self._listing_cache: dict[str, tuple] = {}  # path -> (sig, files)
         self._snapshots: set[str] = set()  # per-statement __v entries
@@ -261,8 +259,7 @@ class QueryEngine:
         if register_helpers:
             register_json_helpers(spark, self_test=False)
 
-    def register_warehouse(self, name: str, path: str,
-                           skipping: bool = True) -> None:
+    def register_warehouse(self, name: str, path: str) -> None:
         """Attach a warehouse table DIRECTORY to the SQL surface:
         registers its contents as view ``name``, and — when the table
         has zone-map/bloom statistics (``skipping.compute_stats``) —
@@ -273,9 +270,9 @@ class QueryEngine:
         row-group pruning (internal/db). Soundness: the full SQL always
         re-applies its WHERE on the pruned view, and pruning uses only
         conjuncts implied by the whole predicate — result identity with
-        the plain view is structural, not statistical. Disable per
-        table with ``skipping=False`` or globally with env
-        ``CORKSCREW_DATA_SKIPPING=0``.
+        the plain view is structural, not statistical, so pruning
+        needs no switch: a table without stats simply reads plain, and
+        an armed budget prices it at its full listing bytes.
 
         Freshness contract (IN-REPO WRITERS ONLY): the per-query view
         refresh and the file-listing cache are gated on ``_table_sig``
@@ -289,8 +286,6 @@ class QueryEngine:
         with env ``CORKSCREW_VIEW_SIG=0``, which restores the
         refresh-every-query behavior (and disables the listing
         cache)."""
-        import os
-
         # sig BEFORE the read (same order as _refresh_warehouse_views):
         # a swap landing between them makes the stored sig pre-date the
         # table, so the next query refreshes — the reverse order could
@@ -299,14 +294,9 @@ class QueryEngine:
         self.spark.read.parquet(path).createOrReplaceTempView(name)
         # keyed lower-cased: Spark resolves view names case-
         # insensitively, so `FROM Estate` must find the registration
-        # made as "estate". The view-FRESHNESS refresh applies to every
-        # registration — a swapped directory must never serve a stale
-        # listing — while the skipping flag gates only the PRUNING.
+        # made as "estate"
         self._warehouse[name.lower()] = path
         self._view_sig[name.lower()] = sig
-        if skipping and os.environ.get(
-                "CORKSCREW_DATA_SKIPPING", "1") != "0":
-            self._warehouse_skip.add(name.lower())
 
     @staticmethod
     def _table_sig(path: str) -> tuple | None:
@@ -335,13 +325,13 @@ class QueryEngine:
     @staticmethod
     def _vet_region_preds(stats: dict | None, preds: list,
                           branches: list | None) -> tuple[list, list | None]:
-        """Stats-column vetting for SUBQUERY-BODY (region) rows, shared
-        verbatim by the governor (`_skipping_rewrite`) and the dry-run
-        (`estimate_scan`) so the two verdicts can never drift: a
-        correlated body may reference OUTER columns UNQUALIFIED, so
-        attribute only columns the zone maps record for this table —
-        an unknown column can't prune anyway, and read_skipping's
-        re-applied filter must never name a column the table lacks.
+        """Stats-column vetting for SUBQUERY-BODY (region) rows, done
+        once in ``_resolved_reads`` for the governor and the dry-run
+        alike: a correlated body may reference OUTER columns
+        UNQUALIFIED, so attribute only columns the zone maps record
+        for this table — an unknown column can't prune anyway, and
+        read_skipping's re-applied filter must never name a column
+        the table lacks.
         A disjunct emptied by vetting matches anything: the whole
         OR-list degrades to no-pruning (None)."""
         if not (preds or branches):
@@ -412,7 +402,6 @@ class QueryEngine:
                 self._snap_refs.pop(key, None)
                 path = self._warehouse.pop(key, None)
                 self._view_sig.pop(key, None)
-                self._warehouse_skip.discard(key)
                 if path is not None:
                     self._listing_cache.pop(path, None)
                 self._snapshots.discard(key)
@@ -445,7 +434,6 @@ class QueryEngine:
 
     def _warehouse_targets(self, bound: str,
                            exclude: frozenset | set = frozenset(),
-                           names: set | None = None,
                            include_unprunable: bool = False
                            ) -> list[tuple]:
         """(name, alias, qualified_only, prunable) per warehouse table
@@ -473,8 +461,7 @@ class QueryEngine:
 
         from corkscrew_spark import predicates as _pred
 
-        if names is None:
-            names = self._warehouse_skip
+        names = self._warehouse
         st = _pred.single_table(bound)
         if st is not None:
             return ([(st[0], st[1], False, True)]
@@ -559,8 +546,7 @@ class QueryEngine:
                 out.append((start, end))
         return out, names
 
-    def _segment_targets(self, bound: str, names: set | None = None,
-                         include_bare: bool = False):
+    def _segment_targets(self, bound: str, include_bare: bool = False):
         """THE extraction cascade, shared by the execution rewrite,
         estimate_scan, and the scan governor so what the engine
         executes can never drift from what it estimates or enforces
@@ -586,14 +572,12 @@ class QueryEngine:
         it — runs the same cascade as its own region (its nested
         subqueries masked likewise; depth-1 bodies only, a deeper
         body's tables stay unresolved exactly as the whole statement
-        did before). ``names`` overrides which registered tables
-        resolve (default: the pruning-enabled set; the governor passes
-        ALL registered tables — admission control must not be disarmed
-        by the pruning opt-out). ``include_bare`` keeps resolvable
-        references with NO extractable conjuncts as ``(name, [], None,
-        region)`` rows — the governor/estimator's full-scan case (an
-        empty AND-list prunes nothing, so ``plan_skip`` yields the
-        trivial bytes_kept == bytes_total estimate) — and additionally
+        did before). Every registered table resolves.
+        ``include_bare`` keeps resolvable references with NO
+        extractable conjuncts as ``(name, [], None, region)`` rows —
+        the governor/estimator's full-scan case (an empty AND-list
+        prunes nothing, so ``plan_skip`` yields the trivial
+        bytes_kept == bytes_total estimate) — and additionally
         resolves NON-PRUNABLE chain members (the right side of a LEFT
         join, self-joined tables): attribution there is unsound but
         the read is still a whole-table scan, so they surface as bare
@@ -655,7 +639,7 @@ class QueryEngine:
             for region, text in regions:
                 for name, alias, qualified_only, prunable \
                         in self._warehouse_targets(
-                            text, exclude, names,
+                            text, exclude,
                             include_unprunable=include_bare):
                     if not prunable:
                         found.append((name, [], None, region))
@@ -671,6 +655,36 @@ class QueryEngine:
                     found.append((name, preds, branches, region))
             if found:
                 yield start, end, seg, found, regions
+
+    def _resolved_reads(self, bound: str, include_bare: bool) -> list:
+        """The statement's resolved warehouse reads per segment, as
+        ``(start, end, seg, regions, [(region, skipping.ScanRead)])``:
+        the ``_segment_targets`` rows over each table's cached listing,
+        subquery-body rows vetted against the table's stats columns.
+        The rewrite and the dry-run both admit exactly these reads."""
+        from corkscrew_spark import skipping as _skip
+
+        out = []
+        for start, end, seg, found, regions in self._segment_targets(
+                bound, include_bare=include_bare):
+            rows = []
+            for name, preds, branches, region in found:
+                # .get(), not []: a concurrent statement's
+                # _gc_snapshots() may pop a time-travel registry entry
+                # after resolution — the documented contract is "at
+                # worst unpruned" (the snapshot temp view still
+                # exists), never a KeyError failing the statement
+                path = self._warehouse.get(name.lower())
+                if path is None:
+                    continue
+                if region is not None:
+                    preds, branches = self._vet_region_preds(
+                        _skip.load_stats(path), preds, branches)
+                rows.append((region, _skip.ScanRead(
+                    name, path, branches or [preds],
+                    files=self._cached_listing(path))))
+            out.append((start, end, seg, regions, rows))
+        return out
 
     def _skipping_rewrite(self, bound: str) -> tuple[str, list[str]]:
         """When ``bound`` is a single-table query (or pure inner-join
@@ -698,158 +712,44 @@ class QueryEngine:
         pruned inside DuckDB; CTE names shadow registered views and
         are excluded from attribution).
 
-        The scan-budget governor enforces HERE, on the same plan the
-        read will use (one listing/zone-map walk per table per query,
-        never two), raising ``ScanBudgetExceeded`` — with every
-        already-registered one-statement view dropped — before any
-        file opens. Enforcement covers ALL registered tables, pruning
-        opt-outs included, and the budget is BOTH a per-reference and
-        a statement-total ceiling: every admitted read's estimate
-        adds to a running sum, refused once the sum crosses the
-        budget (r10 — N references at budget−ε must not admit N×)."""
+        The scan-budget governor enforces HERE, through
+        ``skipping.admit`` over EVERY resolved read, before any pruned
+        view is registered (a refusal leaves nothing to drop) and on
+        the same plan each pruned read then reuses (one listing/zone-map
+        walk per read, never two). The budget is BOTH a per-reference
+        and a statement-total ceiling (r10 — N references at budget−ε
+        must not admit N×)."""
         from corkscrew_spark import predicates as _pred
         from corkscrew_spark import skipping as _skip
 
-        # when the governor is armed, resolve ALL registered tables —
-        # admission control must not be disarmed by the pruning
-        # opt-out (CORKSCREW_DATA_SKIPPING=0 / skipping=False); only
-        # pruning-enabled tables get rewritten below
         enforce = self.max_scan_bytes is not None
-        names = set(self._warehouse) if enforce else None
+        segments = self._resolved_reads(bound, include_bare=enforce)
+        _est, plans = _skip.admit(
+            [read for *_, rows in segments for _region, read in rows],
+            self.max_scan_bytes, price=enforce)
+        plans = iter(plans)
         views: list[str] = []
         edits: list[tuple[int, int, str]] = []
-        # the budget is a ceiling on the STATEMENT'S total I/O, not
-        # per reference (r10 review): N references each at budget−ε
-        # must not admit N× the budget. Every trusted estimate adds
-        # to this sum; the per-reference check below still names the
-        # single worst offender when one read alone is over.
-        admitted_bytes = 0
-        admitted_reads = 0
         try:
-            for start, end, seg, found, regions in self._segment_targets(
-                    bound, names, include_bare=enforce):
+            for start, end, seg, regions, rows in segments:
                 texts = dict(regions)
                 # view mapping PER REGION: the same table pruned in the
                 # enclosing statement and inside a subquery body gets
                 # two independent views, each rewritten in its own text
                 mapping: dict[tuple | None, dict[str, str]] = {}
                 region_views: dict[tuple | None, list[str]] = {}
-                for name, preds, branches, region in found:
-                    # .get(), not []: a concurrent statement's
-                    # _gc_snapshots() may pop a time-travel registry
-                    # entry between _segment_targets resolution and
-                    # this lookup — the documented contract is "at
-                    # worst unpruned" (the snapshot temp view still
-                    # exists), never a KeyError failing the statement
-                    path = self._warehouse.get(name.lower())
-                    if path is None:
-                        continue
+                for region, read in rows:
+                    plan = next(plans)
+                    if not any(read.branches):
+                        continue  # bare or unprunable: the plain view
                     try:
-                        # plan ONCE: enforcement and the pruned read
-                        # share it (a governed query must not pay the
-                        # listing/zone-map walk twice). An empty
-                        # AND-list (include_bare's full-scan case)
-                        # plans as keep-everything — the estimate the
-                        # bare `SELECT * FROM big` must be refused on.
-                        # The listing itself is sig-cached: an
-                        # unchanged table costs two os.stats, not an
-                        # O(files) walk per statement.
-                        files = self._cached_listing(path)
-                        stats = _skip.load_stats(path)
-                        if region is not None:
-                            preds, branches = self._vet_region_preds(
-                                stats, preds, branches)
-                        # the rewrite below only fires for
-                        # pruning-enabled tables with mined
-                        # predicates; any OTHER read executes as a
-                        # plain full scan, so the governor must
-                        # estimate it as one (an empty AND-list plans
-                        # as keep-everything) — a budget between
-                        # pruned and full bytes must refuse a read
-                        # that will not actually be pruned
-                        will_prune = (
-                            name.lower() in self._warehouse_skip
-                            and (bool(preds) or branches is not None))
-                        eff_preds = preds if will_prune else []
-                        eff_branches = branches if will_prune else None
-                        plan = (_skip.plan_skip(path, eff_preds,
-                                                stats=stats, files=files)
-                                if eff_branches is None else
-                                _skip.plan_skip_any(path, eff_branches,
-                                                    stats=stats,
-                                                    files=files))
-                        if enforce:
-                            est = (_skip.estimate_scan(
-                                path, eff_preds, stats=stats, plan=plan)
-                                if eff_branches is None else
-                                _skip.estimate_scan_any(
-                                    path, eff_branches, stats=stats,
-                                    plan=plan))
-                            # fallback (no-stats / stats-stale)
-                            # estimates count at their honest
-                            # full-scan bytes (r10 verdict #1 — the
-                            # last silent exemption: a table
-                            # registered without compute_stats, or
-                            # fully rewritten since its snapshot, is
-                            # exactly the read a 100 TB budget must
-                            # not admit uncounted); env opt-out in
-                            # skipping.govern_fallback for legacy
-                            # stats-less tables
-                            counted = (est["fallback"] is None
-                                       or _skip.govern_fallback())
-                            if (counted and est["bytes_kept"]
-                                    > self.max_scan_bytes):
-                                remedy = (
-                                    "add a more selective predicate "
-                                    "or re-cluster the table"
-                                    if est["fallback"] is None else
-                                    "its skipping stats are "
-                                    f"unavailable ({est['fallback']})"
-                                    ", so the estimate is the full "
-                                    "table — run skipping."
-                                    "compute_stats/refresh_stats on "
-                                    "it, or set CORKSCREW_SCAN_"
-                                    "BUDGET_ALLOW_NOSTATS=1 to exempt"
-                                    " legacy stats-less tables")
-                                raise ScanBudgetExceeded(
-                                    f"estimated scan of {name} is "
-                                    f"{est['bytes_kept']:,} bytes "
-                                    f"({est['files_kept']} of "
-                                    f"{est['files_total']} files) — "
-                                    f"over the {self.max_scan_bytes:,}"
-                                    f"-byte budget; {remedy}")
-                            if counted:
-                                admitted_bytes += est["bytes_kept"]
-                                admitted_reads += 1
-                                if admitted_bytes > self.max_scan_bytes:
-                                    raise ScanBudgetExceeded(
-                                        "estimated STATEMENT scan is "
-                                        f"{admitted_bytes:,} bytes "
-                                        f"across {admitted_reads} "
-                                        f"table reads (latest: {name})"
-                                        " — over the "
-                                        f"{self.max_scan_bytes:,}-byte"
-                                        " budget; the ceiling applies"
-                                        " to the statement's total"
-                                        " I/O, not per reference")
-                        if not will_prune:
-                            continue  # bare or governed-only: no rewrite
-                        pruned = (_skip.read_skipping(
-                            self.spark, path, preds,
-                            stats=stats, plan=plan)
-                            if preds else
-                            _skip.read_skipping_any(
-                                self.spark, path, branches,
-                                stats=stats, plan=plan))
-                    except ScanBudgetExceeded:
-                        raise
-                    except Exception:
+                        pruned = _skip.read_admitted(self.spark, read, plan)
+                    except Exception:  # noqa: BLE001
                         continue  # unreadable stats/files: plain view
-                    view = f"{name}__skip_{next(_SKIP_SEQ)}"
+                    view = f"{read.name}__skip_{next(_SKIP_SEQ)}"
                     pruned.createOrReplaceTempView(view)
-                    views.append(view)  # tracked NOW: a mid-segment
-                    # ScanBudgetExceeded must clean these up too
-                    mapping.setdefault(region, {})[name.lower()] = view
+                    views.append(view)
+                    mapping.setdefault(region, {})[read.name.lower()] = view
                     region_views.setdefault(region, []).append(view)
                 if not mapping:
                     continue
@@ -879,10 +779,10 @@ class QueryEngine:
                     new_seg = new_seg[:s] + r + new_seg[e:]
                 edits.append((start, end, new_seg))
         except Exception:
-            # ANY failure out of this loop (a refusal, or an unexpected
-            # extraction/rewrite error in a later segment) must not
-            # leak earlier segments' one-statement views into the
-            # shared session — execute()'s finally never sees them
+            # ANY failure out of this loop (an unexpected rewrite error
+            # in a later segment) must not leak earlier segments'
+            # one-statement views into the shared session — execute()'s
+            # finally never sees them
             for view in views:
                 self.spark.catalog.dropTempView(view)
             raise
@@ -920,8 +820,6 @@ class QueryEngine:
         ``read_version(predicates=…)`` API pruned history reads. An
         immutable dir means the freshness signature never moves: the
         per-query refresh costs two stats and nothing else."""
-        import os
-
         from corkscrew_spark import versioned
 
         opaque = [m.span() for m in _OPAQUE_RE.finditer(sql)]
@@ -1035,8 +933,6 @@ class QueryEngine:
             held = getattr(self._snap_tl, "views", None)
             if held is not None:
                 held.append(view.lower())
-            if os.environ.get("CORKSCREW_DATA_SKIPPING", "1") != "0":
-                self._warehouse_skip.add(view.lower())
             # alias the snapshot back to the original table name so
             # qualified references (t.id) keep resolving — unless the
             # query supplies its own alias right after the clause
@@ -1114,11 +1010,10 @@ class QueryEngine:
         sum — two branches each at 0.6× budget dry-ran as 'every row
         under budget' yet refused at execution). Returns ``{"tables":
         {name: est}, "bytes_kept": <sum over every admitted read —
-        a twice-read table counts twice>, "reads": n}``; reads whose
-        estimate has a fallback contribute their FULL-SCAN bytes,
-        exactly as in enforcement (r11 — unless the
-        ``CORKSCREW_SCAN_BUDGET_ALLOW_NOSTATS=1`` legacy exemption is
-        set, in which case both dry-run and governor skip them)."""
+        a twice-read table counts twice>, "reads": n}``: the same
+        resolution and the same ``skipping.admit`` call as the
+        governor, with no budget — so reads without usable stats
+        contribute their FULL-SCAN bytes exactly as in enforcement."""
         from corkscrew_spark import skipping as _skip
 
         bound = bind_params(sql, params)
@@ -1136,65 +1031,15 @@ class QueryEngine:
             if self._versioned:
                 self._gc_snapshots()
                 bound = self._resolve_time_travel(bound)
-            return self._estimate_resolved(bound)
+            est, _plans = _skip.admit(
+                [read for *_, rows in self._resolved_reads(bound, True)
+                 for _region, read in rows])
+            return est
         finally:
             if own:
                 self._release_snapshots(
                     getattr(self._snap_tl, "views", []))
                 self._snap_tl.views = []
-
-    def _estimate_resolved(self, bound: str) -> dict[str, Any]:
-        from corkscrew_spark import skipping as _skip
-
-        out: dict[str, dict] = {}
-        total_bytes = 0
-        total_reads = 0
-        # resolve ALL registered tables, exactly as the governor does —
-        # the dry-run must never say 'will run' for a query the
-        # governor would refuse (pruning opt-outs still estimate)
-        for _start, _end, _seg, found, _regions in self._segment_targets(
-                bound, set(self._warehouse), include_bare=True):
-            for name, preds, branches, region in found:
-                try:
-                    path = self._warehouse[name.lower()]
-                    # the dry-run must report the scan that WILL
-                    # happen: a pruning-opted-out (or governed-only)
-                    # table reads plain, so its estimate is the full
-                    # scan even when conjuncts are minable
-                    stats = _skip.load_stats(path)
-                    if name.lower() not in self._warehouse_skip:
-                        preds, branches = [], None
-                    elif region is not None:
-                        # subquery-body rows: the SAME stats-column
-                        # vetting as the governor (one shared helper,
-                        # so dry-run == enforcement verdict by
-                        # construction)
-                        preds, branches = self._vet_region_preds(
-                            stats, preds, branches)
-                    files = self._cached_listing(path)
-                    est = (_skip.estimate_scan(path, preds, stats=stats,
-                                               files=files)
-                           if branches is None else
-                           _skip.estimate_scan_any(path, branches,
-                                                   stats=stats,
-                                                   files=files))
-                except Exception:  # noqa: BLE001 — estimates are advisory
-                    continue
-                prev = out.get(name.lower())
-                # two CTE segments can read one table under different
-                # predicates: report the WIDER scan (admission control
-                # must see the worst case)
-                # widest by BYTES: the governor refuses on bytes_kept, so
-                # the dry-run must rank segments by the same metric or
-                # it can admit a query enforcement refuses
-                if prev is None or (est["bytes_kept"] or 0) > (
-                        prev["bytes_kept"] or 0):
-                    out[name.lower()] = est
-                total_reads += 1
-                if est["fallback"] is None or _skip.govern_fallback():
-                    total_bytes += est["bytes_kept"]
-        return {"tables": out, "bytes_kept": total_bytes,
-                "reads": total_reads}
 
     def validate(self, sql: str, params: dict[str, Any] | None = None) -> str:
         own = not getattr(self._snap_tl, "in_execute", False)

@@ -4134,115 +4134,83 @@ def _pipeline_refs(query: str) -> list[tuple[str, list[str]]]:
     return out
 
 
-def _warehouse_refs(query: str, warehouse: dict[str, str]):
-    """Per warehouse table: ``(name, path, n_refs, attributable,
-    preds, branches)`` — the ONE attribution pass shared by the
-    pruned-read path, the governor, and the dry-run estimator so what
-    executes can never drift from what is estimated or enforced.
-    ``attributable`` = the table is word-mentioned EXACTLY once in the
-    raw text AND parsed as exactly one pipeline reference, so its
-    leading-where conjuncts belong to that one read."""
+def _warehouse_refs(query: str, warehouse: dict[str, str]) -> list:
+    """One ``skipping.ScanRead`` per warehouse table — the ONE
+    attribution pass shared by the pruned-read path, the governor, and
+    the dry-run estimator so what executes can never drift from what is
+    estimated or enforced. ``refs`` counts the pipeline references
+    (0: never read). A table is attributable when it is word-mentioned
+    EXACTLY once in the raw text AND parsed as exactly one pipeline
+    reference: its leading-where conjuncts then belong to that one
+    read and become the read's branches; every other read prices and
+    reads as the full scan (``[[]]``)."""
+    from corkscrew_spark import skipping as _skip
+
     refs: dict[str, list[list[str]]] = {}
     for h, wheres in _pipeline_refs(query):
         refs.setdefault(h, []).append(wheres)
     out = []
     for name, path in warehouse.items():
-        low = name.lower()
-        nrefs = refs.get(low, [])
+        nrefs = refs.get(name.lower(), [])
         mentions = len(re.findall(
             rf"(?<!\w){re.escape(name)}(?!\w)", query, re.IGNORECASE))
-        attributable = mentions == 1 and len(nrefs) == 1
-        preds: list[tuple] = []
-        branches = None
-        if attributable:
-            preds, branches = _mine_wheres(nrefs[0])
-        out.append((name, path, len(nrefs), attributable, preds,
-                    branches))
+        branches: list[list[tuple]] = [[]]
+        if mentions == 1 and len(nrefs) == 1:
+            preds, dnf = _mine_wheres(nrefs[0])
+            branches = [preds + b for b in dnf] if dnf else [preds]
+        out.append(_skip.ScanRead(name, path, branches, refs=len(nrefs)))
     return out
+
+
+def _externaldata_scans(query: str, roots: list[str] | None = None
+                        ) -> list:
+    """The query's ``externaldata`` reads as fixed-size
+    ``skipping.ScanRead``s at raw file weight (no zone maps exist for
+    arbitrary local files, so a read costs everything it opens). With
+    ``roots``, only reads the allow-list admits: the compiler refuses
+    any other before opening a file, so it is not statted."""
+    from corkscrew_spark import skipping as _skip
+
+    return [_skip.ScanRead(f"externaldata#{idx}", None, [[]],
+                           files=list(epaths),
+                           nbytes=externaldata_bytes(epaths))
+            for idx, (epaths, _fmt) in enumerate(externaldata_reads(query))
+            if roots is None or all(_externaldata_path_allowed(p, roots)
+                                    for p in epaths)]
 
 
 def kql_estimate_scan(query: str, warehouse: dict[str, str]
                       ) -> dict[str, dict]:
-    """Metadata-only scan estimate per warehouse table the pipeline
-    actually reads — the KQL twin of ``QueryEngine.estimate_scan``
-    (dry-run half of the admission loop; `kql --estimate` on the CLI).
-    Attributable tables estimate under their mined leading-where
-    conjuncts; multi-referenced or where-less tables — and EVERY table
-    when pruning is opted out (``CORKSCREW_DATA_SKIPPING=0``: the read
-    will be a plain full scan, so the dry-run must report one) —
-    report the trivial full-scan estimate the governor would enforce
-    on. Tables the pipeline never reads, or without stats, are
-    absent."""
-    import os as _os
-
-    from corkscrew_spark import skipping as _skip
-
-    if not _split_stages(query):
-        raise KqlError("KQL: empty query")
-    enabled = _os.environ.get("CORKSCREW_DATA_SKIPPING", "1") != "0"
-    out: dict[str, dict] = {}
-    for name, path, nrefs, attributable, preds, branches \
-            in _warehouse_refs(query, warehouse):
-        if not nrefs:
-            continue
-        try:
-            if not (enabled and attributable):
-                est = _skip.estimate_scan(path, [])
-            elif branches:
-                est = _skip.estimate_scan_any(
-                    path, [preds + b for b in branches] if preds
-                    else branches)
-            else:
-                est = _skip.estimate_scan(path, preds)
-        except Exception:  # noqa: BLE001 — estimates are advisory
-            continue
-        out[name.lower()] = est
-    return out
+    """Metadata-only scan estimate per read the pipeline performs —
+    the KQL twin of ``QueryEngine.estimate_scan`` (dry-run half of the
+    admission loop; `kql --estimate` on the CLI): the ``tables`` of
+    ``kql_estimate_statement``."""
+    return kql_estimate_statement(query, warehouse)["tables"]
 
 
 def kql_estimate_statement(query: str, warehouse: dict[str, str]
                            ) -> dict:
-    """``kql_estimate_scan`` plus the QUERY totals the aggregate
-    governor enforces on (r10 — the per-table dict cannot express a
-    twice-read table's doubled I/O): ``{"tables": {...},
-    "bytes_kept": <sum of every read's estimate — an N-times-
-    referenced table counts N times>, "reads": n}``. Fallback
-    estimates contribute their FULL-SCAN bytes, matching enforcement
-    (r11; ``CORKSCREW_SCAN_BUDGET_ALLOW_NOSTATS=1`` restores the
-    legacy exemption on both dry-run and governor together).
-    ``externaldata`` reads price at raw file weight regardless of the
-    allow-list (the dry-run answers "what WOULD this cost"); the
-    governor prices only allow-listed reads, because a disallowed one
-    is refused at compile time before any file opens — parity holds
-    on every executable query."""
+    """The dry-run of ``kql_to_df_skipping``'s governor: the same
+    reads through the same ``skipping.admit`` call, with no budget.
+    Returns ``{"tables": {...}, "bytes_kept": <sum of every read's
+    estimate — an N-times-referenced table counts N times>, "reads":
+    n}``. Attributable tables price under their mined leading-where
+    conjuncts; multi-referenced or where-less tables at full scan;
+    tables without usable stats at their full listing bytes; tables
+    the pipeline never reads are absent. ``externaldata`` reads price
+    at raw file weight regardless of the allow-list (the dry-run
+    answers "what WOULD this cost"); the governor prices only
+    allow-listed reads, because a disallowed one is refused at compile
+    time before any file opens — parity holds on every executable
+    query."""
     from corkscrew_spark import skipping as _skip
 
-    tables = kql_estimate_scan(query, warehouse)
-    total_bytes = 0
-    total_reads = 0
-    # externaldata reads price at raw file weight, mirroring the
-    # governor exactly (dry-run parity: same bytes, same refusal)
-    for idx, (epaths, _fmt) in enumerate(externaldata_reads(query)):
-        ebytes = externaldata_bytes(epaths)
-        tables[f"externaldata#{idx}"] = {
-            "bytes_kept": ebytes, "bytes_total": ebytes,
-            "files_kept": len(epaths), "files_total": len(epaths),
-            "rows_est_matched": None, "fallback": None,
-            "paths": list(epaths)}
-        total_bytes += ebytes
-        total_reads += 1
-    for name, path, nrefs, attributable, preds, branches \
-            in _warehouse_refs(query, warehouse):
-        if not nrefs:
-            continue
-        est = tables.get(name.lower())
-        if est is None:
-            continue
-        total_reads += nrefs
-        if est["fallback"] is None or _skip.govern_fallback():
-            total_bytes += est["bytes_kept"] * nrefs
-    return {"tables": tables, "bytes_kept": total_bytes,
-            "reads": total_reads}
+    if not _split_stages(query):
+        raise KqlError("KQL: empty query")
+    est, _plans = _skip.admit(
+        _externaldata_scans(query)
+        + [r for r in _warehouse_refs(query, warehouse) if r.refs])
+    return est
 
 
 def kql_to_df_skipping(spark, query: str, warehouse: dict[str, str],
@@ -4264,40 +4232,27 @@ def kql_to_df_skipping(spark, query: str, warehouse: dict[str, str],
     name in the raw query text (an upper bound on references), so a
     second mention anywhere — even one the parser doesn't understand —
     forces the plain read; multi-referenced tables are never pruned by
-    one reference's predicate. Env ``CORKSCREW_DATA_SKIPPING=0``
-    disables the pruning (plain reads everywhere).
+    one reference's predicate.
 
     ``max_scan_bytes`` arms the same admission control as
-    ``QueryEngine(max_scan_bytes=…)``: before any file opens, each
-    warehouse table the pipeline actually READS (``_pipeline_refs``
-    mirrors the compiler's three resolution sites — pipeline head,
-    ``join kind=…( sub )`` head, ``union`` operand — exactly) gets a
-    metadata-only ``estimate_scan``; the plan is computed ONCE and
-    shared with the pruned read (a governed query never pays the
-    listing/zone-map walk twice). A once-referenced table is estimated
-    under its mined leading-where conjuncts; a multi-referenced table
-    — or one with NO minable predicate, the bare ``BigTable | take``
-    shape — is estimated at full scan, so the most obviously
-    over-budget pipeline is the first one refused. Enforcement raises
-    ``ScanBudgetExceeded`` and is NOT disarmed by the pruning opt-out
-    (estimation is pure metadata) — and under the opt-out it enforces
-    on the FULL-scan estimate, because that is the read that will
-    actually execute (a budget between pruned and full bytes must
-    refuse it); tables without stats (or with fully-invalidated
-    stats) are counted at their honest full-scan bytes too, matching
-    the engine (r11 — env ``CORKSCREW_SCAN_BUDGET_ALLOW_NOSTATS=1``
-    restores the legacy exemption). The budget is BOTH a
-    per-reference and a query-total
-    ceiling (r10): each admitted read's estimate — times its
-    reference count, each reference being its own scan — adds to a
-    running sum, refused once the sum crosses the budget."""
-    import os as _os
-
+    ``QueryEngine(max_scan_bytes=…)``, through the same
+    ``skipping.admit``: before any file opens, every read the pipeline
+    performs (``_pipeline_refs`` mirrors the compiler's resolution
+    sites exactly, and allow-listed ``externaldata`` reads count at raw
+    file weight) is planned ONCE and priced, the plan shared with the
+    pruned read. A once-referenced table prices under its mined
+    leading-where conjuncts; a multi-referenced table, or one with NO
+    minable predicate (the bare ``BigTable | take`` shape), at full
+    scan, so the most obviously over-budget pipeline is the first one
+    refused; a table without usable stats at its full listing bytes.
+    The budget is BOTH a per-reference and a query-total ceiling
+    (r10): each read's estimate, times its reference count, adds to a
+    running sum, refused with ``ScanBudgetExceeded`` once the sum
+    crosses the budget. ``kql_estimate_statement`` is the dry-run."""
     from corkscrew_spark import skipping as _skip
 
     if not _split_stages(query):
         raise KqlError("KQL: empty query")
-    enabled = _os.environ.get("CORKSCREW_DATA_SKIPPING", "1") != "0"
     enforce = max_scan_bytes is not None
     resolved: dict[str, DataFrame] = dict(tables or {})
     # kql_to_df lowercases table keys, so a warehouse entry whose
@@ -4311,118 +4266,20 @@ def kql_to_df_skipping(spark, query: str, warehouse: dict[str, str],
             "KQL: table name(s) registered both as DataFrame and "
             f"warehouse directory: {sorted(clash)} — pass each name "
             "through exactly one of `tables`/`warehouse`")
-    # the budget caps the STATEMENT'S total I/O (r10 review, matching
-    # the SQL engine): every admitted read adds its estimate — times
-    # its reference count, since each reference is its own scan —
-    # and the sum must stay under the budget too
-    admitted_bytes = 0
-    admitted_reads = 0
-    if enforce:
-        # externaldata reads are priced at raw file weight — no zone
-        # maps exist for arbitrary local files, so the honest
-        # estimate is everything the read will open (same posture as
-        # the no-stats fallback, and the dry-run twin
-        # kql_estimate_statement reports the identical bytes)
-        eroots = _externaldata_roots_effective(externaldata_roots)
-        for epaths, _fmt in externaldata_reads(query):
-            if not all(_externaldata_path_allowed(p, eroots)
-                       for p in epaths):
-                # the compiler refuses this read before opening any
-                # file — don't stat (or report sizes of) paths the
-                # allow-list already rules out
-                continue
-            ebytes = externaldata_bytes(epaths)
-            admitted_bytes += ebytes
-            admitted_reads += 1
-            if ebytes > max_scan_bytes \
-                    or admitted_bytes > max_scan_bytes:
-                from corkscrew_spark.engine import ScanBudgetExceeded
-
-                raise ScanBudgetExceeded(
-                    f"externaldata read of {epaths} is {ebytes:,} "
-                    f"bytes at raw file weight (statement total "
-                    f"{admitted_bytes:,}) — over the "
-                    f"{max_scan_bytes:,}-byte budget; raw files "
-                    "cannot be pruned — convert to a stats-bearing "
-                    "warehouse table to scan less")
-    for name, path, nrefs, attributable, preds, branches \
-            in _warehouse_refs(query, warehouse):
-        eff = ([preds + b for b in branches] if preds else branches) \
-            if branches else None
-        # the pruned read below only fires when skipping is enabled
-        # AND the reference is attributable with mined predicates; any
-        # other read (opt-out included) executes as a plain full scan,
-        # so the governor must estimate it as one — a budget between
-        # pruned and full bytes must refuse a read that will not
-        # actually be pruned
-        will_prune = (enabled and attributable
-                      and bool(preds or branches))
-        stats = plan = None
-        if nrefs and (enforce or will_prune):
-            # plan ONCE: enforcement and the pruned read share it
+    reads = _warehouse_refs(query, warehouse)
+    # with no budget only the reads that prune are planned; the others
+    # read plain and nothing prices them
+    admitted = [r for r in reads if r.refs and (enforce or any(r.branches))]
+    external = (_externaldata_scans(query, _externaldata_roots_effective(
+        externaldata_roots)) if enforce else [])
+    _est, plans = _skip.admit(external + admitted, max_scan_bytes,
+                              price=enforce)
+    plan_of = dict(zip((r.name for r in admitted), plans[len(external):]))
+    for read in reads:
+        if read.name in plan_of and any(read.branches):
             try:
-                stats = _skip.load_stats(path)
-                if not will_prune:
-                    # full scan (multi-read, bare, or pruning opted
-                    # out): estimate it as one
-                    plan = _skip.plan_skip(path, [], stats=stats)
-                elif eff is not None:
-                    plan = _skip.plan_skip_any(path, eff, stats=stats)
-                else:
-                    plan = _skip.plan_skip(path, preds, stats=stats)
-            except Exception:  # noqa: BLE001 — advisory/plain stands
-                stats = plan = None
-        if enforce and nrefs and plan is not None:
-            # the predicates arg only feeds the row estimate; bytes
-            # come from the shared plan
-            est = _skip.estimate_scan(path, [], stats=stats, plan=plan)
-            # fallback (no-stats / stats-stale) estimates count at
-            # their honest full-scan bytes (r10 verdict #1), env
-            # opt-out in skipping.govern_fallback — matching the SQL
-            # engine's governor exactly
-            counted = (est["fallback"] is None
-                       or _skip.govern_fallback())
-            if counted and est["bytes_kept"] > max_scan_bytes:
-                from corkscrew_spark.engine import ScanBudgetExceeded
-
-                remedy = (
-                    "add a more selective leading `where` or "
-                    "re-cluster the table"
-                    if est["fallback"] is None else
-                    f"its skipping stats are unavailable "
-                    f"({est['fallback']}), so the estimate is the "
-                    "full table — run skipping.compute_stats/"
-                    "refresh_stats on it, or set "
-                    "CORKSCREW_SCAN_BUDGET_ALLOW_NOSTATS=1 to "
-                    "exempt legacy stats-less tables")
-                raise ScanBudgetExceeded(
-                    f"estimated scan of {name} is "
-                    f"{est['bytes_kept']:,} bytes "
-                    f"({est['files_kept']} of {est['files_total']} "
-                    f"files) — over the {max_scan_bytes:,}-byte "
-                    f"budget; {remedy}")
-            if counted:
-                admitted_bytes += est["bytes_kept"] * max(nrefs, 1)
-                admitted_reads += max(nrefs, 1)
-                if admitted_bytes > max_scan_bytes:
-                    from corkscrew_spark.engine import \
-                        ScanBudgetExceeded
-
-                    raise ScanBudgetExceeded(
-                        "estimated STATEMENT scan is "
-                        f"{admitted_bytes:,} bytes across "
-                        f"{admitted_reads} table reads (latest: "
-                        f"{name}) — over the {max_scan_bytes:,}-byte"
-                        " budget; the ceiling applies to the "
-                        "query's total I/O, not per reference")
-        if will_prune and plan is not None:
-            try:
-                if eff is not None:
-                    resolved[name] = _skip.read_skipping_any(
-                        spark, path, eff, stats=stats, plan=plan)
-                else:
-                    resolved[name] = _skip.read_skipping(
-                        spark, path, preds, stats=stats, plan=plan)
+                resolved[read.name] = _skip.read_admitted(
+                    spark, read, plan_of[read.name])
                 continue
             except Exception:  # noqa: BLE001 — plain read stands
                 pass
@@ -4433,9 +4290,9 @@ def kql_to_df_skipping(spark, query: str, warehouse: dict[str, str],
         # per query. Word-mention is the sound upper bound, not the
         # parser's ref count, so a reference shape the parser misses
         # still registers its table.
-        if nrefs or re.search(rf"(?<!\w){re.escape(name)}(?!\w)",
-                              query, re.IGNORECASE):
-            resolved[name] = spark.read.parquet(path)
+        if read.refs or re.search(rf"(?<!\w){re.escape(read.name)}(?!\w)",
+                                  query, re.IGNORECASE):
+            resolved[read.name] = spark.read.parquet(read.path)
     return kql_to_df(query, resolved, externaldata_roots)
 
 

@@ -51,10 +51,12 @@ import threading
 import time
 import urllib.parse
 import zlib
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .engine import ScanBudgetExceeded
 from .warehouse import _COMMIT_LOG, _STATS_FILE
 
 #: Supported predicate operators, AND-combined: ``(col, op, value)``;
@@ -669,6 +671,18 @@ _STATS_CACHE_MAX = 64
 _STATS_CACHE_LOCK = threading.Lock()
 
 
+def _stats_usable(stats) -> bool:
+    """Does a parsed stats file carry every key the planner and the
+    pricing read: the snapshot time, and per file a row count and a
+    column-stats map?"""
+    if not (isinstance(stats, dict) and isinstance(stats.get("ts_ns"), int)
+            and isinstance(stats.get("files"), dict)):
+        return False
+    return all(isinstance(rec, dict) and "rows" in rec
+               and isinstance(rec.get("stats"), dict)
+               for rec in stats["files"].values())
+
+
 def load_stats(path: str) -> dict | None:
     p = _stats_path(path)
     try:
@@ -684,10 +698,10 @@ def load_stats(path: str) -> dict | None:
         with open(p) as fh:
             stats = json.load(fh)
     except (OSError, ValueError):
-        # a corrupt/raced stats file must degrade like a MISSING one
-        # (plain read, governed at the full-scan fallback estimate) —
-        # raising here would bubble into the engine's advisory
-        # except-continue and exempt the table from admission control
+        stats = None
+    if not _stats_usable(stats):
+        # a corrupt, raced or malformed stats file degrades exactly like
+        # a MISSING one: plain read, priced at the full listing bytes
         return None
     with _STATS_CACHE_LOCK:
         if p not in _STATS_CACHE and \
@@ -1116,22 +1130,6 @@ def _plan(path: str, branches: list[list[tuple]],
             "unknown": unknown, "fallback": None}
 
 
-def govern_fallback() -> bool:
-    """Whether an armed scan budget COUNTS fallback estimates — a
-    table with no ``_column_stats.json``, or one fully invalidated by
-    a rewrite since the stats snapshot — at their honest full-scan
-    bytes (``estimate_scan``'s fallback branch already returns
-    ``bytes_kept == bytes_total`` over the actual listing). Default
-    TRUE (r10 verdict #1: at 100 TB the tables most likely to be
-    missing stats are exactly the ones admission control must not
-    admit silently; the previous behavior — fallback reads neither
-    refused nor summed — was the last ungoverned escape). Env
-    ``CORKSCREW_SCAN_BUDGET_ALLOW_NOSTATS=1`` restores the legacy
-    exemption for deployments with intentionally stats-less tables."""
-    return os.environ.get(
-        "CORKSCREW_SCAN_BUDGET_ALLOW_NOSTATS", "0") != "1"
-
-
 def estimate_scan(path: str, predicates: list[tuple],
                   stats: dict | None = None,
                   plan: dict | None = None,
@@ -1325,11 +1323,13 @@ def estimate_scan_any(path: str, branches: list[list[tuple]],
     total_known = sum(rec.get("rows", 0)
                       for rec in stats["files"].values())
     # the union plan already walked the CURRENT listing (kept+pruned);
-    # per-branch re-plans reuse it instead of N more directory walks
+    # per-branch passes reuse it instead of N more directory walks. They
+    # call the kernel directly: a bound is not a plan of the read
     listing = plan["kept"] + plan["pruned"]
     upper = 0
     for branch in branches:
-        bplan = plan_skip(path, branch, stats=stats, files=listing)
+        _validate_ops(branch)
+        bplan = _plan(path, [list(branch)], stats, files=listing)
         if bplan["fallback"] is not None:
             return out
         fresh = (set(bplan["kept"]) - set(bplan["stale"])
@@ -1339,3 +1339,104 @@ def estimate_scan_any(path: str, branches: list[list[tuple]],
         upper += sum(stats["files"][rel]["rows"] for rel in fresh)
     out["rows_est_upper"] = min(upper, total_known)
     return out
+
+
+class ScanRead(NamedTuple):
+    """One resolved read of a statement, as scan admission sees it.
+    ``branches`` is the read's predicate in DNF: one AND-list per
+    branch, ``[[]]`` for a read that prunes nothing. ``refs`` counts
+    how often the statement scans it (each reference is its own scan).
+    ``files`` is the caller's cached CURRENT listing (None: walk).
+    ``nbytes`` marks a read of raw files with no table behind it
+    (``path`` None, ``files`` the paths): it costs what they weigh."""
+    name: str
+    path: str | None
+    branches: list[list[tuple]]
+    refs: int = 1
+    files: list[str] | None = None
+    nbytes: int | None = None
+
+
+def admit(reads: list[ScanRead], max_scan_bytes: int | None = None,
+          price: bool = True) -> tuple[dict, list[dict | None]]:
+    """THE scan-admission decision for one statement, shared by the SQL
+    engine, the KQL surface and both dry-runs (a dry-run is this call
+    with no budget). Per read, in order: plan it ONCE (``plan_skip``
+    for one branch, ``plan_skip_any`` for several), price that plan
+    (``estimate_scan`` / ``estimate_scan_any``), add bytes × refs to
+    the statement total, and, with a budget, raise
+    ``ScanBudgetExceeded`` on the first read or running total over it —
+    before any file opens. A table without usable stats prices at its
+    full listing bytes. ``price=False`` plans only: an execution with
+    no budget reads no estimate.
+
+    Returns ``({"tables": {name: widest estimate}, "bytes_kept":
+    statement total, "reads": scans}, plans)`` with each read's plan
+    (None for raw-file reads), for the pruned reads to reuse."""
+    tables: dict[str, dict] = {}
+    plans: list[dict | None] = []
+    total = scans = 0
+    for read in reads:
+        one = len(read.branches) == 1
+        plan = stats = None
+        if read.nbytes is None:
+            stats = load_stats(read.path)
+            plan = (plan_skip(read.path, read.branches[0], stats=stats,
+                              files=read.files) if one else
+                    plan_skip_any(read.path, read.branches, stats=stats,
+                                  files=read.files))
+        plans.append(plan)
+        if not (price or max_scan_bytes is not None):
+            continue
+        if plan is None:
+            n = len(read.files)
+            est = {"files_total": n, "files_kept": n,
+                   "bytes_total": read.nbytes, "bytes_kept": read.nbytes,
+                   "rows_est_matched": None, "fallback": None}
+        elif one:
+            est = estimate_scan(read.path, read.branches[0], stats=stats,
+                                plan=plan, files=read.files)
+        else:
+            est = estimate_scan_any(read.path, read.branches, stats=stats,
+                                    plan=plan, files=read.files)
+        key = read.name.lower()
+        if key not in tables or est["bytes_kept"] > tables[key]["bytes_kept"]:
+            tables[key] = est
+        total += est["bytes_kept"] * read.refs
+        scans += read.refs
+        if max_scan_bytes is None:
+            continue
+        if est["bytes_kept"] > max_scan_bytes:
+            if plan is None:
+                remedy = ("raw files are priced at raw file weight and "
+                          "cannot be pruned — convert them to a "
+                          "stats-bearing warehouse table to scan less")
+            elif est["fallback"] is not None:
+                remedy = (f"its skipping stats are unavailable "
+                          f"({est['fallback']}), so the estimate is the "
+                          "full table — run skipping.compute_stats/"
+                          "refresh_stats on it")
+            else:
+                remedy = ("add a more selective predicate or re-cluster "
+                          "the table")
+            raise ScanBudgetExceeded(
+                f"estimated scan of {read.name} is {est['bytes_kept']:,} "
+                f"bytes ({est['files_kept']} of {est['files_total']} "
+                f"files) — over the {max_scan_bytes:,}-byte budget; "
+                f"{remedy}")
+        if total > max_scan_bytes:
+            raise ScanBudgetExceeded(
+                f"estimated STATEMENT scan is {total:,} bytes across "
+                f"{scans} table reads (latest: {read.name}) — over the "
+                f"{max_scan_bytes:,}-byte budget; the ceiling applies to "
+                "the statement's total I/O, not per reference")
+    return {"tables": tables, "bytes_kept": total, "reads": scans}, plans
+
+
+def read_admitted(spark: SparkSession, read: ScanRead,
+                  plan: dict) -> DataFrame:
+    """The pruned read behind an admitted ``read``, reusing its
+    admission ``plan`` (no second planning pass)."""
+    if len(read.branches) == 1:
+        return read_skipping(spark, read.path, read.branches[0], plan=plan)
+    return read_skipping_any(spark, read.path, read.branches, plan=plan)

@@ -188,7 +188,7 @@ def changed_partitions_since(path: str, ts_ns: int) -> list[str] | None:
 
 def read_table(spark: SparkSession, path: str,
                predicates: list[tuple] | None = None,
-               use_stats: bool | None = None,
+               use_stats: bool = True,
                predicates_any: list[list[tuple]] | None = None) -> DataFrame:
     """THE default read for a warehouse table directory. With
     ``predicates`` (AND-list of ``(col, op, value)``, ops per
@@ -200,8 +200,8 @@ def read_table(spark: SparkSession, path: str,
     ``predicates_any`` is the disjunctive form (an OR of AND-lists,
     pruned via ``skipping.plan_skip_any``); pass one or the other.
 
-    ``use_stats``: None = auto (honor env ``CORKSCREW_DATA_SKIPPING``,
-    default on), True/False = force. The SQL-surface twin is
+    ``use_stats=False`` is the plain filtered scan (the reference read
+    pruning must equal). The SQL-surface twin is
     ``QueryEngine.register_warehouse``."""
     from corkscrew_spark import skipping as _skip
 
@@ -214,8 +214,6 @@ def read_table(spark: SparkSession, path: str,
         return spark.read.parquet(path).limit(0)
     if not predicates and not predicates_any:
         return spark.read.parquet(path)
-    if use_stats is None:
-        use_stats = os.environ.get("CORKSCREW_DATA_SKIPPING", "1") != "0"
     if predicates_any:
         if not use_stats:
             return (spark.read.parquet(path)

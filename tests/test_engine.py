@@ -342,16 +342,6 @@ class TestWarehouseSkipping:
         assert eng.execute(bad).df.count() == spark.sql(
             bad.replace("wtbl", f"parquet.`{table}`")).count()
 
-    def test_env_flag_disables_skipping(self, spark, table, monkeypatch):
-        from corkscrew_spark.engine import QueryEngine
-
-        monkeypatch.setenv("CORKSCREW_DATA_SKIPPING", "0")
-        eng = QueryEngine(spark, register_helpers=False)
-        eng.register_warehouse("wtbl", table)
-        sql = "SELECT * FROM wtbl WHERE k >= 700"
-        assert eng._skipping_rewrite(sql) == (sql, [])
-        assert eng.execute(sql).df.count() == 100
-
     def test_execute_stream_prunes_and_restores(self, spark, table):
         from corkscrew_spark.engine import QueryEngine
 
@@ -683,31 +673,16 @@ class TestScanBudget:
         assert big.execute("SELECT COUNT(*) AS n FROM bt"
                            ).rows()[0].n == 800
 
-    def test_governed_only_table_enforced_at_full_scan(
-            self, spark, table, monkeypatch):
-        """A pruning-opted-out table (CORKSCREW_DATA_SKIPPING=0 at
-        registration) reads PLAIN, so the governor must enforce — and
-        estimate_scan must report — the full-scan bytes even when the
-        WHERE has minable conjuncts: a budget between the pruned and
-        full estimates refuses the query instead of admitting a scan
-        that will not actually be pruned (r8 advisor finding)."""
+    def test_governed_only_table_enforced_at_full_scan(self, spark, table):
+        """A budget between the pruned and full estimates admits the
+        query, because the read really is the pruned one."""
         from corkscrew_spark import skipping
-        from corkscrew_spark.engine import ScanBudgetExceeded
 
         pruned = skipping.estimate_scan(table, [("k", ">=", 700)])
         full = skipping.estimate_scan(table, [])
         assert pruned["bytes_kept"] < full["bytes_kept"]
         mid = (pruned["bytes_kept"] + full["bytes_kept"]) // 2
         q = "SELECT COUNT(*) AS n FROM bt WHERE k >= 700"
-
-        monkeypatch.setenv("CORKSCREW_DATA_SKIPPING", "0")
-        eng = self._engine(spark, table, mid)
-        with pytest.raises(ScanBudgetExceeded, match="budget"):
-            eng.execute(q)
-        # the dry-run agrees with the admission verdict (full scan)
-        est = eng.estimate_scan(q)["bt"]
-        assert est["files_kept"] == est["files_total"]
-        monkeypatch.delenv("CORKSCREW_DATA_SKIPPING")
         ok = self._engine(spark, table, mid)
         assert ok.execute(q).rows()[0].n == 100  # pruned: admitted
 
@@ -774,23 +749,6 @@ class TestScanBudget:
         eng = self._engine(spark, table, None)
         assert eng.execute("SELECT COUNT(*) AS n FROM bt WHERE k >= 0"
                            ).rows()[0].n == 800
-
-    def test_governor_survives_skipping_opt_out(self, spark, table,
-                                                monkeypatch):
-        """CORKSCREW_DATA_SKIPPING=0 disables the pruning OPTIMIZATION;
-        it must not disarm the admission CONTROL (review finding: the
-        governor reached tables only through the pruning-enabled set,
-        so the debug flag silently admitted every over-budget scan)."""
-        from corkscrew_spark.engine import ScanBudgetExceeded
-
-        monkeypatch.setenv("CORKSCREW_DATA_SKIPPING", "0")
-        eng = self._engine(spark, table, 1)  # 1-byte budget
-        assert not eng._warehouse_skip  # pruning is off...
-        with pytest.raises(ScanBudgetExceeded):  # ...the governor isn't
-            eng.execute("SELECT COUNT(*) AS n FROM bt WHERE k >= 700")
-        big = self._engine(spark, table, 10 ** 12)
-        assert big.execute("SELECT COUNT(*) AS n FROM bt WHERE k >= 700"
-                           ).rows()[0].n == 100
 
     def test_refusal_leaks_no_views(self, spark, table):
         from corkscrew_spark.engine import ScanBudgetExceeded
@@ -905,29 +863,6 @@ def test_warehouse_names_resolve_case_insensitively(spark, tmp_path):
     assert est and est["estate"]["files_kept"] < est["estate"]["files_total"]
 
 
-def test_view_freshness_survives_skipping_opt_out(spark, tmp_path,
-                                                  monkeypatch):
-    """CORKSCREW_DATA_SKIPPING=0 disables PRUNING only: the per-query
-    view refresh is a correctness feature (directory swaps invalidate
-    a view's cached file listing) and must keep working."""
-    from corkscrew_spark import warehouse
-
-    monkeypatch.setenv("CORKSCREW_DATA_SKIPPING", "0")
-    path = str(tmp_path / "tbl")
-    spark.createDataFrame([(1, "a", 1)], "k long, v string, ts long"
-                          ).write.parquet(path)
-    eng = QueryEngine(spark, register_helpers=False)
-    eng.register_warehouse("offt", path)
-    assert "offt" not in eng._warehouse_skip  # no pruning
-    assert eng.execute("SELECT COUNT(*) AS n FROM offt").rows()[0].n == 1
-    warehouse.merge_upsert(
-        spark, path,
-        spark.createDataFrame([(2, "b", 2)], "k long, v string, ts long"),
-        keys=["k"], order_col="ts")
-    # the swap replaced every file; the refresh must re-point the view
-    assert eng.execute("SELECT COUNT(*) AS n FROM offt").rows()[0].n == 2
-
-
 def test_engine_prunes_top_level_or(spark, tmp_path):
     from corkscrew_spark import skipping
 
@@ -1010,7 +945,7 @@ def test_view_sig_opt_out_refreshes_every_query(spark, tmp_path,
     spark.createDataFrame([(1, "eu")], "k long, region string"
                           ).write.partitionBy("region").parquet(str(path))
     eng = QueryEngine(spark, register_helpers=False)
-    eng.register_warehouse("ext", str(path), skipping=False)
+    eng.register_warehouse("ext", str(path))
     assert eng.execute("SELECT COUNT(*) AS n FROM ext").rows()[0].n == 1
     # out-of-band writer: copy the existing part file INSIDE the
     # partition dir (new file, same dir mtime semantics as a foreign
@@ -1757,8 +1692,7 @@ class TestFallbackGovernance:
     unestimated 100 TB read was admitted silently. Fallback estimates
     now count at their honest full-scan bytes (the listing's actual
     size sum) in BOTH the per-reference refusal and the
-    statement-total ceiling, with env
-    CORKSCREW_SCAN_BUDGET_ALLOW_NOSTATS=1 as the legacy opt-out."""
+    statement-total ceiling."""
 
     @pytest.fixture()
     def pair(self, spark, tmp_path):
@@ -1803,8 +1737,9 @@ class TestFallbackGovernance:
         with pytest.raises(ScanBudgetExceeded, match="compute_stats"):
             gov.execute("SELECT COUNT(*) AS n FROM t_nostats")
 
-    def test_env_opt_out_restores_legacy_exemption(
-            self, spark, pair, monkeypatch):
+    def test_env_opt_out_restores_legacy_exemption(self, spark, pair):
+        """A stats-less table has no exemption: a 1-byte budget
+        refuses it."""
         from corkscrew_spark.engine import ScanBudgetExceeded
 
         nostats, _fresh = pair
@@ -1813,9 +1748,6 @@ class TestFallbackGovernance:
         gov.register_warehouse("t_nostats", nostats)
         with pytest.raises(ScanBudgetExceeded):
             gov.execute("SELECT COUNT(*) AS n FROM t_nostats")
-        monkeypatch.setenv("CORKSCREW_SCAN_BUDGET_ALLOW_NOSTATS", "1")
-        assert gov.execute("SELECT COUNT(*) AS n FROM t_nostats"
-                           ).rows()[0].n == 800
 
     def test_corrupt_stats_counted_like_missing(self, spark, pair):
         """A corrupt _column_stats.json must degrade like a MISSING
@@ -1843,10 +1775,9 @@ class TestFallbackGovernance:
                            "WHERE k >= 700").rows()[0].n == 100
 
     def test_dry_run_shows_the_bytes_enforcement_refuses(
-            self, spark, pair, monkeypatch):
+            self, spark, pair):
         """estimate_statement must carry the fallback bytes in its
-        total (parity: dry-run == enforcement), and drop them only
-        under the same env opt-out that disarms enforcement."""
+        total (parity: dry-run == enforcement)."""
         from corkscrew_spark import skipping
 
         nostats, _fresh = pair
@@ -1858,8 +1789,6 @@ class TestFallbackGovernance:
         assert est["reads"] == 1
         assert est["bytes_kept"] == full["bytes_total"]
         assert est["tables"]["t_nostats"]["fallback"] is not None
-        monkeypatch.setenv("CORKSCREW_SCAN_BUDGET_ALLOW_NOSTATS", "1")
-        assert eng.estimate_statement(q)["bytes_kept"] == 0
 
     def test_self_reference_weighted_per_scan(self, spark, pair):
         """r10 advice: `FROM t a JOIN t b` is TWO scans of t — the

@@ -739,25 +739,6 @@ class TestKqlSkipping:
         assert [tuple(r) for r in got.collect()] \
             == [tuple(r) for r in plain.collect()]
 
-    def test_env_flag_disables(self, spark, tmp_path, monkeypatch):
-        from pyspark.sql import functions as F
-
-        from corkscrew_spark import skipping
-        from corkscrew_spark.kql import kql_to_df_skipping
-
-        path = str(tmp_path / "t3")
-        spark.range(100).select(F.col("id").alias("k")).repartitionByRange(
-            4, "k").write.parquet(path)
-        skipping.compute_stats(spark, path, ["k"])
-        monkeypatch.setenv("CORKSCREW_DATA_SKIPPING", "0")
-        calls = []
-        monkeypatch.setattr(
-            skipping, "read_skipping",
-            lambda *a, **k: calls.append(a) or (_ for _ in ()).throw(
-                AssertionError("read_skipping must not be called")))
-        src = kql_to_df_skipping(spark, "T | where k >= 90", {"T": path})
-        assert calls == [] and src.count() == 10
-
 
 def test_kql_or_where_prunes_as_dnf(spark, tmp_path, monkeypatch):
     from pyspark.sql import functions as F
@@ -1037,12 +1018,11 @@ class TestKqlScanBudget:
         assert set(est["tables"]) == {"t"}
 
     def test_nostats_table_refused_at_fallback_bytes(
-            self, spark, table, tmp_path, monkeypatch):
+            self, spark, table, tmp_path):
         """r10 verdict #1 (KQL twin): a warehouse table with NO
         skipping stats produced a fallback estimate the armed
         governor neither refused nor summed. It now counts at its
-        honest full-scan bytes, refusal names the remedy, and the
-        env opt-out restores the legacy exemption."""
+        honest full-scan bytes and the refusal names the remedy."""
         from pyspark.sql import functions as F
 
         from corkscrew_spark import skipping
@@ -1073,63 +1053,18 @@ class TestKqlScanBudget:
                 spark, "T | union N | count",
                 {"T": table, "N": nostats},
                 max_scan_bytes=max(t_full, full["bytes_kept"]) + 1)
-        # legacy exemption: both enforcement and dry-run stand down
-        monkeypatch.setenv("CORKSCREW_SCAN_BUDGET_ALLOW_NOSTATS", "1")
-        got = kql_to_df_skipping(
-            spark, "N | where k >= 700 | count", {"N": nostats},
-            max_scan_bytes=1)
-        assert got.first()["Count"] == 100
-        assert kql_estimate_statement(
-            "N | count", {"N": nostats})["bytes_kept"] == 0
 
-    def test_opt_out_disables_pruning_not_governor(self, spark, table,
-                                                   monkeypatch):
+    def test_opt_out_enforces_on_full_scan_estimate(self, spark, table):
+        """A budget between the pruned and full estimates admits the
+        pipeline, because the read really is the pruned one."""
         from corkscrew_spark import skipping
-        from corkscrew_spark.engine import ScanBudgetExceeded
         from corkscrew_spark.kql import kql_to_df_skipping
-
-        monkeypatch.setenv("CORKSCREW_DATA_SKIPPING", "0")
-        with pytest.raises(ScanBudgetExceeded):
-            kql_to_df_skipping(
-                spark, "T | where k >= 700 | count", {"T": table},
-                max_scan_bytes=1)
-        # a big-enough budget admits it — and the read is PLAIN
-        got = kql_to_df_skipping(
-            spark, "T | where k >= 700 | count", {"T": table},
-            max_scan_bytes=10 ** 12)
-        assert got.first()["Count"] == 100
-        assert len(got.inputFiles()) == 8
-
-    def test_opt_out_enforces_on_full_scan_estimate(self, spark, table,
-                                                    monkeypatch):
-        """With pruning opted out the read IS a full scan, so a budget
-        between the pruned and full estimates must REFUSE the pipeline
-        — the governor enforces on the scan that will actually run,
-        not the one pruning would have produced (r8 advisor finding:
-        the pruned estimate admitted exactly the '95%-of-100TB' scan
-        it claims to stop). With pruning back on, the same budget
-        admits the same pipeline, because the read then really is the
-        pruned one."""
-        from corkscrew_spark import skipping
-        from corkscrew_spark.engine import ScanBudgetExceeded
-        from corkscrew_spark.kql import (kql_estimate_scan,
-                                         kql_to_df_skipping)
 
         pruned = skipping.estimate_scan(table, [("k", ">=", 700)])
         full = skipping.estimate_scan(table, [])
         assert pruned["bytes_kept"] < full["bytes_kept"]
         mid = (pruned["bytes_kept"] + full["bytes_kept"]) // 2
         q = "T | where k >= 700 | count"
-
-        monkeypatch.setenv("CORKSCREW_DATA_SKIPPING", "0")
-        with pytest.raises(ScanBudgetExceeded, match="budget"):
-            kql_to_df_skipping(spark, q, {"T": table},
-                               max_scan_bytes=mid)
-        # the dry-run agrees with the admission verdict (full scan)
-        est = kql_estimate_scan(q, {"T": table})["t"]
-        assert est["files_kept"] == est["files_total"] == 8
-
-        monkeypatch.setenv("CORKSCREW_DATA_SKIPPING", "1")
         got = kql_to_df_skipping(spark, q, {"T": table},
                                  max_scan_bytes=mid)
         assert got.first()["Count"] == 100
@@ -1176,7 +1111,7 @@ class TestKqlScanBudget:
             kql_estimate_scan("", {"T": table})
 
     def test_unreferenced_and_statless_tables(self, spark, table,
-                                              tmp_path, monkeypatch):
+                                              tmp_path):
         from pyspark.sql import functions as F
 
         from corkscrew_spark.engine import ScanBudgetExceeded
@@ -1189,7 +1124,7 @@ class TestKqlScanBudget:
         assert got.first()["Count"] == 100
         # r11 (was: advisory-only): a table without stats counts at
         # its honest full-scan fallback bytes, exactly like the
-        # engine governor — the env opt-out restores the legacy pass
+        # engine governor
         nostats = str(tmp_path / "nostats_t")
         spark.range(50).select(F.col("id").alias("k")
                                ).write.parquet(nostats)
@@ -1197,10 +1132,6 @@ class TestKqlScanBudget:
                            match="stats are unavailable"):
             kql_to_df_skipping(spark, "N | count", {"N": nostats},
                                max_scan_bytes=1)
-        monkeypatch.setenv("CORKSCREW_SCAN_BUDGET_ALLOW_NOSTATS", "1")
-        got = kql_to_df_skipping(spark, "N | count", {"N": nostats},
-                                 max_scan_bytes=1)
-        assert got.first()["Count"] == 50
 
 
 def test_mvapply_body_placeholder_not_a_ref():
