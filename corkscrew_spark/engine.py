@@ -743,7 +743,10 @@ class QueryEngine:
                     if not any(read.branches):
                         continue  # bare or unprunable: the plain view
                     try:
-                        pruned = _skip.read_admitted(self.spark, read, plan)
+                        # typed by the plain view validation refreshed
+                        pruned = _skip.read_admitted(
+                            self.spark, read, plan,
+                            base=self.spark.table(read.name))
                     except Exception:  # noqa: BLE001
                         continue  # unreadable stats/files: plain view
                     view = f"{read.name}__skip_{next(_SKIP_SEQ)}"

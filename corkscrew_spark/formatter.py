@@ -70,13 +70,4 @@ def format_json(df: DataFrame, limit: int = 10000) -> str:
     return json.dumps([{c: enc(v) for c, v in zip(cols, r)} for r in data], indent=2)
 
 
-def export_csv(df: DataFrame, path: str) -> None:
-    """Distributed CSV export (the scale path — no driver collect)."""
-    df.write.mode("overwrite").option("header", "true").csv(path)
-
-
-def export_json(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").json(path)
-
-
 FORMATTERS = {"table": format_table, "csv": format_csv, "json": format_json}

@@ -4276,13 +4276,6 @@ def kql_to_df_skipping(spark, query: str, warehouse: dict[str, str],
                               price=enforce)
     plan_of = dict(zip((r.name for r in admitted), plans[len(external):]))
     for read in reads:
-        if read.name in plan_of and any(read.branches):
-            try:
-                resolved[read.name] = _skip.read_admitted(
-                    spark, read, plan_of[read.name])
-                continue
-            except Exception:  # noqa: BLE001 — plain read stands
-                pass
         # a table whose name is never word-mentioned in the query text
         # CANNOT be referenced (any reference must spell the name):
         # skip its eager spark.read.parquet — on a 50-table warehouse
@@ -4290,9 +4283,17 @@ def kql_to_df_skipping(spark, query: str, warehouse: dict[str, str],
         # per query. Word-mention is the sound upper bound, not the
         # parser's ref count, so a reference shape the parser misses
         # still registers its table.
-        if read.refs or re.search(rf"(?<!\w){re.escape(read.name)}(?!\w)",
-                                  query, re.IGNORECASE):
-            resolved[read.name] = spark.read.parquet(read.path)
+        if not (read.refs or re.search(
+                rf"(?<!\w){re.escape(read.name)}(?!\w)", query,
+                re.IGNORECASE)):
+            continue
+        resolved[read.name] = plain = spark.read.parquet(read.path)
+        if read.name in plan_of and any(read.branches):
+            try:
+                resolved[read.name] = _skip.read_admitted(
+                    spark, read, plan_of[read.name], base=plain)
+            except Exception:  # noqa: BLE001 — plain read stands
+                pass
     return kql_to_df(query, resolved, externaldata_roots)
 
 

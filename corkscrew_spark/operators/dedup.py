@@ -194,24 +194,6 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str, n: int = 3,
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def minhash_signatures(df: DataFrame, id_col: str, text_col: str, n: int = 3,
-                       num_hashes: int = 32) -> DataFrame:
-    """Per-document MinHash signature: for hash seed i, min over shingles
-    of xxhash64(shingle, i). One narrow exploded relation + a single
-    groupBy — the min() partial-aggregates map-side, so the shuffle
-    carries ~|docs|×num_hashes rows regardless of corpus size.
-
-    Returns (doc, pos, minhash).
-    """
-    with_toks = _spread(df, id_col).select(
-        F.col(id_col).alias("doc"), tokens(text_col).alias("t"))
-    return (
-        with_toks.filter(F.size("t") >= n)
-        .select("doc", F.posexplode(
-            F.expr(_minhash_sig_sql(n, num_hashes))).alias("pos", "minhash"))
-    )
-
-
 def _minhash_sig_sql(n: int, num_hashes: int) -> str:
     """SQL for the full MinHash signature array over a bound token column
     ``t`` — see ``_minhash_sig_arrays`` for the shape rationale."""

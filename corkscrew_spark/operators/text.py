@@ -114,20 +114,6 @@ def prefix_key(text_col: str | Column, n_tokens: int = 5) -> Column:
     return F.array_join(F.slice(tokens(text_col), 1, n_tokens), " ")
 
 
-def with_text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full feature set as columns (single projection pass)."""
-    return df.withColumns(
-        {
-            "n_tokens": token_count(text_col),
-            "avg_token_len": F.round(avg_token_len(text_col), 4),
-            "stopword_ratio": F.round(stopword_ratio(text_col), 4),
-            "quality_score": quality_score(text_col),
-            "lang_pred": language_id(text_col),
-            "fingerprint": fingerprint(text_col),
-        }
-    )
-
-
 #: PII redaction patterns, ordered (earlier rules run first). Patterns
 #: stay inside the Java-regex ∩ RE2 shared subset (no backreferences, no
 #: lookaround) so the same rule set is replayable in any engine.
@@ -233,24 +219,6 @@ def with_repetition_signals(df: DataFrame, id_col: str, text_col: str) -> DataFr
 # ---------------------------------------------------------------------------
 # C4-style document heuristics (Raffel et al. 2020 cleaning rules)
 # ---------------------------------------------------------------------------
-
-def c4_keep(text_col: str | Column, min_words: int = 50) -> Column:
-    """The C4 keep verdict as one boolean Column (the predicate form of
-    c4_quality_flags for pipeline filters): >= half the lines end in
-    terminal punctuation, >= ``min_words`` whitespace tokens, no
-    'lorem ipsum', no '{'. Integer/boolean arithmetic only — map-only
-    and engine-reproducible."""
-    text = F.col(text_col) if isinstance(text_col, str) else text_col
-    lines = F.split(text, "\n")
-    punct_lines = F.size(F.filter(lines, lambda ln: ln.rlike(r"[.!?]$")))
-    words = F.size(F.split(F.trim(text), r"\s+"))
-    return (
-        (punct_lines * 2 >= F.size(lines))
-        & (words >= min_words)
-        & ~F.lower(text).contains("lorem ipsum")
-        & ~text.contains("{")
-    )
-
 
 def c4_quality_flags(df: DataFrame, id_col: str, text_col: str = "text",
                      min_words: int = 50) -> DataFrame:

@@ -1224,7 +1224,8 @@ def _est_matched(stats: dict, fresh: set, predicates: list[tuple]):
 def read_skipping(spark: SparkSession, path: str,
                   predicates: list[tuple],
                   stats: dict | None = None,
-                  plan: dict | None = None) -> DataFrame:
+                  plan: dict | None = None,
+                  base: DataFrame | None = None) -> DataFrame:
     """Predicate-filtered read that opens only the files the zone maps
     cannot rule out. ``predicates`` is an AND-list of
     ``(col, op, value)`` with ops from ``_OPS``. Falls back to a plain
@@ -1233,18 +1234,30 @@ def read_skipping(spark: SparkSession, path: str,
     ``spark.read.parquet(path).filter(...)`` — stats only change how
     many files are opened. Pass ``plan`` from an earlier ``plan_skip``
     of the SAME predicates to skip re-planning (the engine's governed
-    path plans once for enforcement and reuses it here)."""
-    flt = predicate_filter(predicates)
+    path plans once for enforcement and reuses it here), and the
+    table's plain read as ``base`` when the caller holds one."""
     if plan is None:
         plan = plan_skip(path, predicates, stats=stats)
+    return _pruned_read(spark, path, plan, predicate_filter(predicates),
+                        base)
+
+
+def _pruned_read(spark: SparkSession, path: str, plan: dict, flt,
+                 base: DataFrame | None) -> DataFrame:
+    """THE query read over a subset of a table's files: the files
+    ``plan`` kept, typed by the table's plain read ``base`` (read here
+    when None), ``flt`` re-applied. Pruning never changes the columns:
+    a kept file lacking one reads it as null, as the plain read does,
+    and no kept footer is read for a schema."""
+    if base is None:
+        base = spark.read.parquet(path)
     if plan["fallback"] is not None:
-        return spark.read.parquet(path).filter(flt)
+        return base.filter(flt)
     if not plan["kept"]:
-        # nothing can match: typed-empty via one footer, no data read
-        return spark.read.parquet(path).filter(F.lit(False))
+        return base.filter(F.lit(False))
     paths = [os.path.join(path, rel) for rel in plan["kept"]]
-    return (spark.read.option("basePath", path).parquet(*paths)
-            .filter(flt))
+    return (spark.read.schema(base.schema).option("basePath", path)
+            .parquet(*paths).filter(flt))
 
 
 def plan_skip_any(path: str, branches: list[list[tuple]],
@@ -1273,21 +1286,16 @@ def predicate_filter_any(branches: list[list[tuple]]):
 def read_skipping_any(spark: SparkSession, path: str,
                       branches: list[list[tuple]],
                       stats: dict | None = None,
-                      plan: dict | None = None) -> DataFrame:
+                      plan: dict | None = None,
+                      base: DataFrame | None = None) -> DataFrame:
     """Disjunctive twin of ``read_skipping``: opens only the files no
     branch can match is pruned from, re-applies the full OR-of-ANDs
     predicate, so the result is ALWAYS identical to the plain filtered
-    scan. ``plan`` as in ``read_skipping``."""
-    flt = predicate_filter_any(branches)
+    scan. ``plan`` and ``base`` as in ``read_skipping``."""
     if plan is None:
         plan = plan_skip_any(path, branches, stats=stats)
-    if plan["fallback"] is not None:
-        return spark.read.parquet(path).filter(flt)
-    if not plan["kept"]:
-        return spark.read.parquet(path).filter(F.lit(False))
-    paths = [os.path.join(path, rel) for rel in plan["kept"]]
-    return (spark.read.option("basePath", path).parquet(*paths)
-            .filter(flt))
+    return _pruned_read(spark, path, plan, predicate_filter_any(branches),
+                        base)
 
 
 def estimate_scan_any(path: str, branches: list[list[tuple]],
@@ -1434,9 +1442,12 @@ def admit(reads: list[ScanRead], max_scan_bytes: int | None = None,
 
 
 def read_admitted(spark: SparkSession, read: ScanRead,
-                  plan: dict) -> DataFrame:
+                  plan: dict, base: DataFrame | None = None) -> DataFrame:
     """The pruned read behind an admitted ``read``, reusing its
-    admission ``plan`` (no second planning pass)."""
+    admission ``plan`` (no second planning pass); ``base`` as in
+    ``read_skipping``."""
     if len(read.branches) == 1:
-        return read_skipping(spark, read.path, read.branches[0], plan=plan)
-    return read_skipping_any(spark, read.path, read.branches, plan=plan)
+        return read_skipping(spark, read.path, read.branches[0], plan=plan,
+                             base=base)
+    return read_skipping_any(spark, read.path, read.branches, plan=plan,
+                             base=base)

@@ -248,11 +248,12 @@ def read_version(spark: SparkSession, path: str, version: int | None = None,
     that can match — the predicate is always re-applied, so the result
     is identical to filtering the plain snapshot read."""
     _entry, vdir = _resolve_version(path, version, as_of_ts)
+    plain = spark.read.parquet(vdir)
     if predicates:
         from corkscrew_spark import skipping
 
-        return skipping.read_skipping(spark, vdir, predicates)
-    return spark.read.parquet(vdir)
+        return skipping.read_skipping(spark, vdir, predicates, base=plain)
+    return plain
 
 
 def compute_stats_version(spark: SparkSession, path: str,

@@ -188,41 +188,34 @@ def changed_partitions_since(path: str, ts_ns: int) -> list[str] | None:
 
 def read_table(spark: SparkSession, path: str,
                predicates: list[tuple] | None = None,
-               use_stats: bool = True,
                predicates_any: list[list[tuple]] | None = None) -> DataFrame:
     """THE default read for a warehouse table directory. With
     ``predicates`` (AND-list of ``(col, op, value)``, ops per
     ``skipping._OPS``) the read consults the table's zone-map/bloom
     statistics when they exist and opens only the files that can match
-    — the filter is always re-applied, so the result is identical to a
-    plain filtered scan no matter how stale the stats are. Without
-    predicates (or without stats) it is a plain scan.
+    — the filter is always re-applied and the columns are the plain
+    read's, so the result is identical to a plain filtered scan no
+    matter how stale the stats are. Without predicates (or without
+    stats) it is a plain scan.
     ``predicates_any`` is the disjunctive form (an OR of AND-lists,
     pruned via ``skipping.plan_skip_any``); pass one or the other.
-
-    ``use_stats=False`` is the plain filtered scan (the reference read
-    pruning must equal). The SQL-surface twin is
-    ``QueryEngine.register_warehouse``."""
+    The SQL-surface twin is ``QueryEngine.register_warehouse``."""
     from corkscrew_spark import skipping as _skip
 
     if predicates and predicates_any:
         raise ValueError("pass predicates OR predicates_any, not both")
+    plain = spark.read.parquet(path)
     if predicates_any is not None and not predicates_any:
         # an OR of ZERO branches is FALSE (matches nothing) — falling
         # through to a plain scan would return the whole table to a
         # caller whose DNF simplifier pruned every branch
-        return spark.read.parquet(path).limit(0)
-    if not predicates and not predicates_any:
-        return spark.read.parquet(path)
+        return plain.limit(0)
     if predicates_any:
-        if not use_stats:
-            return (spark.read.parquet(path)
-                    .filter(_skip.predicate_filter_any(predicates_any)))
-        return _skip.read_skipping_any(spark, path, predicates_any)
-    if not use_stats:
-        return (spark.read.parquet(path)
-                .filter(_skip.predicate_filter(predicates)))
-    return _skip.read_skipping(spark, path, predicates)
+        return _skip.read_skipping_any(spark, path, predicates_any,
+                                       base=plain)
+    if predicates:
+        return _skip.read_skipping(spark, path, predicates, base=plain)
+    return plain
 
 
 def read_changed(spark: SparkSession, path: str, since_ns: int,
@@ -327,11 +320,6 @@ def _hive_escape(value) -> str:
 def _partition_reldir(partition_cols: list[str], values: tuple) -> str:
     return "/".join(f"{c}={_hive_escape(v)}"
                     for c, v in zip(partition_cols, values))
-
-
-def _is_hive_partitioned(path: str, first_col: str) -> bool:
-    return os.path.isdir(path) and any(
-        e.startswith(first_col + "=") for e in os.listdir(path))
 
 
 def _layout_matches(path: str, partition_cols: list[str] | None) -> bool:
@@ -825,14 +813,6 @@ def _quantize(c: Column, lo: float, hi: float, bits: int) -> Column:
     scaled = ((c.cast("double") - F.lit(lo)) / F.lit(span)) * ((1 << bits) - 1)
     return F.least(F.greatest(F.round(scaled).cast("long"), F.lit(0)),
                    F.lit((1 << bits) - 1))
-
-
-def zorder_value(x: Column, y: Column, x_min: float, x_max: float,
-                 y_min: float, y_max: float, bits: int = 16) -> Column:
-    """Morton (Z-order) key interleaving ``bits`` quantized bits of two
-    columns — pure integer Column arithmetic, no UDF."""
-    return zorder_value_nd([x, y], [x_min, y_min], [x_max, y_max],
-                           bits=bits)
 
 
 def zorder_value_nd(cols: list[Column], mins: list[float],

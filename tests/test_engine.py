@@ -484,9 +484,37 @@ def test_read_table_default_path_prunes(spark, tmp_path):
         == sorted(r.k for r in want.collect())
     opened = got.select(F.input_file_name()).distinct().count()
     assert opened < 4
-    # forced off: same rows, full listing
-    off = warehouse.read_table(spark, path, preds, use_stats=False)
-    assert off.count() == got.count()
+
+
+def test_pruned_lookup_runs_one_job(spark, tmp_path):
+    """A bloom-pruned point lookup on a warm engine is ONE Spark job:
+    the pruned read takes its schema from the registered plain view
+    instead of inferring it from the kept files' footers (a second
+    job per lookup)."""
+    import uuid
+
+    from corkscrew_spark import skipping
+
+    path = str(tmp_path / "lk")
+    spark.range(800).selectExpr("id", "id % 7 AS v").repartition(
+        8, "id").write.parquet(path)
+    skipping.compute_stats(spark, path, ["id"], bloom_cols=["id"])
+    eng = QueryEngine(spark, register_helpers=False)
+    eng.register_warehouse("lk", path)
+    sql = "SELECT id, v FROM lk WHERE id = :id"
+    assert len(skipping.plan_skip(path, [("id", "=", 123)])["kept"]) < 8
+    assert [tuple(r) for r in eng.execute(sql, {"id": 7}).rows()] \
+        == [(7, 0)]
+    sc = spark.sparkContext
+    group = f"lookup-tripwire-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "pruned lookup job count")
+    try:
+        rows = eng.execute(sql, {"id": 123}).rows()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert [tuple(r) for r in rows] == [(123, 4)]
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= 1, f"pruned lookup ran {jobs} jobs"
 
 
 class TestJoinSkipping:

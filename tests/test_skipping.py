@@ -1525,3 +1525,58 @@ def test_bloom_bits_for_sizing():
                for s in range(5)):
             fps += 1
     assert fps / misses < 0.03  # ~1% target with slack
+
+
+@pytest.fixture(scope="module")
+def drifted(spark, tmp_path_factory):
+    """Four files of (k, v) plus an appended four of (k, v, extra),
+    zone maps on k. ``k < 100`` keeps one OLD file only."""
+    path = str(tmp_path_factory.mktemp("drift") / "tbl")
+    spark.range(400).selectExpr("id AS k", "id % 7 AS v") \
+        .repartitionByRange(4, "k").write.parquet(path)
+    warehouse.append(spark.range(400, 800).selectExpr(
+        "id AS k", "id % 7 AS v", "concat('x', id) AS extra")
+        .repartitionByRange(4, "k"), path)
+    skipping.compute_stats(spark, path, ["k"])
+    assert len(skipping.plan_skip(path, [("k", "<", 100)])["kept"]) == 1
+    return path
+
+
+@pytest.mark.parametrize("surface", ["sql_star", "sql_extra", "read_table",
+                                     "kql_project"])
+def test_pruned_read_keeps_the_plain_schema(spark, drifted, surface):
+    """Every pruned read carries the table's plain-read schema: a kept
+    file without ``extra`` reads it as null instead of dropping the
+    column (or failing a query that validated against the plain view).
+    The plain read merges footers here, so its schema holds ``extra``
+    whichever file sorts first. ``versioned.read_version`` is not a
+    surface: no versioned writer mixes schemas inside one snapshot
+    (``upsert_version`` refuses new columns)."""
+    from corkscrew_spark.engine import QueryEngine
+    from corkscrew_spark.kql import kql_to_df_skipping
+
+    conf = "spark.sql.parquet.mergeSchema"
+    spark.conf.set(conf, "true")
+    try:
+        plain = spark.read.parquet(drifted).filter("k < 100")
+        assert "extra" in plain.columns
+        if surface.startswith("sql"):
+            eng = QueryEngine(spark, register_helpers=False)
+            eng.register_warehouse("drift", drifted)
+            cols = "*" if surface == "sql_star" else "k, extra"
+            got = eng.execute(
+                f"SELECT {cols} FROM drift WHERE k < 100").df
+        elif surface == "read_table":
+            got = warehouse.read_table(spark, drifted, [("k", "<", 100)])
+        else:
+            got = kql_to_df_skipping(
+                spark, "T | where k < 100 | project k, extra",
+                {"T": drifted})
+        want = (["k", "extra"] if surface in ("sql_extra", "kql_project")
+                else plain.columns)
+        assert got.columns == want
+        assert _same_rows(got, plain.select(*want))
+        assert got.filter("extra IS NOT NULL").count() == 0
+        assert got.count() == 100
+    finally:
+        spark.conf.unset(conf)
