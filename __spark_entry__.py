@@ -142,7 +142,7 @@ _DEFERRED = frozenset()
 #: compliance-pack shape; engine_scan_governor — the max_scan_bytes
 #: admission gate refusing an over-budget scan then admitting a
 #: selective one; all self-certifying via the executed
-#: plan's inputFiles), then the
+#: plan's scanned files), then the
 #: STALEST-recorded re-verifies (rotate_window.py now orders the
 #: padding by each name's newest green round): the 11 rows whose last
 #: green dated to round 2 (text_redact, decontaminate,

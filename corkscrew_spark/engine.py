@@ -249,6 +249,7 @@ class QueryEngine:
         self.spark = spark
         self._versioned: dict[str, str] = {}
         self._warehouse: dict[str, str] = {}  # every registered dir
+        self._plain: dict[str, DataFrame] = {}  # each view's plain read
         self._view_sig: dict[str, tuple | None] = {}  # freshness keys
         self._listing_cache: dict[str, tuple] = {}  # path -> (sig, files)
         self._snapshots: set[str] = set()  # per-statement __v entries
@@ -291,12 +292,20 @@ class QueryEngine:
         # table, so the next query refreshes — the reverse order could
         # freeze a stale listing behind a post-swap signature
         sig = self._table_sig(path)
-        self.spark.read.parquet(path).createOrReplaceTempView(name)
         # keyed lower-cased: Spark resolves view names case-
         # insensitively, so `FROM Estate` must find the registration
         # made as "estate"
+        self._register_plain(name.lower(), path)
         self._warehouse[name.lower()] = path
         self._view_sig[name.lower()] = sig
+
+    def _register_plain(self, key: str, path: str) -> None:
+        """Read the table plain, register it as view ``key`` and hold
+        the frame: every pruned read of the view filters this frame
+        (``_metadata`` does not resolve through ``spark.table``)."""
+        plain = self.spark.read.parquet(path)
+        plain.createOrReplaceTempView(key)
+        self._plain[key] = plain
 
     @staticmethod
     def _table_sig(path: str) -> tuple | None:
@@ -402,6 +411,7 @@ class QueryEngine:
                 self._snap_refs.pop(key, None)
                 path = self._warehouse.pop(key, None)
                 self._view_sig.pop(key, None)
+                self._plain.pop(key, None)
                 if path is not None:
                     self._listing_cache.pop(path, None)
                 self._snapshots.discard(key)
@@ -740,13 +750,15 @@ class QueryEngine:
                 region_views: dict[tuple | None, list[str]] = {}
                 for region, read in rows:
                     plan = next(plans)
-                    if not any(read.branches):
+                    # the frame behind the plain view validation
+                    # refreshed; gone only if a concurrent GC took it
+                    base = self._plain.get(read.name.lower())
+                    if not any(read.branches) or base is None:
                         continue  # bare or unprunable: the plain view
                     try:
-                        # typed by the plain view validation refreshed
-                        pruned = _skip.read_admitted(
-                            self.spark, read, plan,
-                            base=self.spark.table(read.name))
+                        pruned = _skip.read_skipping_any(
+                            self.spark, read.path, read.branches,
+                            plan=plan, base=base)
                     except Exception:  # noqa: BLE001
                         continue  # unreadable stats/files: plain view
                     view = f"{read.name}__skip_{next(_SKIP_SEQ)}"
@@ -926,6 +938,7 @@ class QueryEngine:
                 # this lock) could drop it in the window (TOCTOU,
                 # review finding)
                 sdf.createOrReplaceTempView(view)
+                self._plain[view.lower()] = sdf
                 self._warehouse[view.lower()] = vdir
                 self._view_sig[view.lower()] = sig
                 self._snapshots.add(view.lower())  # refcounted: held
@@ -984,7 +997,7 @@ class QueryEngine:
             if gate and sig is not None \
                     and sig == self._view_sig.get(name):
                 continue  # table unchanged: the cached view is current
-            self.spark.read.parquet(path).createOrReplaceTempView(name)
+            self._register_plain(name, path)
             self._view_sig[name] = sig
 
     def estimate_scan(self, sql: str,

@@ -4179,15 +4179,6 @@ def _externaldata_scans(query: str, roots: list[str] | None = None
                                     for p in epaths)]
 
 
-def kql_estimate_scan(query: str, warehouse: dict[str, str]
-                      ) -> dict[str, dict]:
-    """Metadata-only scan estimate per read the pipeline performs —
-    the KQL twin of ``QueryEngine.estimate_scan`` (dry-run half of the
-    admission loop; `kql --estimate` on the CLI): the ``tables`` of
-    ``kql_estimate_statement``."""
-    return kql_estimate_statement(query, warehouse)["tables"]
-
-
 def kql_estimate_statement(query: str, warehouse: dict[str, str]
                            ) -> dict:
     """The dry-run of ``kql_to_df_skipping``'s governor: the same
@@ -4290,8 +4281,9 @@ def kql_to_df_skipping(spark, query: str, warehouse: dict[str, str],
         resolved[read.name] = plain = spark.read.parquet(read.path)
         if read.name in plan_of and any(read.branches):
             try:
-                resolved[read.name] = _skip.read_admitted(
-                    spark, read, plan_of[read.name], base=plain)
+                resolved[read.name] = _skip.read_skipping_any(
+                    spark, read.path, read.branches,
+                    plan=plan_of[read.name], base=plain)
             except Exception:  # noqa: BLE001 — plain read stands
                 pass
     return kql_to_df(query, resolved, externaldata_roots)

@@ -999,6 +999,7 @@ def engine_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the file-level analogue on the engine's own surface."""
     from corkscrew_spark import skipping
     from corkscrew_spark.engine import QueryEngine
+    from corkscrew_spark.testing import scanned_files
 
     def _build(tmp: str) -> None:
         # shipdate-clustered layout: disjoint date ranges per file, the
@@ -1025,11 +1026,11 @@ def engine_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM li_skip_tbl {where}
         GROUP BY l_returnflag, l_linestatus
         ORDER BY l_returnflag, l_linestatus""").df
-    # certify against the EXECUTED PLAN: inputFiles() lists the
-    # files the scan references — unlike counting distinct
+    # certify against the EXECUTED PLAN: scanned_files lists the
+    # files the scan opens — unlike counting distinct
     # input_file_name() rows (files that happened to contain
     # matches), an unpruned scan cannot pass this
-    opened = len([f for f in result.inputFiles()
+    opened = len([f for f in scanned_files(result)
                   if "lineitem_tbl" in f])
     if not 0 < opened < total:
         raise RuntimeError(
@@ -1091,8 +1092,8 @@ def engine_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (predicates.inner_join_tables + qualified-only extraction), swaps
     ONLY this statement's fact reference to a pruned one-statement
     view, and executes the full join SQL on top. Certification is the
-    EXECUTED PLAN itself: DataFrame.inputFiles() lists the files the
-    fact scan references, and the query RAISES unless that is strictly
+    EXECUTED PLAN itself: testing.scanned_files lists the files the
+    fact scan opens, and the query RAISES unless that is strictly
     fewer than the table holds — files-with-matching-rows heuristics
     can't fake this. Inner-join-only by soundness argument (an outer
     join's null-extended rows could be wrongly accepted; see
@@ -1102,6 +1103,7 @@ def engine_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket_deletion_protection.sql:66-69."""
     from corkscrew_spark import skipping
     from corkscrew_spark.engine import QueryEngine
+    from corkscrew_spark.testing import scanned_files
 
     def _build(tmp: str) -> None:
         t = register_tables(spark, sf_dir)
@@ -1133,7 +1135,7 @@ def engine_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         GROUP BY o.o_orderpriority
         ORDER BY o.o_orderpriority""").df
     total = len(skipping._list_data_files(fact))
-    opened = len([f for f in result.inputFiles()
+    opened = len([f for f in scanned_files(result)
                   if "lineitem_fact" in f])
     if not 0 < opened < total:
         raise RuntimeError(
@@ -1176,10 +1178,11 @@ def engine_pruned_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     per segment, and rewrites only that segment's table reference to a
     one-statement pruned view. RAISES unless the executed plan's fact
     scan references strictly fewer files than the table holds
-    (DataFrame.inputFiles — the scan list itself, not a
+    (testing.scanned_files — the scan list itself, not a
     rows-that-matched proxy)."""
     from corkscrew_spark import skipping
     from corkscrew_spark.engine import QueryEngine
+    from corkscrew_spark.testing import scanned_files
 
     def _build(tmp: str) -> None:
         register_tables(spark, sf_dir)["lineitem"].select(
@@ -1211,7 +1214,7 @@ def engine_pruned_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
                ROUND(SUM(spend), 2) AS total_spend
         FROM per_order GROUP BY 1 ORDER BY status""").df
     total = len(skipping._list_data_files(table))
-    opened = len([f for f in result.inputFiles()
+    opened = len([f for f in scanned_files(result)
                   if "lineitem_cte" in f])
     if not 0 < opened < total:
         raise RuntimeError(
@@ -1239,7 +1242,7 @@ def engine_scan_governor(spark: SparkSession, sf_dir: str) -> DataFrame:
     tail-window scan's estimate and the whole table. The query RAISES
     unless (a) the wide scan is REFUSED with ScanBudgetExceeded before
     any file opens, and (b) the selective scan both runs under the
-    budget and actually pruned (executed-plan inputFiles certificate) —
+    budget and actually pruned (executed-plan scanned_files certificate) —
     then returns the selective aggregate for the oracle to recompute.
     Reference parity: the reference has no scan governor (DuckDB scans
     whatever the query needs); at 100 TB the estimate-then-refuse loop
@@ -1249,6 +1252,7 @@ def engine_scan_governor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from corkscrew_spark import skipping
     from corkscrew_spark.engine import QueryEngine, ScanBudgetExceeded
+    from corkscrew_spark.testing import scanned_files
 
     def _build(tmp: str) -> None:
         register_tables(spark, sf_dir)["lineitem"].select(
@@ -1287,7 +1291,7 @@ def engine_scan_governor(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM li_gov WHERE l_shipdate >= DATE '1998-09-01'
         GROUP BY l_linestatus ORDER BY l_linestatus""").df
     total = len(skipping._list_data_files(table))
-    opened = len([f for f in result.inputFiles()
+    opened = len([f for f in scanned_files(result)
                   if "lineitem_gov" in f])
     if not 0 < opened < total:
         raise RuntimeError(
@@ -1320,10 +1324,11 @@ def engine_pruned_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
     span, and rewrites only the body's table reference to a pruned
     one-statement view. RAISES unless the executed plan's fact scan
     references strictly fewer files than the table holds
-    (DataFrame.inputFiles — the scan list itself). Shares the
+    (testing.scanned_files — the scan list itself). Shares the
     engine_pruned_cte fixture (same clustered layout, memoized)."""
     from corkscrew_spark import skipping
     from corkscrew_spark.engine import QueryEngine
+    from corkscrew_spark.testing import scanned_files
 
     def _build(tmp: str) -> None:
         register_tables(spark, sf_dir)["lineitem"].select(
@@ -1348,7 +1353,7 @@ def engine_pruned_derived(spark: SparkSession, sf_dir: str) -> DataFrame:
               GROUP BY l_orderkey) per_order
         GROUP BY 1 ORDER BY status""").df
     total = len(skipping._list_data_files(table))
-    opened = len([f for f in result.inputFiles()
+    opened = len([f for f in scanned_files(result)
                   if "lineitem_cte" in f])
     if not 0 < opened < total:
         raise RuntimeError(
@@ -1397,6 +1402,7 @@ def engine_pruned_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from corkscrew_spark import skipping
     from corkscrew_spark.engine import QueryEngine, ScanBudgetExceeded
+    from corkscrew_spark.testing import scanned_files
 
     def _build(tmp: str) -> None:
         tables = register_tables(spark, sf_dir)
@@ -1430,7 +1436,7 @@ def engine_pruned_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
                         AND l.l_shipdate < DATE '1996-07-01')
         GROUP BY o.o_orderpriority ORDER BY o.o_orderpriority"""
     result = eng.execute(q).df
-    opened = result.inputFiles()
+    opened = scanned_files(result)
     for label, path in (("EXISTS-body", li), ("outer", orders)):
         total = len(skipping._list_data_files(path))
         got = len([f for f in opened if path.split("/")[-1] in f])
@@ -1521,6 +1527,7 @@ def engine_pruned_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     (memoized per sf_dir)."""
     from corkscrew_spark import skipping
     from corkscrew_spark.engine import QueryEngine, ScanBudgetExceeded
+    from corkscrew_spark.testing import scanned_files
 
     def _build(tmp: str) -> None:
         tables = register_tables(spark, sf_dir)
@@ -1567,7 +1574,7 @@ def engine_pruned_union(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM ord_un WHERE o_orderdate >= DATE '1998-05-01'
         GROUP BY o_orderpriority
         ORDER BY src""").df
-    opened = result.inputFiles()
+    opened = scanned_files(result)
     for label, path in (("first-branch", li), ("second-branch", orders)):
         total = len(skipping._list_data_files(path))
         got = len([f for f in opened if path.split("/")[-1] in f])
@@ -1707,7 +1714,7 @@ def kql_scan_governor(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bare no-where pipeline — the shape the old governor admitted —
     is REFUSED at its full-scan estimate, and (c) a selective pipeline
     runs under the same budget AND actually pruned (executed-plan
-    inputFiles certificate); it returns the selective rollup for the
+    scanned_files certificate); it returns the selective rollup for the
     oracle to recompute. Reference parity: the reference pushes KQL to
     Azure Resource Graph, which enforces service-side quotas
     (plugins/azure-provider/resource_graph.go:71-118); locally the
@@ -1715,6 +1722,7 @@ def kql_scan_governor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from corkscrew_spark import skipping
     from corkscrew_spark.engine import ScanBudgetExceeded
     from corkscrew_spark.kql import kql_to_df_skipping
+    from corkscrew_spark.testing import scanned_files
 
     def _build(tmp: str) -> None:
         # ship_day as an ISO string: KQL string comparisons mine into
@@ -1750,7 +1758,7 @@ def kql_scan_governor(spark: SparkSession, sf_dir: str) -> DataFrame:
     result = kql_to_df_skipping(spark, sel, {"Li": table},
                                 max_scan_bytes=budget)
     total = len(skipping._list_data_files(table))
-    opened = len([f for f in result.inputFiles()
+    opened = len([f for f in scanned_files(result)
                   if "lineitem_kgov" in f])
     if not 0 < opened < total:
         raise RuntimeError(
@@ -1803,6 +1811,7 @@ def versioned_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
 
     from corkscrew_spark import skipping, versioned
+    from corkscrew_spark.testing import scanned_files
 
     def _build(tmp: str) -> None:
         # the BUILD-phase certificates (file-scoped upsert, sticky
@@ -1873,7 +1882,7 @@ def versioned_pruned_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     # executed-plan certificate (r7 upgrade, matching the engine
     # queries): the pruned snapshot read's scan must reference
     # strictly fewer files than the snapshot holds
-    opened = len([f for f in result.inputFiles()
+    opened = len([f for f in scanned_files(result)
                   if "orders_versioned" in f])
     total = len(skipping._list_data_files(v2_data))
     if not 0 < opened < total:
@@ -1908,6 +1917,7 @@ def kql_pruned_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate; locally the same query now prunes parquet files."""
     from corkscrew_spark import skipping
     from corkscrew_spark.kql import kql_to_df_skipping
+    from corkscrew_spark.testing import scanned_files
 
     def _build(tmp: str) -> None:
         register_tables(spark, sf_dir)["documents"].select(
@@ -1929,7 +1939,7 @@ def kql_pruned_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # certify the EXECUTED pipeline too: its scan must reference
     # strictly fewer files than the table holds (r7 upgrade — the
     # plan_skip check above is a metadata claim, this is the plan)
-    opened = len([f for f in result.inputFiles()
+    opened = len([f for f in scanned_files(result)
                   if "docs_tbl" in f])
     total = len(skipping._list_data_files(table))
     if not 0 < opened < total:

@@ -1228,36 +1228,38 @@ def read_skipping(spark: SparkSession, path: str,
                   base: DataFrame | None = None) -> DataFrame:
     """Predicate-filtered read that opens only the files the zone maps
     cannot rule out. ``predicates`` is an AND-list of
-    ``(col, op, value)`` with ops from ``_OPS``. Falls back to a plain
-    scan when stats are missing or invalidated; in every path the real
-    predicate is re-applied, so the result is ALWAYS identical to
+    ``(col, op, value)`` with ops from ``_OPS``: the one-branch case of
+    ``read_skipping_any``, whose ``stats``, ``plan`` and ``base`` it
+    takes. The result is ALWAYS identical to
     ``spark.read.parquet(path).filter(...)`` — stats only change how
-    many files are opened. Pass ``plan`` from an earlier ``plan_skip``
-    of the SAME predicates to skip re-planning (the engine's governed
-    path plans once for enforcement and reuses it here), and the
-    table's plain read as ``base`` when the caller holds one."""
-    if plan is None:
-        plan = plan_skip(path, predicates, stats=stats)
-    return _pruned_read(spark, path, plan, predicate_filter(predicates),
-                        base)
+    many files are opened."""
+    return read_skipping_any(spark, path, [predicates], stats=stats,
+                             plan=plan, base=base)
 
 
-def _pruned_read(spark: SparkSession, path: str, plan: dict, flt,
-                 base: DataFrame | None) -> DataFrame:
-    """THE query read over a subset of a table's files: the files
-    ``plan`` kept, typed by the table's plain read ``base`` (read here
-    when None), ``flt`` re-applied. Pruning never changes the columns:
-    a kept file lacking one reads it as null, as the plain read does,
-    and no kept footer is read for a schema."""
-    if base is None:
-        base = spark.read.parquet(path)
+def _pruned_read(path: str, plan: dict, flt, base: DataFrame) -> DataFrame:
+    """THE query read over a subset of a table's files: the table's
+    plain read ``base`` filtered to the files ``plan`` kept, ``flt``
+    re-applied. The file filter is on the hidden
+    ``_metadata.file_path``, which Spark applies while it lists, before
+    any file opens — so the pruned read shares the plain read's
+    listing, schema and reader: no second listing job, no footer read
+    for a schema, and a kept file lacking a column reads it as null.
+    ``metadataColumn`` resolves the hidden column even when the table
+    has a user column named ``_metadata``."""
     if plan["fallback"] is not None:
         return base.filter(flt)
     if not plan["kept"]:
         return base.filter(F.lit(False))
-    paths = [os.path.join(path, rel) for rel in plan["kept"]]
-    return (spark.read.schema(base.schema).option("basePath", path)
-            .parquet(*paths).filter(flt))
+    # file_path spells a path as inputFiles() does, with file:/ for
+    # file:///; one unquote maps either back to the on-disk relpath
+    uris = {_file_rel(path, u): u.replace("file:///", "file:/", 1)
+            for u in base.inputFiles()}
+    if not all(rel in uris for rel in plan["kept"]):
+        return base.filter(flt)  # a spelling miss costs I/O, never rows
+    file_path = base.metadataColumn("_metadata").getField("file_path")
+    return base.filter(
+        file_path.isin([uris[rel] for rel in plan["kept"]]) & flt)
 
 
 def plan_skip_any(path: str, branches: list[list[tuple]],
@@ -1288,14 +1290,18 @@ def read_skipping_any(spark: SparkSession, path: str,
                       stats: dict | None = None,
                       plan: dict | None = None,
                       base: DataFrame | None = None) -> DataFrame:
-    """Disjunctive twin of ``read_skipping``: opens only the files no
-    branch can match is pruned from, re-applies the full OR-of-ANDs
+    """THE pruned read of a table: opens only the files some branch of
+    the OR-of-ANDs ``branches`` may match and re-applies the full
     predicate, so the result is ALWAYS identical to the plain filtered
-    scan. ``plan`` and ``base`` as in ``read_skipping``."""
+    scan. Pass ``plan`` from an earlier ``plan_skip``/``plan_skip_any``
+    of the SAME branches to skip re-planning (the engine and the KQL
+    surface reuse their admission plan), and the table's plain read as
+    ``base`` when the caller holds one (read here otherwise)."""
     if plan is None:
         plan = plan_skip_any(path, branches, stats=stats)
-    return _pruned_read(spark, path, plan, predicate_filter_any(branches),
-                        base)
+    if base is None:
+        base = spark.read.parquet(path)
+    return _pruned_read(path, plan, predicate_filter_any(branches), base)
 
 
 def estimate_scan_any(path: str, branches: list[list[tuple]],
@@ -1439,15 +1445,3 @@ def admit(reads: list[ScanRead], max_scan_bytes: int | None = None,
                 f"{max_scan_bytes:,}-byte budget; the ceiling applies to "
                 "the statement's total I/O, not per reference")
     return {"tables": tables, "bytes_kept": total, "reads": scans}, plans
-
-
-def read_admitted(spark: SparkSession, read: ScanRead,
-                  plan: dict, base: DataFrame | None = None) -> DataFrame:
-    """The pruned read behind an admitted ``read``, reusing its
-    admission ``plan`` (no second planning pass); ``base`` as in
-    ``read_skipping``."""
-    if len(read.branches) == 1:
-        return read_skipping(spark, read.path, read.branches[0], plan=plan,
-                             base=base)
-    return read_skipping_any(spark, read.path, read.branches, plan=plan,
-                             base=base)

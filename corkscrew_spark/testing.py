@@ -8,11 +8,15 @@ before the driver runs the same comparison at sf0.01.
 
 from __future__ import annotations
 
+import contextlib
+import io
 import os
+import re
+import urllib.parse
 
 import duckdb
 import pandas as pd
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from corkscrew_spark.catalog import TPCH_TABLES
 
@@ -70,6 +74,38 @@ def compare_frames(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name: str 
             )
     pd.testing.assert_frame_equal(a, b, check_dtype=False, check_exact=False, rtol=1e-9,
                                   obj=name or "result")
+
+
+def scanned_files(df: DataFrame) -> list[str]:
+    """The data files ``df``'s scans open, spelled as ``inputFiles()``
+    spells them. ``inputFiles()`` alone lists every file of each table
+    read: a pruned read (``skipping._pruned_read``) is the table's plain
+    read filtered on ``_metadata.file_path``, which Spark applies while
+    it lists, before any file opens. So a file counts when the physical
+    plan names it, or when some scan of its table root outputs no
+    ``file_path`` (a plain read, which opens every file)."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain(mode="formatted")
+    plan = buf.getvalue()
+    roots: dict[str, bool] = {}  # scanned root -> read plain somewhere
+    for node in plan.split("\n\n"):  # one block per formatted node
+        loc = re.search(r"^Location: [^\[]*\[(.*)\]$", node, re.M)
+        if loc is None:
+            continue
+        out = re.search(r"^Output \[\d+\]: \[(.*)\]$", node, re.M)
+        plain = out is None or "file_path#" not in out.group(1)
+        for root in loc.group(1).split(", "):
+            roots[root] = roots.get(root, False) or plain
+    got = []
+    for uri in df.inputFiles():
+        spelled = uri.replace("file:///", "file:/", 1)
+        disk = urllib.parse.unquote(spelled)
+        if any(disk.startswith(r.rstrip("/") + "/") and plain
+               for r, plain in roots.items()) or re.search(
+                re.escape(spelled) + r"(?=[,)\s]|$)", plan):
+            got.append(uri)
+    return got
 
 
 def compare_to_oracle(spark: SparkSession, name: str, sf_dir: str) -> int:

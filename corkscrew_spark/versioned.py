@@ -491,7 +491,7 @@ def upsert_version(spark: SparkSession, path: str, updates: DataFrame,
             existing = existing.filter(
                 _partition_predicate(partition_cols, touched))
         merged = existing.unionByName(
-            _aligned_updates(existing, tagged))
+            _aligned_updates(existing.columns, tagged))
     else:
         merged = tagged
     w = Window.partitionBy(*keys).orderBy(F.desc(order_col), F.desc("_src"))

@@ -210,11 +210,9 @@ def read_table(spark: SparkSession, path: str,
         # through to a plain scan would return the whole table to a
         # caller whose DNF simplifier pruned every branch
         return plain.limit(0)
-    if predicates_any:
-        return _skip.read_skipping_any(spark, path, predicates_any,
-                                       base=plain)
-    if predicates:
-        return _skip.read_skipping(spark, path, predicates, base=plain)
+    if predicates_any or predicates:
+        return _skip.read_skipping_any(
+            spark, path, predicates_any or [predicates], base=plain)
     return plain
 
 
@@ -474,22 +472,45 @@ def _table_count(spark: SparkSession, path: str) -> int:
         return 0
 
 
-def _aligned_updates(existing: DataFrame, updates: DataFrame) -> DataFrame:
-    """Reorder ``updates`` to the existing table's column order, raising
+def _aligned_updates(columns: list[str], updates: DataFrame) -> DataFrame:
+    """Reorder ``updates`` to the existing table's ``columns``, raising
     on columns the table doesn't have — silent projection would hide
     schema drift (a new scanner field that never lands in the
     warehouse)."""
-    extra = [c for c in updates.columns if c not in existing.columns]
+    extra = [c for c in updates.columns if c not in columns]
     if extra:
         raise ValueError(
             f"update batch has columns absent from the table: {extra} — "
-            "migrate the table schema before merging (silent drops hide "
+            "migrate the table schema before writing (warehouse."
+            "evolve_schema for a warehouse table; silent drops hide "
             "schema drift)")
-    return updates.select(*existing.columns)
+    return updates.select(*columns)
+
+
+def _footer_columns(path: str) -> list[str] | None:
+    """The table's columns read from ONE data file's footer plus its
+    hive partition directories — no Spark job. None when the table has
+    no data file yet."""
+    import pyarrow.parquet as pq
+
+    for root, dirs, names in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith((".", "_")))
+        for name in sorted(names):
+            if name.endswith(".parquet") \
+                    and not name.startswith((".", "_")):
+                parts = os.path.relpath(root, path).split(os.sep)
+                return (pq.read_schema(os.path.join(root, name)).names
+                        + [d.split("=", 1)[0] for d in parts if "=" in d])
+    return None
 
 
 def append(df: DataFrame, path: str) -> None:
     """Append-only sinks (scan_metadata K5, api_action_metadata K6).
+
+    Refuses a frame with columns the table lacks, exactly as the merges
+    do (``evolve_schema`` first): a plain read takes its schema from
+    the first footer in path order, so an appended column would exist
+    or not depending on part-file names. A missing table is created.
 
     Takes the same writer lock as the merge family so an append can
     never land between a swap-write's two renames, and logs a
@@ -499,6 +520,9 @@ def append(df: DataFrame, path: str) -> None:
     the log. A table without a log stays log-free (pre-log tables
     already read as "assume all changed")."""
     with _table_lock(path):
+        columns = _footer_columns(path)
+        if columns is not None:
+            df = _aligned_updates(columns, df)
         df.write.mode("append").parquet(path)
         if os.path.exists(os.path.join(path, _COMMIT_LOG)):
             _log_commit(path, "append", None)
@@ -578,7 +602,8 @@ def merge_upsert(spark: SparkSession, path: str, updates: DataFrame,
             touched = _touched_partitions(updates, partition_cols)
             existing = existing.filter(
                 _partition_predicate(partition_cols, touched))
-        merged = existing.unionByName(_aligned_updates(existing, updates))
+        merged = existing.unionByName(
+            _aligned_updates(existing.columns, updates))
     else:
         merged = updates
     w = Window.partitionBy(*keys).orderBy(F.desc(order_col), F.desc("_src"))
@@ -1346,7 +1371,8 @@ def merge_upsert_cdc(spark: SparkSession, path: str, updates: DataFrame,
             touched = _touched_partitions(updates, partition_cols)
             existing = existing.filter(
                 _partition_predicate(partition_cols, touched))
-        merged = existing.unionByName(_aligned_updates(existing, updates))
+        merged = existing.unionByName(
+            _aligned_updates(existing.columns, updates))
     else:
         merged = updates
     w = Window.partitionBy(*keys).orderBy(F.desc(order_col), F.desc("_src"))

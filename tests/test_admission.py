@@ -18,6 +18,7 @@ from corkscrew_spark import skipping
 from corkscrew_spark.engine import QueryEngine, ScanBudgetExceeded
 from corkscrew_spark.kql import (kql_estimate_statement,
                                  kql_to_df_skipping)
+from corkscrew_spark.testing import scanned_files
 
 
 def _write(spark, path: str, stats: bool = True) -> str:
@@ -190,4 +191,4 @@ def test_pruned_read_reuses_the_admission_plan(spark, tables, plans):
     del plans[:]
     df = eng.execute(q).df
     assert plans == [tables["t"]]
-    assert len(df.inputFiles()) == est["files_kept"] < est["files_total"]
+    assert len(scanned_files(df)) == est["files_kept"] < est["files_total"]

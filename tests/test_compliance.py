@@ -7,6 +7,7 @@ import pytest
 from corkscrew_spark.compliance import ComplianceExecutor, PackLoader
 from corkscrew_spark.compliance.pack import PackError
 from corkscrew_spark.ingest import synthetic
+from corkscrew_spark.testing import scanned_files
 
 
 @pytest.fixture(scope="module")
@@ -286,6 +287,6 @@ def test_real_pack_cte_sql_prunes_through_engine(spark, tmp_path):
     eng.register_warehouse("resources", path)
     res = eng.execute(sql)
     total = len(skipping._list_data_files(path))
-    opened = [f for f in res.df.inputFiles() if "/resources/" in f]
+    opened = [f for f in scanned_files(res.df) if "/resources/" in f]
     assert 0 < len(opened) < total, (len(opened), total)
     assert res.df.count() == 100  # exactly the s3 rows

@@ -16,6 +16,7 @@ from corkscrew_spark.engine import (
     quote_literal,
 )
 from corkscrew_spark.functions.json_helpers import register_json_helpers
+from corkscrew_spark.testing import scanned_files
 
 
 @pytest.fixture(scope="module")
@@ -379,7 +380,7 @@ class TestCteSkipping:
         plain = spark.sql(sql.replace("ctbl", f"parquet.`{table}`"))
         assert sorted(map(tuple, res.df.collect())) \
             == sorted(map(tuple, plain.collect()))
-        opened = [f for f in res.df.inputFiles() if "tbl" in f]
+        opened = [f for f in scanned_files(res.df) if "tbl" in f]
         assert 0 < len(opened) < 8  # the CTE body's scan was pruned
 
     def test_two_segments_prune_independently(self, spark, table):
@@ -1119,7 +1120,7 @@ def test_engine_prunes_derived_table_body(spark, tmp_path):
         f"parquet.`{path}` WHERE k >= 700) t GROUP BY v ORDER BY v"
     ).collect()]
     assert got == plain and len(got) == 7
-    opened = len(res.df.inputFiles())
+    opened = len(scanned_files(res.df))
     assert 0 < opened < 8
     # inside a WITH final query too (CTE segmentation composes)
     wsql = ("WITH base AS (SELECT 1 AS one) "
@@ -1127,7 +1128,7 @@ def test_engine_prunes_derived_table_body(spark, tmp_path):
             "(SELECT v FROM dt WHERE k >= 700) t "
             "GROUP BY t.v ORDER BY t.v")
     wres = eng.execute(wsql)
-    assert len(wres.df.inputFiles()) == opened
+    assert len(scanned_files(wres.df)) == opened
     assert [tuple(r) for r in wres.rows()] == plain
     # the governor enforces through derived bodies: a wide inner
     # SELECT is refused, the selective one admitted
@@ -1305,7 +1306,7 @@ class TestExistsSubqueryPruning:
                    WHERE b.fk = s.fk AND b.k >= 700)"""
         r = engine.execute(q)
         assert r.rows()[0].n == 10
-        opened = [f for f in r.df.inputFiles() if "/big/" in f]
+        opened = [f for f in scanned_files(r.df) if "/big/" in f]
         assert 0 < len(opened) < len(skipping._list_data_files(big))
         # dry-run agrees: body table pruned, outer full (fk < 100
         # keeps everything on this data)
@@ -1322,7 +1323,7 @@ class TestExistsSubqueryPruning:
         r = engine.execute(q)
         # k in [790, 800) -> fk = k % 10 covers 0..9
         assert r.rows()[0].sx == sum(i * 2 for i in range(10))
-        opened = [f for f in r.df.inputFiles() if "/big/" in f]
+        opened = [f for f in scanned_files(r.df) if "/big/" in f]
         assert 0 < len(opened) < len(skipping._list_data_files(big))
 
     def test_correlated_unqualified_column_not_attributed(
@@ -1344,7 +1345,7 @@ class TestExistsSubqueryPruning:
             WHERE EXISTS (SELECT 1 FROM parquet.`{big}` b
                           WHERE b.fk = s.fk AND x < 10)""").collect()
         assert r.rows()[0].n == plain[0].n
-        opened = [f for f in r.df.inputFiles() if "/big/" in f]
+        opened = [f for f in scanned_files(r.df) if "/big/" in f]
         assert len(opened) == len(skipping._list_data_files(big))
 
     def test_depth2_subquery_body_prunes_and_governed(self, spark, eng):
@@ -1363,7 +1364,7 @@ class TestExistsSubqueryPruning:
                        SELECT fk FROM big_t WHERE k >= 700))"""
         r = engine.execute(q)
         assert r.rows()[0].n == 10  # k in [700,800) -> fk covers 0..9
-        opened = [f for f in r.df.inputFiles() if "/big/" in f]
+        opened = [f for f in scanned_files(r.df) if "/big/" in f]
         assert 0 < len(opened) < len(skipping._list_data_files(big))
         est = engine.estimate_scan(q)
         assert 0 < est["big_t"]["files_kept"] < est["big_t"]["files_total"]
@@ -1400,7 +1401,7 @@ class TestExistsSubqueryPruning:
                             UNION SELECT fk FROM big_t WHERE k < 10)"""
         r = engine.execute(q)
         assert r.rows()[0].n == 10  # both windows cover fk 0..9
-        opened = [f for f in r.df.inputFiles() if "/big/" in f]
+        opened = [f for f in scanned_files(r.df) if "/big/" in f]
         assert 0 < len(opened) < len(skipping._list_data_files(big))
 
     def test_double_paren_subquery_body_prunes(self, spark, eng):
@@ -1420,7 +1421,7 @@ class TestExistsSubqueryPruning:
                               WHERE b.fk = s.fk AND b.k >= 700))"""
         r = engine.execute(q)
         assert r.rows()[0].n == 10
-        opened = [f for f in r.df.inputFiles() if "/big/" in f]
+        opened = [f for f in scanned_files(r.df) if "/big/" in f]
         assert 0 < len(opened) < len(skipping._list_data_files(big))
         # IN ((SELECT scalar)): Spark's scalar-in-list semantics —
         # result must match the plain-scan answer, body still prunes
@@ -1505,7 +1506,7 @@ class TestSetOperatorGovernance:
         assert len(rows) == 175
         assert [x.k for x in rows[:3]] == [0, 1, 2]
         for path in (big, big2):
-            opened = [f for f in r.df.inputFiles() if path in f]
+            opened = [f for f in scanned_files(r.df) if path in f]
             assert 0 < len(opened) < len(
                 skipping._list_data_files(path)), path
         est = engine.estimate_scan(q)
@@ -1522,7 +1523,7 @@ class TestSetOperatorGovernance:
         r = engine.execute(q)
         assert r.df.count() == 50  # k in [550, 600)
         for path in (big, big2):
-            opened = [f for f in r.df.inputFiles() if path in f]
+            opened = [f for f in scanned_files(r.df) if path in f]
             assert 0 < len(opened) < len(
                 skipping._list_data_files(path)), path
         q = """SELECT k FROM big_a WHERE k >= 500
@@ -1541,7 +1542,7 @@ class TestSetOperatorGovernance:
         r = engine.execute(q)
         assert [x.k for x in r.rows()] == list(range(10))
         for path in (big, big2):
-            opened = [f for f in r.df.inputFiles() if path in f]
+            opened = [f for f in scanned_files(r.df) if path in f]
             assert 0 < len(opened) < len(
                 skipping._list_data_files(path)), path
 
@@ -1557,7 +1558,7 @@ class TestSetOperatorGovernance:
         r = engine.execute(q)
         assert r.rows()[0].n == 175
         for path in (big, big2):
-            opened = [f for f in r.df.inputFiles() if path in f]
+            opened = [f for f in scanned_files(r.df) if path in f]
             assert 0 < len(opened) < len(
                 skipping._list_data_files(path)), path
 

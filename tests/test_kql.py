@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from corkscrew_spark.kql import KqlError, kql_to_df
-from corkscrew_spark.testing import compare_to_oracle
+from corkscrew_spark.testing import compare_to_oracle, scanned_files
 
 
 @pytest.fixture(scope="module")
@@ -838,7 +838,7 @@ class TestKqlJoinSideSkipping:
                             (us, [("uid", "<", 5)])):
             plan = skipping.plan_skip(path, preds)
             assert plan["fallback"] is None and plan["pruned"], path
-        files = got.inputFiles()
+        files = scanned_files(got)
         assert 0 < len([f for f in files if "events_t" in f]) < 8
         assert 0 < len([f for f in files if "users_t" in f]) < 4
 
@@ -852,7 +852,7 @@ class TestKqlJoinSideSkipping:
         plain = kql_to_df(q, {"Ev": spark.read.parquet(ev),
                               "Us": spark.read.parquet(us)})
         assert got.first()["Count"] == plain.first()["Count"] == 100
-        files = got.inputFiles()
+        files = scanned_files(got)
         assert 0 < len([f for f in files if "users_t" in f]) < 4
 
     def test_multi_reference_forces_plain(self, spark, dirs):
@@ -870,7 +870,7 @@ class TestKqlJoinSideSkipping:
         plain = kql_to_df(q, {"Ev": spark.read.parquet(ev)})
         assert got.first()["Count"] == plain.first()["Count"] > 0
         # the resolved source really was the FULL table
-        assert len([f for f in got.inputFiles()
+        assert len([f for f in scanned_files(got)
                     if "events_t" in f]) == 8
 
 
@@ -905,7 +905,7 @@ class TestKqlScanBudget:
             spark, "T | where k >= 700 | summarize n=count()",
             {"T": table}, max_scan_bytes=budget)
         assert got.first()["n"] == 100
-        assert 0 < len(got.inputFiles()) <= 2  # still pruned
+        assert 0 < len(scanned_files(got)) <= 2  # still pruned
         with pytest.raises(ScanBudgetExceeded, match="budget"):
             kql_to_df_skipping(
                 spark, "T | where k >= 0 | summarize n=count()",
@@ -1068,47 +1068,50 @@ class TestKqlScanBudget:
         got = kql_to_df_skipping(spark, q, {"T": table},
                                  max_scan_bytes=mid)
         assert got.first()["Count"] == 100
-        assert 0 < len(got.inputFiles()) < 8  # really pruned
+        assert 0 < len(scanned_files(got)) < 8  # really pruned
 
     def test_kql_estimate_scan_dry_run(self, spark, table, tmp_path):
-        """kql_estimate_scan is the dry-run half: mined-predicate
+        """kql_estimate_statement is the dry-run half: mined-predicate
         estimate for attributable reads, full-scan estimate for bare
         or multi-referenced ones, absent for unread/no-stats tables —
         never saying 'will run' for a pipeline the governor refuses."""
         from pyspark.sql import functions as F
 
-        from corkscrew_spark.kql import KqlError, kql_estimate_scan
+        from corkscrew_spark.kql import KqlError, kql_estimate_statement
 
-        est = kql_estimate_scan("T | where k >= 700 | count",
-                                {"T": table})
+        est = kql_estimate_statement("T | where k >= 700 | count",
+                                     {"T": table})["tables"]
         e = est["t"]
         assert e["fallback"] is None
         assert 0 < e["files_kept"] < e["files_total"] == 8
         # bare pipeline: trivial full-scan estimate
-        bare = kql_estimate_scan("T | take 5", {"T": table})["t"]
+        bare = kql_estimate_statement("T | take 5",
+                                      {"T": table})["tables"]["t"]
         assert bare["files_kept"] == bare["files_total"] == 8
         # multi-referenced: full scan too (no attribution)
-        multi = kql_estimate_scan(
+        multi = kql_estimate_statement(
             "T | where k >= 700 | join kind=inner "
             "(T | where k < 50 | project v, k2=k) on v | count",
-            {"T": table})["t"]
+            {"T": table})["tables"]["t"]
         assert multi["files_kept"] == 8
         # DNF leading where estimates through the union-bound path
-        dnf = kql_estimate_scan(
-            "T | where k < 50 or k >= 750 | count", {"T": table})["t"]
+        dnf = kql_estimate_statement(
+            "T | where k < 50 or k >= 750 | count",
+            {"T": table})["tables"]["t"]
         assert dnf["files_kept"] == 2
         # unread and stats-less tables are absent
         nostats = str(tmp_path / "ns_t")
         spark.range(10).select(F.col("id").alias("k")
                                ).write.parquet(nostats)
-        got = kql_estimate_scan("T | count",
-                                {"T": table, "U": nostats})
+        got = kql_estimate_statement("T | count",
+                                     {"T": table, "U": nostats})["tables"]
         assert set(got) == {"t"}
-        ns = kql_estimate_scan("N | count", {"N": nostats})
+        ns = kql_estimate_statement("N | count",
+                                    {"N": nostats})["tables"]
         assert ns["n"]["fallback"] is not None  # no stats: full scan
         import pytest as _pytest
         with _pytest.raises(KqlError, match="empty"):
-            kql_estimate_scan("", {"T": table})
+            kql_estimate_statement("", {"T": table})
 
     def test_unreferenced_and_statless_tables(self, spark, table,
                                               tmp_path):
@@ -1308,7 +1311,7 @@ def test_let_bodies_are_governed(spark, tmp_path):
         spark, q, {"T": path},
         max_scan_bytes=pruned["bytes_kept"] + 1)
     assert got.first()["Count"] == 100
-    assert 0 < len(got.inputFiles()) <= 2  # the let body's read pruned
+    assert 0 < len(scanned_files(got)) <= 2  # the let body's read pruned
 
 
 def test_third_review_wave_fixes(spark):
@@ -1526,7 +1529,7 @@ def test_scalar_let_shadowing_column_prunes_consistently(
     q2 = "let cutoff = 700; T | where k >= cutoff | count"
     got = kql_to_df_skipping(spark, q2, {"T": path})
     assert got.first()["Count"] == 100
-    assert 0 < len(got.inputFiles()) <= 2
+    assert 0 < len(scanned_files(got)) <= 2
 
 
 def test_let_shadowing_warehouse_table_counts_one_scan(

@@ -1529,14 +1529,16 @@ def test_bloom_bits_for_sizing():
 
 @pytest.fixture(scope="module")
 def drifted(spark, tmp_path_factory):
-    """Four files of (k, v) plus an appended four of (k, v, extra),
-    zone maps on k. ``k < 100`` keeps one OLD file only."""
+    """Four files of (k, v) plus four of (k, v, extra), zone maps on k.
+    ``k < 100`` keeps one OLD file only. The wider files are a raw
+    append, standing in for an out-of-band writer: ``warehouse.append``
+    refuses the drift."""
     path = str(tmp_path_factory.mktemp("drift") / "tbl")
     spark.range(400).selectExpr("id AS k", "id % 7 AS v") \
         .repartitionByRange(4, "k").write.parquet(path)
-    warehouse.append(spark.range(400, 800).selectExpr(
-        "id AS k", "id % 7 AS v", "concat('x', id) AS extra")
-        .repartitionByRange(4, "k"), path)
+    spark.range(400, 800).selectExpr(
+        "id AS k", "id % 7 AS v", "concat('x', id) AS extra") \
+        .repartitionByRange(4, "k").write.mode("append").parquet(path)
     skipping.compute_stats(spark, path, ["k"])
     assert len(skipping.plan_skip(path, [("k", "<", 100)])["kept"]) == 1
     return path
@@ -1580,3 +1582,69 @@ def test_pruned_read_keeps_the_plain_schema(spark, drifted, surface):
         assert got.count() == 100
     finally:
         spark.conf.unset(conf)
+
+
+#: partition values Spark escapes or encodes differently on disk, in
+#: inputFiles() URIs and in _metadata.file_path; the first five hold
+#: k < 300
+_ODD_PARTS = ["a b", "x%y", "p+q", "c=d", "é", "plain0", "plain1", "plain2"]
+
+
+@pytest.fixture(scope="module")
+def oddly(spark, tmp_path_factory):
+    """A hive-partitioned table of 48 files (8 partitions of 6),
+    partitioned on ``part`` whose values need escaping, with a user
+    column named ``_metadata`` and zone maps on ``k``: files hold
+    disjoint runs of 10 keys, partitions runs of 60."""
+    path = str(tmp_path_factory.mktemp("odd") / "tbl")
+    spark.range(480).select(
+        F.col("id").alias("k"),
+        F.concat(F.lit("m"), F.col("id")).alias("_metadata"),
+        F.element_at(F.array(*map(F.lit, _ODD_PARTS)),
+                     (F.col("id") / 60).cast("int") + 1).alias("part"),
+    ).repartitionByRange(48, "k").write.partitionBy("part").parquet(path)
+    skipping.compute_stats(spark, path, ["k"])
+    assert len(skipping._list_data_files(path)) >= 40
+    return path
+
+
+def test_wide_pruned_read_builds_without_a_job(spark, oddly):
+    """A pruned read keeping more than 32 files (Spark's parallel
+    listing threshold) is a filter over the plain read: building it
+    lists nothing, so it runs no Spark job."""
+    import uuid
+
+    preds = [("k", ">=", 80)]
+    plan = skipping.plan_skip(oddly, preds)
+    assert 32 < len(plan["kept"]) < len(plan["kept"]) + len(plan["pruned"])
+    base = spark.read.parquet(oddly)
+    sc = spark.sparkContext
+    group = f"pruned-build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "pruned read build")
+    try:
+        got = skipping.read_skipping(spark, oddly, preds, plan=plan,
+                                     base=base)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs == 0, f"building the pruned read ran {jobs} jobs"
+    assert got.count() == 400
+
+
+def test_odd_partition_names_prune_to_the_plain_rows(spark, oddly):
+    """Kept files in partitions named with a space, %, +, = and é are
+    matched on their file_path spelling (no fallback to the whole
+    table), and a user column named _metadata keeps its own values."""
+    from corkscrew_spark.testing import scanned_files
+
+    preds = [("k", "<", 300)]
+    kept = skipping.plan_skip(oddly, preds)["kept"]
+    assert len(kept) == 30
+    got = warehouse.read_table(spark, oddly, preds)
+    plain = spark.read.parquet(oddly).filter("k < 300")
+    assert got.columns == plain.columns
+    assert "_metadata" in got.columns
+    assert _same_rows(got, plain)
+    assert sorted({r.part for r in got.select("part").collect()}) \
+        == sorted(_ODD_PARTS[:5])
+    assert len(scanned_files(got)) == 30

@@ -7,6 +7,7 @@ import os
 import pytest
 
 from corkscrew_spark import versioned
+from corkscrew_spark.testing import scanned_files
 
 
 def _df(spark, rows):
@@ -712,14 +713,14 @@ def test_time_travel_sql_prunes_through_snapshot_stats(spark, tmp_path):
         "FROM tt VERSION AS OF 1 WHERE k >= 700")
     row = res.df.collect()[0]
     assert row.n == 100
-    opened = [f for f in res.df.inputFiles() if "/v=1/" in f]
+    opened = [f for f in scanned_files(res.df) if "/v=1/" in f]
     assert 0 < len(opened) < 8  # the snapshot scan was pruned
     # each version prunes ITS OWN files; results stay version-correct
     r2 = eng.execute(
         "SELECT CAST(SUM(v) AS BIGINT) AS sv "
         "FROM tt VERSION AS OF 2 WHERE k >= 700")
     assert r2.df.first().sv == row.sv + 100 * 100
-    assert 0 < len([f for f in r2.df.inputFiles() if "/v=2/" in f]) < 8
+    assert 0 < len([f for f in scanned_files(r2.df) if "/v=2/" in f]) < 8
     # a snapshot without stats still answers (plain read fallback)
     p2 = str(tmp_path / "t2")
     versioned.write_version(df, p2)

@@ -564,6 +564,27 @@ class TestEvolveSchemaAndLock:
             partition_cols=["region"])
         assert spark.read.parquet(path).collect()[0].extra == "x"
 
+    def test_append_refuses_columns_the_table_lacks(self, spark, tmp_path):
+        """append checks the frame against one footer, as the merges
+        check theirs: a wider frame raises naming evolve_schema and
+        writes nothing; a narrow-order frame lands in table order."""
+        import os
+
+        import pytest as _pytest
+        path = str(tmp_path / "ap")
+        t0 = dt.datetime(2024, 1, 1)
+        warehouse.append(_df(spark, [("a", "v1", t0)]), path)  # created
+        files = sorted(os.listdir(path))
+        widened = _df(spark, [("b", "v1", t0)]).withColumn(
+            "extra", F.lit("x"))
+        with _pytest.raises(ValueError, match="evolve_schema"):
+            warehouse.append(widened, path)
+        assert sorted(os.listdir(path)) == files
+        warehouse.append(_df(spark, [("c", "v1", t0)])
+                         .select("val", "scanned_at", "id"), path)
+        assert sorted(r.id for r in spark.read.parquet(path).collect()) \
+            == ["a", "c"]
+
     def test_writer_lock_blocks_second_writer(self, spark, tmp_path):
         import pytest as _pytest
         path = str(tmp_path / "locked")
