@@ -90,9 +90,7 @@ def cmd_query(args: argparse.Namespace) -> int:
     if getattr(args, "explain", False):
         # the formatted physical plan: scans (PushedFilters/ReadSchema),
         # exchanges, and codegen spans — the scale-debugging surface
-        print(res.df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                "formatted")))
+        res.df.explain(mode="formatted")
         return 0
     print(formatter.FORMATTERS[args.format](res.df, limit=args.limit))
     print(f"-- {res.duration_s*1000:.0f} ms", file=sys.stderr)
@@ -815,7 +813,7 @@ def cmd_kql(args: argparse.Namespace) -> int:
         from corkscrew_spark.kql import kql_estimate_statement
 
         try:
-            est = kql_estimate_statement(kql, warehouse)
+            est = kql_estimate_statement(kql, warehouse, tables)
             return _print_estimates(est["tables"], est)
         except KqlError as ex:
             print(f"error: {ex}", file=sys.stderr)

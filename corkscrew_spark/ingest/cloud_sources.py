@@ -1,4 +1,4 @@
-"""Azure Resource Graph and GCP Asset Inventory sources + change adapters.
+"""Azure Resource Graph and GCP Asset Inventory sources.
 
 S9 (plugins/azure-provider/resource_graph.go:70-79, 298-340): Azure's
 Resource Graph answers one tenant-wide KQL query with skip-token paging —
@@ -8,11 +8,7 @@ itself is server-side pushdown (the §2.8 operators run locally over the
 landed table and are covered by the kql_* queries).
 
 S10 (plugins/gcp-provider/asset_inventory.go:66-135): GCP Cloud Asset
-Inventory bulk-lists assets across project/folder/org scopes; asset
-HISTORY (:212-260) is the change feed. C5 change adapters normalize both
-providers' change records into CHANGE_EVENT_SCHEMA for the shared
-change_events table (aws_change_tracker.go:443-703 does the same for
-Config/CloudTrail).
+Inventory bulk-lists assets across project/folder/org scopes.
 
 Like the AWS/K8s scanners, the real clients are opt-in; deterministic
 fake pages exercise the paging, normalization, and schema conformance
@@ -29,7 +25,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, Row, SparkSession
 
 from corkscrew_spark.ingest.operation_cache import OperationCache
-from corkscrew_spark.schema import CHANGE_EVENT_SCHEMA, RESOURCE_SCHEMA
+from corkscrew_spark.schema import RESOURCE_SCHEMA
 
 _AZ_TYPES = (
     ("microsoft.storage/storageaccounts", "storage"),
@@ -255,77 +251,3 @@ def _gcp_fake_rows(project: str, scanned_at: dt.datetime) -> Iterator[Row]:
                 scanned_at=scanned_at,
                 error_code=None, error_message=None,
             )
-
-
-# ---------------------------------------------------------------------------
-# C5 — change-source adapters → change_events
-# ---------------------------------------------------------------------------
-
-_AZ_CHANGE_MAP = {"Create": "CREATE", "Update": "UPDATE", "Delete": "DELETE"}
-_GCP_CHANGE_MAP = {"CREATED": "CREATE", "UPDATED": "UPDATE", "DELETED": "DELETE"}
-
-
-def _norm_change(provider: str, rec: dict) -> Row:
-    """Normalize one provider change record (Azure `resourcechanges` KQL
-    row, resource_graph.go:190-220; GCP TemporalAsset, asset_inventory.
-    go:212-233) into the unified shape."""
-    mapping = _AZ_CHANGE_MAP if provider == "azure" else _GCP_CHANGE_MAP
-    ctype = mapping.get(rec["changeType"], "UPDATE")
-    return Row(
-        id=f"{provider}-{rec['id']}",
-        provider=provider,
-        resource_id=rec["resourceId"],
-        resource_name=rec.get("name"),
-        resource_type=rec.get("type"),
-        service=rec.get("service"),
-        project=rec.get("scope"),
-        region=rec.get("region"),
-        change_type=ctype,
-        severity="HIGH" if ctype == "DELETE" else "LOW",
-        timestamp=rec["timestamp"],
-        detected_at=rec["timestamp"],
-        previous_state=json.dumps(rec["before"], sort_keys=True) if rec.get("before") else None,
-        current_state=json.dumps(rec["after"], sort_keys=True) if rec.get("after") else None,
-        changed_fields=json.dumps(sorted(rec.get("changedFields", []))),
-        change_metadata=None,
-    )
-
-
-def _fake_changes(provider: str, scope: str, n: int = 20) -> Iterator[dict]:
-    kinds = ("Create", "Update", "Delete") if provider == "azure" else (
-        "CREATED", "UPDATED", "DELETED")
-    types = _AZ_TYPES if provider == "azure" else _GCP_TYPES
-    for i in range(n):
-        t, svc = types[i % len(types)]
-        yield {
-            "id": f"{scope}-chg-{i:04d}",
-            "resourceId": f"{scope}/{t}/{i % 7:03d}",
-            "name": f"res-{i % 7:03d}",
-            "type": t,
-            "service": svc,
-            "scope": scope,
-            "region": "global",
-            "changeType": kinds[i % 3],
-            "timestamp": dt.datetime(2024, 1, 1) + dt.timedelta(hours=i),
-            "before": {"v": i - 1} if i % 3 != 0 else None,
-            "after": {"v": i} if i % 3 != 2 else None,
-            "changedFields": ["properties.v"] if i % 3 == 1 else [],
-        }
-
-
-def change_feed(spark: SparkSession, provider: str, scopes: list[str]) -> DataFrame:
-    """Provider change history → CHANGE_EVENT_SCHEMA rows, ready to append
-    to the shared change_events table."""
-    if provider not in ("azure", "gcp"):
-        raise ValueError(f"unsupported change provider: {provider}")
-    work = spark.createDataFrame([Row(scope=s) for s in scopes]).repartition(
-        min(len(scopes), spark.sparkContext.defaultParallelism)
-    )
-    return spark.createDataFrame(
-        work.rdd.mapPartitions(
-            lambda it: (
-                _norm_change(provider, rec) for w in it for rec in _fake_changes(provider, w.scope)
-            )
-        ),
-        CHANGE_EVENT_SCHEMA,
-    )

@@ -5,20 +5,13 @@ Parity with the reference's pkg/idmsdiscovery:
 * The identity-service catalog per provider and the result envelope
   mirror `idms_discovery.go:164-370` (AWS/GCP/Azure/K8s service lists,
   scope/region overrides, ByProvider counts).
-* Region scoring mirrors `region_detector.go:148-233`
-  (calculateRegionScore: latency/error penalties, service-count boosts,
-  common-region preference map, [0,1] clamp, reason buckets).
-* Service scoring mirrors `service_detector.go:130-244`
-  (calculateServiceScore: resource/activity boosts, error penalty,
-  core-service priority table, security-keyword fallback, 1-4 priority
-  buckets).
+* The service priority boost mirrors `service_detector.go:167-214`
+  (core-service priority table, security-keyword fallback).
 
-Spark-first shape: the scoring functions are pure Column expressions —
-they bolt onto the REAL scan-stats DataFrames the pipeline produces
-(per-region latency/error aggregates, per-service resource counts), so
-prioritization runs map-side over however many regions/services a
-100 TB estate reports; the static IDMS catalog itself is tiny and
-driver-built like every other service registry here.
+Spark-first shape: the boost is a pure Column expression, so it runs
+map-side over however many services an estate reports; the static IDMS
+catalog itself is tiny and driver-built like every other service
+registry here.
 """
 
 from __future__ import annotations
@@ -152,15 +145,8 @@ def discover_idms_services(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# Smart-scan scoring (region_detector.go / service_detector.go)
+# Smart-scan service boost (service_detector.go)
 # ---------------------------------------------------------------------------
-
-#: region_detector.go:184-199 — common-region preference boosts
-REGION_PREFERENCE = {
-    "us-east-1": 0.2, "us-west-2": 0.15, "eu-west-1": 0.15,
-    "eastus": 0.2, "westus2": 0.15, "westeurope": 0.15,
-    "us-central1": 0.2, "us-west1": 0.15, "europe-west1": 0.15,
-}
 
 #: service_detector.go:167-214 — core-service boosts. Ordered longest
 #: key first so substring matches are deterministic (the reference
@@ -202,92 +188,3 @@ def service_priority_boost(name_col: Column) -> Column:
         c = low.contains(kw)
         sec = c if sec is None else (sec | c)
     return expr.when(sec, F.lit(0.15)).otherwise(F.lit(0.0))
-
-
-def region_score(name_col: Column, latency_ms: Column, error_rate: Column,
-                 service_count: Column) -> Column:
-    """calculateRegionScore (:148-180): start at 1.0, latency and error
-    penalties, service-count boosts, preference map, clamp to [0, 1].
-    Rows with NULL latency (never measured) take the 0.5 default."""
-    pref = None
-    for region, boost in sorted(REGION_PREFERENCE.items()):
-        cond = name_col == region
-        pref = F.when(cond, F.lit(boost)) if pref is None else pref.when(
-            cond, F.lit(boost))
-    pref = pref.otherwise(F.lit(0.0))
-    score = (
-        F.lit(1.0)
-        - F.when(latency_ms > 1000, 0.3)
-        .when(latency_ms > 500, 0.1).otherwise(0.0)
-        - error_rate * 0.5
-        + F.when(service_count > 50, 0.2)
-        .when(service_count > 20, 0.1).otherwise(0.0)
-        + pref
-    )
-    clamped = F.greatest(F.lit(0.0), F.least(F.lit(1.0), score))
-    return F.when(latency_ms.isNull(), F.lit(0.5)).otherwise(clamped)
-
-
-def score_reason(score: Column) -> Column:
-    """getScoreReason buckets (:204-216)."""
-    return (
-        F.when(score > 0.8, "High priority: Low latency, active region")
-        .when(score > 0.6, "Medium priority: Moderate performance")
-        .when(score > 0.4, "Low priority: High latency or errors")
-        .otherwise("Very low priority: Poor performance")
-    )
-
-
-def prioritize_regions(stats: DataFrame, name_col: str = "region",
-                       latency_col: str = "latency_ms",
-                       error_col: str = "error_rate",
-                       count_col: str = "service_count") -> DataFrame:
-    """(… , priority_score, priority_reason) ordered best-first —
-    prioritizeRegions(:120-146) over a region-stats DataFrame."""
-    s = region_score(F.col(name_col), F.col(latency_col),
-                     F.col(error_col), F.col(count_col))
-    return (
-        stats.withColumn("priority_score", F.round(s, 4))
-        .withColumn("priority_reason", score_reason(F.col("priority_score")))
-        .orderBy(F.desc("priority_score"), name_col)
-    )
-
-
-def service_score(name_col: Column, resource_count: Column,
-                  error_rate: Column) -> Column:
-    """calculateServiceScore (:130-164): base 0.5, resource/activity
-    boosts (has-resources 0.3 + count tier + recent-activity 0.2, where
-    recent activity == has resources, matching measureServiceActivity
-    :111-128), error penalty, service boost, clamp."""
-    has = resource_count > 0
-    score = (
-        F.lit(0.5)
-        + F.when(has, 0.3).otherwise(0.0)
-        + F.when(resource_count > 10, 0.2)
-        .when(resource_count > 0, 0.1).otherwise(0.0)
-        + F.when(has, 0.2).otherwise(0.0)
-        - error_rate * 0.3
-        + service_priority_boost(name_col)
-    )
-    return F.greatest(F.lit(0.0), F.least(F.lit(1.0), score))
-
-
-def service_priority(score: Column) -> Column:
-    """calculatePriority buckets (:232-242): 1=high … 4=very low."""
-    return (
-        F.when(score > 0.8, 1).when(score > 0.6, 2)
-        .when(score > 0.4, 3).otherwise(4).cast("int")
-    )
-
-
-def prioritize_services(stats: DataFrame, name_col: str = "service",
-                        count_col: str = "resource_count",
-                        error_col: str = "error_rate") -> DataFrame:
-    """(…, activity_score, priority) ordered best-first —
-    prioritizeServices(:244-275) over a service-stats DataFrame."""
-    s = service_score(F.col(name_col), F.col(count_col), F.col(error_col))
-    return (
-        stats.withColumn("activity_score", F.round(s, 4))
-        .withColumn("priority", service_priority(F.col("activity_score")))
-        .orderBy(F.desc("activity_score"), name_col)
-    )

@@ -32,13 +32,19 @@ Documented determinism/semantics choices (KQL leaves them loose):
 from __future__ import annotations
 
 import datetime as _datetime
+import decimal
+import math
 import os
 import re
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.errors import AnalysisException
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import FractionalType, IntegralType, NumericType
 from pyspark.sql.types import StringType as _StringType
+
+from corkscrew_spark import skipping as _skip
 
 __all__ = ["kql_to_df", "KqlError"]
 
@@ -142,17 +148,29 @@ def _has_term(haystack: Column, term: Column,
                       F.lit(r"($|" + b + ")")))
 
 
+#: string-literal text Spark's ANSI cast accepts as an integral /
+#: fractional number; any other literal compared to a numeric operand
+#: fails that cast (CAST_INVALID_INPUT) when the plan runs
+_INTEGRAL_TEXT = re.compile(r"\s*[+-]?\d+\s*")
+_FRACTIONAL_TEXT = re.compile(
+    r"\s*[+-]?(?:(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?[dDfF]?"
+    r"|NaN|Infinity)\s*")
+
+
 class _ExprParser:
     """Parses one KQL scalar/aggregate expression from a token stream."""
 
     def __init__(self, toks: list[_Tok], start: int = 0,
-                 window=None):
+                 window=None, df: DataFrame | None = None):
         self.toks = toks
         self.i = start
         #: WindowSpec for serialized row functions (row_number/prev/
         #: next/row_cumsum) — set by `extend` when the pipeline has an
         #: in-force `sort by`; None means those functions refuse
         self.window = window
+        #: the stage's input frame: comparisons type-check their
+        #: operands against it (None: no check)
+        self.df = df
 
     # -- stream helpers ------------------------------------------------------
     def peek(self) -> _Tok | None:
@@ -205,15 +223,50 @@ class _ExprParser:
             return True
         return False
 
+    def _type_check(self, col: Column, tok: _Tok | None,
+                    literal: str | None) -> None:
+        """Kusto rejects a numeric operand compared to a non-numeric
+        string literal at compile time; Spark would instead fail the
+        literal's ANSI cast when the plan runs. A bare column's type
+        comes from the stage input's schema, any other operand's
+        (``tok`` None) from ``df.select(col)``: both only analyse, no
+        job runs."""
+        if literal is None or self.df is None:
+            return
+        if tok is not None and tok.kind == "ident" \
+                and tok.text in self.df.columns:
+            dtype = self.df.schema[tok.text].dataType
+        else:
+            try:
+                dtype = self.df.select(col).schema[0].dataType
+            except AnalysisException:
+                return  # not resolvable here: Spark reports it itself
+        text = (_INTEGRAL_TEXT if isinstance(dtype, IntegralType)
+                else _FRACTIONAL_TEXT
+                if isinstance(dtype, FractionalType) else None)
+        if text is not None and not text.fullmatch(literal):
+            raise KqlError(
+                "KQL: type mismatch in comparison — a numeric operand "
+                f"({dtype.simpleString()}) is compared to the "
+                f"non-numeric string literal {literal!r}")
+
+    def _operand(self) -> tuple[Column, _Tok | None]:
+        """One comparison operand, and its token when it is one token."""
+        t = self.peek()
+        col = self.add_expr()
+        return col, t if self.toks[self.i - 1] is t else None
+
     def cmp_expr(self) -> Column:
-        left = self.add_expr()
+        left, ltok = self._operand()
         t = self.peek()
         if t is None:
             return left
         op = t.text.lower() if t.kind in ("op", "ident") else None
         if op in ("==", "!=", "<", ">", "<=", ">="):
             self.i += 1
-            right = self.add_expr()
+            right, rtok = self._operand()
+            self._type_check(left, ltok, _lit_str(rtok))
+            self._type_check(right, rtok, _lit_str(ltok))
             return {
                 "==": left == right, "!=": left != right,
                 "<": left < right, ">": left > right,
@@ -291,16 +344,21 @@ class _ExprParser:
                 res = F.lower(left.cast("string")).isin(
                     [v.lower() for v in vals])
             else:
+                for v in vals:
+                    if isinstance(v, str):
+                        self._type_check(left, ltok, v)
                 res = left.isin(vals)
             return ~res if op == "!in" else res
         if op in ("between", "!between"):
             # x between (lo .. hi) — inclusive both ends (Kusto semantics)
             self.i += 1
             self.expect("(")
-            lo = self.add_expr()
+            lo, lo_tok = self._operand()
             self.expect("..")
-            hi = self.add_expr()
+            hi, hi_tok = self._operand()
             self.expect(")")
+            self._type_check(left, ltok, _lit_str(lo_tok))
+            self._type_check(left, ltok, _lit_str(hi_tok))
             res = (left >= lo) & (left <= hi)
             return ~res if op == "!between" else res
         if op in ("has_any", "has_all"):
@@ -523,10 +581,8 @@ class _ExprParser:
                 "supported — rewrite as grp = row_cumsum(iff("
                 "restart, 1, 0)) and sum within grp; it distributes, "
                 f"restart cannot (at {pos})")
-        from pyspark.sql.window import Window as _W
-
         return F.sum(args[0]).over(
-            w.rowsBetween(_W.unboundedPreceding, _W.currentRow))
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
 
 
 def _regex_quote(c: Column) -> Column:
@@ -1160,24 +1216,6 @@ def _parse_externaldata(rest: str, exact: bool = False):
     return cols, paths, fmt, header
 
 
-def externaldata_reads(query: str) -> list[tuple[list[str], str]]:
-    """Every well-formed ``externaldata`` spec in the query —
-    ``(paths, format)`` per read — for the governor/estimator to
-    price at file size. A keyword match that does not parse is
-    skipped: it is either inside a string literal (not a read) or a
-    malformed spec the compiler will refuse anyway, so skipping
-    cannot let an executable read go unpriced."""
-    out: list[tuple[list[str], str]] = []
-    for m in re.finditer(r"(?<!\w)externaldata(?!\w)", query,
-                         re.IGNORECASE):
-        try:
-            _, paths, fmt, _ = _parse_externaldata(query[m.end():])
-        except KqlError:
-            continue
-        out.append((paths, fmt))
-    return out
-
-
 def _externaldata_roots_effective(roots: list[str] | None) -> list[str]:
     """The allow-list the compiler will enforce: the explicit argument,
     else CORKSCREW_EXTERNALDATA_ROOTS (os.pathsep-separated)."""
@@ -1285,37 +1323,21 @@ def _unwrap_let_body(body: str) -> tuple[str | None, str]:
     """(wrapper|None, inner) for `materialize(…)`/`toscalar(…)` let
     bodies — only when the parens really close at the END (a body
     like `toscalar(T | count) + 1` must not unwrap). The depth scan
-    is QUOTE-AWARE like every splitter in this file (r11 review: a
-    `)` inside a string literal drove the depth negative and a valid
-    `materialize(T | where s contains ')')` spuriously failed)."""
+    runs over tokens, so a paren inside a string literal never counts
+    (`materialize(T | where s contains ')')` unwraps)."""
     m = _LET_WRAP_RE.match(body)
     if not m:
         return None, body
-    inner = m.group(2)
     depth = 0
-    quote: str | None = None
-    verbatim = False
-    i = 0
-    while i < len(inner):  # reject `toscalar(A) … (B)` shapes
-        ch = inner[i]
-        if quote is not None:
-            if (ch == "\\" and not verbatim and quote in "'\""
-                    and i + 1 < len(inner)):
-                i += 2
-                continue
-            if ch == quote:
-                quote = None
-        elif ch in "'\"":
-            quote = ch
-            verbatim = i > 0 and inner[i - 1] == "@"
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth < 0:
-                return None, body
-        i += 1
-    return m.group(1).lower(), inner.strip()
+    try:
+        for t in _tokenize(m.group(2)):  # reject `toscalar(A) … (B)`
+            if t.kind == "op" and t.text in ("(", ")"):
+                depth += 1 if t.text == "(" else -1
+                if depth < 0:
+                    return None, body
+    except KqlError:
+        pass  # the inner compile reports it
+    return m.group(1).lower(), m.group(2).strip()
 
 
 def _scalar_to_literal_src(v) -> str:
@@ -1334,15 +1356,12 @@ def _scalar_to_literal_src(v) -> str:
     if isinstance(v, bool):
         return "true" if v else "false"
     if isinstance(v, float):
-        import decimal
-        import math
         if not math.isfinite(v):
             raise KqlError(
                 f"KQL: toscalar produced a non-finite number ({v}) — "
                 "not expressible as a KQL literal")
         return format(decimal.Decimal(repr(v)), "f")
-    import decimal as _dec
-    if isinstance(v, _dec.Decimal):
+    if isinstance(v, decimal.Decimal):
         # Spark DecimalType (parquet money columns) collects as
         # decimal.Decimal — render positionally like floats (r11
         # review 3: it fell through to the unsupported-type raise)
@@ -1365,15 +1384,28 @@ def _scalar_to_literal_src(v) -> str:
         "datetime")
 
 
+def _scalar_placeholder(dtype) -> str:
+    """A parenthesized literal of ``dtype``'s KQL kind, standing in for
+    a ``toscalar`` value the record pass does not collect. It compiles
+    wherever the value would, and never mines as a pruning predicate
+    (``k >= (0)`` is not a ``col op literal`` term)."""
+    if isinstance(dtype, NumericType):
+        return "(0)"
+    epoch = "(datetime(1970-01-01))"
+    return {"boolean": "(false)", "date": epoch, "timestamp": epoch,
+            "timestamp_ntz": epoch}.get(dtype.typeName(), "('')")
+
+
 def _compile_query(query: str, tables: dict[str, DataFrame],
-                   externaldata_roots: list[str] | None = None
-                   ) -> DataFrame:
+                   externaldata_roots: list[str] | None = None,
+                   reads: _Reads | None = None) -> DataFrame:
     """Compile a full KQL QUERY: zero or more ``let Name = …;``
     binding statements, then the final tabular expression. Tabular
     lets compile to DataFrames visible to every LATER statement
     (plain lazy plans — Spark reuses the subtree; no materialization,
     matching Kusto's default non-materialized ``let``); scalar-
-    literal lets substitute lexically. Reference KQL surface:
+    literal lets substitute lexically. ``reads`` resolves warehouse
+    table names (``kql_to_df_skipping``). Reference KQL surface:
     plugins/azure-provider/resource_graph.go — ARG dashboards lead
     with let bindings almost universally."""
     stmts = _split_statements(query)
@@ -1385,6 +1417,7 @@ def _compile_query(query: str, tables: dict[str, DataFrame],
             "a let statement")
     tabs = dict(tables)
     subs: list[tuple[str, str]] = []
+    recording = reads is not None and reads.log is not None
     for s in stmts[:-1]:
         m = _LET_RE.match(s)
         if not m:
@@ -1401,16 +1434,20 @@ def _compile_query(query: str, tables: dict[str, DataFrame],
             # (`let maxts = toscalar(T | summarize max(ts));`): first
             # column of the first row, rendered back to literal source
             # so downstream substitution is identical to a hand-typed
-            # scalar let. This is a DRIVER ACTION at compile time —
-            # exactly Kusto's semantics; the inner pipeline's reads
-            # are governed like any other (refs unwrap too).
-            rows = _StageCompiler(tabs, externaldata_roots, sub=True)\
-                .compile(inner).limit(1).collect()
-            if not rows or not rows[0].__fields__:
+            # scalar let. A DRIVER ACTION at compile time (Kusto's
+            # semantics); the record pass substitutes a placeholder.
+            df = _StageCompiler(tabs, externaldata_roots, sub=True,
+                                reads=reads).compile(inner)
+            rows = ([df.schema.fields] if recording
+                    else df.limit(1).collect())
+            if not rows or not rows[0]:
                 raise KqlError(
                     f"KQL: toscalar for {name!r} returned no rows")
-            subs.append((name,
-                         _scalar_to_literal_src(rows[0][0])))
+            if recording:
+                reads.guessed = True
+                subs.append((name, _scalar_placeholder(rows[0][0].dataType)))
+            else:
+                subs.append((name, _scalar_to_literal_src(rows[0][0])))
             continue
         if wrap == "materialize":
             # materialize() is a caching HINT in Kusto; results are
@@ -1424,9 +1461,127 @@ def _compile_query(query: str, tables: dict[str, DataFrame],
             subs.append((name, lit))
         else:
             tabs[name] = _StageCompiler(
-                tabs, externaldata_roots, sub=True).compile(body)
-    return _StageCompiler(tabs, externaldata_roots).compile(
+                tabs, externaldata_roots, sub=True,
+                reads=reads).compile(body)
+    return _StageCompiler(tabs, externaldata_roots, reads=reads).compile(
         _apply_scalar_lets(stmts[-1], subs))
+
+
+class _RecordAborted(Exception):
+    """The record pass met a stage whose output columns depend on the
+    data (``bag_unpack``, ``pivot``): compiling past it needs an action."""
+
+
+class _Reads:
+    """The warehouse reads of one KQL statement, as the compiler
+    resolves them. Each table is read plain once, at its first
+    resolution. In the record pass (``log`` is a list) a resolution
+    returns that plain read and logs a ``skipping.ScanRead`` with the
+    branches mined from the reference's leading wheres; otherwise it
+    returns the plain read pruned by them, planned once per distinct
+    (table, branches) — by the admission when a budget is armed."""
+
+    def __init__(self, spark, warehouse: dict[str, str],
+                 tables: dict[str, DataFrame] | None,
+                 dry_run: bool = False):
+        # table keys are case-insensitive: refuse a name passed both
+        # ways instead of guessing which source the caller meant
+        clash = ({n.lower() for n in tables or {}}
+                 & {n.lower() for n in warehouse})
+        if clash:
+            raise KqlError(
+                "KQL: table name(s) registered both as DataFrame and "
+                f"warehouse directory: {sorted(clash)} — pass each name "
+                "through exactly one of `tables`/`warehouse`")
+        self.spark = spark
+        self.paths = {n.lower(): (n, p) for n, p in warehouse.items()}
+        #: the dry-run prices externaldata regardless of the allow-list
+        self.dry_run = dry_run
+        self.plain: dict[str, DataFrame] = {}
+        self.plans: dict[tuple[str, str], dict] = {}
+        self.log: list | None = None
+        #: a toscalar placeholder stands in for a value in the log
+        self.guessed = False
+
+    def table(self, key: str, wheres: list[str]) -> DataFrame:
+        name, path = self.paths[key]
+        plain = self.plain.get(key)
+        if plain is None:
+            plain = self.plain[key] = self.spark.read.parquet(path)
+        preds, dnf = _mine_wheres(wheres)
+        read = _skip.ScanRead(name, path,
+                              [preds + b for b in dnf] if dnf else [preds])
+        if self.log is not None:
+            self.log.append(read)
+            return plain
+        if not any(read.branches):
+            return plain
+        plan_key = (key, repr(read.branches))
+        if plan_key not in self.plans:
+            self.plans[plan_key] = _skip.admit([read], price=False)[1][0]
+        try:
+            return _skip.read_skipping_any(
+                self.spark, path, read.branches,
+                plan=self.plans[plan_key], base=plain)
+        except Exception:  # noqa: BLE001 — the plain read stands
+            return plain
+
+    def external(self, paths: list[str]) -> None:
+        """Log an ``externaldata`` read at raw file weight."""
+        self.log.append(_skip.ScanRead(
+            f"externaldata#{len(self.log)}", None, [[]], files=list(paths),
+            nbytes=externaldata_bytes(paths)))
+
+    def admit(self, query: str, tables: dict[str, DataFrame] | None,
+              roots: list[str] | None, budget: int | None) -> dict:
+        """Record the statement's reads, then price and refuse them
+        through ``skipping.admit``; the admitted plans serve the
+        statement's real compile."""
+        self.log, self.guessed = [], False
+        try:
+            _compile_query(query, tables or {}, roots, self)
+            merged = {}
+            for r in self.log:
+                k = (r.name.lower(), repr(r.branches))
+                merged[k] = (merged[k]._replace(refs=merged[k].refs + r.refs)
+                             if k in merged else r)
+            scans = list(merged.values())
+        except (_RecordAborted, KqlError, ValueError) as ex:
+            # a toscalar placeholder in a literal-only slot (`take n`)
+            # fails where the real value would not
+            if not (isinstance(ex, _RecordAborted) or self.guessed):
+                raise
+            scans = self._by_mention(query)
+        finally:
+            self.log = None
+        est, plans = _skip.admit(scans, budget)
+        self.plans = {(r.name.lower(), repr(r.branches)): p
+                      for r, p in zip(scans, plans) if p is not None}
+        return est
+
+    def _by_mention(self, query: str) -> list:
+        """The reads of a statement the record pass cannot compile,
+        priced from the text: each warehouse table at full scan once
+        per word mention (×64 when ``partition`` is mentioned), and
+        each ``externaldata`` spec at raw weight."""
+        times = (_StageCompiler._PARTITION_MAX if re.search(
+            r"(?<!\w)partition(?!\w)", query, re.IGNORECASE) else 1)
+        self.log = []
+        for name, path in self.paths.values():
+            n = len(re.findall(rf"(?<!\w){re.escape(name)}(?!\w)", query,
+                               re.IGNORECASE))
+            if n:
+                self.log.append(_skip.ScanRead(name, path, [[]],
+                                               refs=n * times))
+        for m in re.finditer(r"(?<!\w)externaldata(?!\w)", query,
+                             re.IGNORECASE):
+            try:
+                _cols, paths, _fmt, _hdr = _parse_externaldata(
+                    query[m.end():])
+            except KqlError:
+                continue  # inside a string literal, or refused anyway
+            self.external(paths)
+        return self.log
 
 
 def _expect_next(toks: list, i: int, allowed: tuple, what: str) -> None:
@@ -1458,9 +1613,15 @@ def _expr_name(toks: list[_Tok], start: int, end: int, fallback: str) -> str:
 class _StageCompiler:
     def __init__(self, tables: dict[str, DataFrame],
                  externaldata_roots: list[str] | None = None,
-                 sub: bool = False):
+                 sub: bool = False, reads: _Reads | None = None):
+        #: caller frames and let/as bindings, returned as they are
         self.tables = {k.lower(): v for k, v in tables.items()}
         self.externaldata_roots = externaldata_roots
+        #: resolves warehouse table names (None: there are none)
+        self.reads = reads
+        #: the record pass's log length when the current pipeline
+        #: began: a branch-mode partition repeats every read since
+        self._since = 0
         # sub=True marks a compiler whose WHOLE input is a sub-
         # expression (a let body / toscalar body) — render must refuse
         # there just like in a parenthesized join side
@@ -1491,18 +1652,42 @@ class _StageCompiler:
         before = set(self.tables) if self._depth > 1 else None
         # a sub-pipeline (join/union/lookup side) starts with no order
         # in force and must not leak one back to the outer pipeline
-        ser_saved = (self._ser_order, self._ser_refs, self._ser_pk)
+        ser_saved = (self._ser_order, self._ser_refs, self._ser_pk,
+                     self._since)
         self._ser_order = None
         self._ser_refs = set()
         self._ser_pk = None
+        self._since = len(self.reads.log) if self._recording else 0
         try:
             return self._compile(query)
         finally:
             self._depth -= 1
-            self._ser_order, self._ser_refs, self._ser_pk = ser_saved
+            (self._ser_order, self._ser_refs, self._ser_pk,
+             self._since) = ser_saved
             if before is not None:
                 for k in set(self.tables) - before:
                     del self.tables[k]
+
+    @property
+    def _recording(self) -> bool:
+        return self.reads is not None and self.reads.log is not None
+
+    def _known(self, name: str) -> bool:
+        return name.lower() in self.tables or (
+            self.reads is not None and name.lower() in self.reads.paths)
+
+    def _table(self, name: str, wheres: list[str]) -> DataFrame:
+        """THE table-name lookup: a caller frame or a let/as binding as
+        it is, else the warehouse read ``self.reads`` resolves for this
+        reference (``wheres``: its leading ``where`` stage texts, after
+        scalar substitution; ``[]`` for a union/lookup operand)."""
+        key = name.lower()
+        if key in self.tables:
+            return self.tables[key]
+        if self._known(key):
+            return self.reads.table(key, wheres)
+        have = set(self.tables) | set(self.reads.paths if self.reads else ())
+        raise KqlError(f"KQL: unknown table {name!r} (have: {sorted(have)})")
 
     def _compile(self, query: str) -> DataFrame:
         stages = _split_stages(query)
@@ -1524,7 +1709,7 @@ class _StageCompiler:
         # ordinary DataFrame
         hm = re.match(r"(print|range|datatable|externaldata)\b\s*(.*)$",
                       head, re.DOTALL | re.IGNORECASE)
-        if hm and not (hm.group(1).lower() in self.tables
+        if hm and not (self._known(hm.group(1))
                        and not hm.group(2).strip()):
             self._head_name = hm.group(1).lower()
             df = self._table_less_head(hm.group(1).lower(), hm.group(2))
@@ -1533,18 +1718,20 @@ class _StageCompiler:
             return df
         if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", head):
             raise KqlError(f"KQL: first stage must be a table name, got {head!r}")
-        if head.lower() not in self.tables:
-            raise KqlError(f"KQL: unknown table {head!r} "
-                           f"(have: {sorted(self.tables)})")
-        df = self.tables[head.lower()]
+        wheres: list[str] = []
+        for stage in stages[1:]:
+            m = re.match(r"where\s+(.*)", stage.strip(),
+                         re.DOTALL | re.IGNORECASE)
+            if not m:
+                break  # the first other stage ends the minable prefix
+            wheres.append(m.group(1))
+        df = self._table(head, wheres)
         self._head_name = head  # for `union withsource=` labeling
         for stage in stages[1:]:
             df = self.apply_stage(df, stage)
         return df
 
     def _table_less_head(self, kind: str, rest: str) -> DataFrame:
-        from pyspark.sql import SparkSession
-
         spark = SparkSession.active()
         seed = spark.range(1)  # one-row frame to evaluate constants on
         if kind == "print":
@@ -1712,32 +1899,36 @@ class _StageCompiler:
         ``CORKSCREW_EXTERNALDATA_ROOTS`` env var (``os.pathsep``-
         separated directories); with neither set, every externaldata
         query refuses — a query string must not be able to read
-        arbitrary filesystem paths. Under a scan budget the read is
-        priced at the files' on-disk bytes (``externaldata_bytes``):
-        raw files have no zone maps to prune with, so the honest
-        estimate is the full weight, same posture as the no-stats
-        fallback. The declared schema is the contract: csv/tsv/json
-        reads are schema'd (malformed cells go null — Kusto's
-        permissive reader), parquet reads cast each declared column,
-        failing loud on a missing one."""
+        arbitrary filesystem paths. The record pass compiles it as an
+        empty frame of the declared schema and prices it at the
+        files' on-disk bytes (``externaldata_bytes``): raw files have
+        no zone maps to prune with, so the honest estimate is the full
+        weight. The declared schema is the contract: csv/tsv/json reads
+        are schema'd (malformed cells go null — Kusto's permissive
+        reader), parquet reads cast each declared column, failing loud
+        on a missing one."""
         cols, paths, fmt, header = _parse_externaldata(rest, exact=True)
-        roots = _externaldata_roots_effective(self.externaldata_roots)
-        if not roots:
-            raise KqlError(
-                "KQL: externaldata is disabled — allow-list the "
-                "readable directories via the externaldata_roots "
-                "argument or CORKSCREW_EXTERNALDATA_ROOTS before a "
-                "query string may open local files")
-        for p in paths:
-            if not _externaldata_path_allowed(p, roots):
+        if not (self._recording and self.reads.dry_run):
+            roots = _externaldata_roots_effective(self.externaldata_roots)
+            if not roots:
                 raise KqlError(
-                    f"KQL: externaldata path {p!r} is outside the "
-                    f"allow-listed root(s) {roots}")
-            if not os.path.exists(os.path.realpath(p)):
-                raise KqlError(
-                    f"KQL: externaldata path {p!r} does not exist")
+                    "KQL: externaldata is disabled — allow-list the "
+                    "readable directories via the externaldata_roots "
+                    "argument or CORKSCREW_EXTERNALDATA_ROOTS before a "
+                    "query string may open local files")
+            for p in paths:
+                if not _externaldata_path_allowed(p, roots):
+                    raise KqlError(
+                        f"KQL: externaldata path {p!r} is outside the "
+                        f"allow-listed root(s) {roots}")
+                if not os.path.exists(os.path.realpath(p)):
+                    raise KqlError(
+                        f"KQL: externaldata path {p!r} does not exist")
         ddl = ", ".join(f"{n} {self._DATATABLE_TYPES[t]}"
                         for n, t in cols)
+        if self._recording:
+            self.reads.external(paths)
+            return spark.createDataFrame([], ddl)
         if fmt == "parquet":
             raw = spark.read.parquet(*paths)
             missing = [n for n, _t in cols if n not in raw.columns]
@@ -1798,8 +1989,6 @@ class _StageCompiler:
         """Coerce a parsed literal to its DECLARED column type, or
         raise at compile time — a mistyped cell must not abort the
         job later (the top-nested label lesson)."""
-        import decimal as _decimal
-
         if v is None:
             return None
         if kt in ("real", "double") and isinstance(v, int) \
@@ -1807,14 +1996,14 @@ class _StageCompiler:
             return float(v)
         if kt == "decimal" and isinstance(v, (int, float)) \
                 and not isinstance(v, bool):
-            return _decimal.Decimal(str(v))
+            return decimal.Decimal(str(v))
         ok = {
             "string": str, "guid": str, "dynamic": str,
             "long": int, "int": int,
             "real": float, "double": float,
             "bool": bool, "boolean": bool,
             "datetime": _datetime.datetime,
-            "decimal": _decimal.Decimal,
+            "decimal": decimal.Decimal,
         }[kt]
         if isinstance(v, bool) and ok is not bool:
             pass  # bool is an int subclass: fall through to the raise
@@ -1858,7 +2047,7 @@ class _StageCompiler:
             self._ser_refs = set()
         if op == "where":
             toks = _tokenize(rest)
-            p = _ExprParser(toks)
+            p = _ExprParser(toks, df=df)
             cond = p.parse()
             _expect_next(toks, p.i, (), "where")
             return df.filter(cond)
@@ -2045,11 +2234,10 @@ class _StageCompiler:
                 "KQL: as takes `as [hint.materialized=true] Name`, "
                 f"got {rest.strip()!r}")
         name = m.group(1)
-        if name.lower() in self.tables:
+        if self._known(name):
             raise KqlError(
                 f"KQL: as {name!r} would shadow an existing table — "
-                "pick an unused name (scan attribution is by table "
-                "name, so shadowing would misprice the query)")
+                "pick an unused name")
         self.tables[name.lower()] = df
         return df
 
@@ -2091,9 +2279,8 @@ class _StageCompiler:
     def _partition_vector_reason(cls, body: str) -> str | None:
         """None when the body compiles vectorized (one scan, grouped
         rewrites); else the human reason it needs branch mode. STATIC
-        (text-only): `_pipeline_refs` prices branch mode at the
-        worst-case partition count, so the decision must be makeable
-        before any data is read."""
+        (text-only), so the record pass prices the mode the real
+        compile runs without reading any data."""
         stages = _split_stages(body)
         if not stages:
             return "empty partition body"
@@ -2149,8 +2336,7 @@ class _StageCompiler:
     @classmethod
     def _partition_parse(cls, rest: str
                          ) -> tuple[str, str, str, str | None]:
-        """→ (key, body, mode, vector_reason); shared with the
-        governor's pricing pass so compile and estimate can't drift."""
+        """→ (key, body, mode, vector_reason)."""
         m = cls._PARTITION_RE.match(rest.strip())
         if not m:
             raise KqlError(
@@ -2203,10 +2389,11 @@ class _StageCompiler:
           no grouped rewrite): compile the body once per distinct key
           value over a filtered branch and union — Kusto's legacy
           strategy, including its documented 64-partition cap. Each
-          branch re-plans the upstream pipeline, so an armed scan
-          budget prices the statement at the worst-case multiplier
-          (see ``_pipeline_refs``); the distinct-key collect is
-          bounded at 65 rows.
+          branch re-plans the upstream pipeline, so the record pass
+          (which skips the distinct-key collect and compiles the body
+          once) repeats every read since the pipeline began at the
+          worst-case multiplier; the distinct-key collect is bounded
+          at 65 rows.
         """
         key, body, mode, _reason = self._partition_parse(rest)
         if key not in df.columns:
@@ -2219,8 +2406,6 @@ class _StageCompiler:
 
     def _grouped_limit(self, df: DataFrame, pk: str,
                        orders: list[Column], n: int) -> DataFrame:
-        from pyspark.sql.window import Window
-
         rn = "__prn__"
         while rn in df.columns:
             rn += "_"
@@ -2355,7 +2540,7 @@ class _StageCompiler:
                     f"KQL: {verb} inside a partition body is not "
                     "supported (render closes the outermost pipeline; "
                     "as would bind once per branch)")
-        rows = (df.select(key).distinct()
+        rows = ([] if self._recording else df.select(key).distinct()
                 .limit(self._PARTITION_MAX + 1).collect())
         vals = [r[0] for r in rows]
         if len(vals) > self._PARTITION_MAX:
@@ -2389,7 +2574,13 @@ class _StageCompiler:
             # schema and any body errors surface — but limit(0): an
             # ungrouped aggregate body (count, summarize with no by)
             # would otherwise emit its one seed row (r12 review)
-            return _apply(df.filter(F.lit(False))).limit(0)
+            out = _apply(df.filter(F.lit(False))).limit(0)
+            if self._recording:  # every read since the pipeline began
+                log = self.reads.log
+                log[self._since:] = [
+                    r._replace(refs=r.refs * self._PARTITION_MAX)
+                    for r in log[self._since:]]
+            return out
         branches = []
         for v in vals:
             sub = (df.filter(F.col(key).isNull()) if v is None
@@ -2482,7 +2673,7 @@ class _StageCompiler:
                     "supported — steps are row predicates; compute "
                     "derived columns with `extend` before the scan")
             toks = _tokenize(cond_src)
-            p = _ExprParser(toks)
+            p = _ExprParser(toks, df=df)
             cond = p.parse()
             _expect_next(toks, p.i, (), f"scan step {sm.group(1)}")
             steps.append((sm.group(1), cond))
@@ -2718,6 +2909,8 @@ class _StageCompiler:
             if not keys:
                 keys = [c for c in df.columns
                         if c != pcol and c not in agg_inputs]
+            if self._recording:
+                raise _RecordAborted("pivot")
             return df.groupBy(*keys).pivot(pcol).agg(agg)
         if plugin == "bag_unpack":
             if not args or not args[0].strip():
@@ -2768,8 +2961,9 @@ class _StageCompiler:
             # the classic mistake) would OOM the driver and produce a
             # million-column plan at 100 TB. Cap it LOUDLY; Spark's
             # own pivot has the same guard (spark.sql.pivotMaxValues).
-            import os as _os
-            max_keys = int(_os.environ.get(
+            if self._recording:
+                raise _RecordAborted("bag_unpack")
+            max_keys = int(os.environ.get(
                 "CORKSCREW_BAG_UNPACK_MAX_KEYS", "1000"))
             key_rows = keys_df.limit(max_keys + 1).collect()
             if len(key_rows) > max_keys:
@@ -2821,8 +3015,6 @@ class _StageCompiler:
                 raise KqlError(
                     "KQL: evaluate narrow() needs a serialized input "
                     "for a deterministic Row — `sort by …` first")
-            from pyspark.sql.window import Window
-
             orders = self._ordered(self._ser_order)
             w = (Window.partitionBy(self._ser_pk).orderBy(*orders)
                  if self._ser_pk is not None
@@ -2925,7 +3117,7 @@ class _StageCompiler:
                     and toks[i + 1].kind == "op" and toks[i + 1].text == "="):
                 name = t.text
                 i += 2
-            p = _ExprParser(toks, i)
+            p = _ExprParser(toks, i, df=df)
             col = p.parse()
             if name is None:
                 name = _expr_name(toks, i, p.i, f"Column{k + 1}")
@@ -2957,8 +3149,6 @@ class _StageCompiler:
             for j, t in enumerate(toks))
         if not used or self._ser_order is None:
             return None
-        from pyspark.sql.window import Window
-
         orders = self._ordered(self._ser_order)
         if self._ser_pk is not None:
             return Window.partitionBy(self._ser_pk).orderBy(*orders)
@@ -3001,7 +3191,7 @@ class _StageCompiler:
             if t.kind != "ident" or i + 1 >= len(toks) or toks[i + 1].text != "=":
                 raise KqlError(f"KQL: extend needs Name = expr at {t.pos}")
             name = t.text
-            p = _ExprParser(toks, i + 2, window=w)
+            p = _ExprParser(toks, i + 2, window=w, df=df)
             df = df.withColumn(name, p.parse())
             i = p.i
             _expect_next(toks, i, (",",), "extend")
@@ -3027,7 +3217,7 @@ class _StageCompiler:
                     and toks[i + 1].kind == "op" and toks[i + 1].text == "="):
                 name = t.text
                 i += 2
-            p = _ExprParser(toks, i)
+            p = _ExprParser(toks, i, df=df)
             col = p.parse()
             if name is None:
                 # KQL names a bare agg call after the function: count_, sum_x
@@ -3052,7 +3242,7 @@ class _StageCompiler:
                         and toks[i + 1].kind == "op" and toks[i + 1].text == "="):
                     name = t.text
                     i += 2
-                p = _ExprParser(toks, i)
+                p = _ExprParser(toks, i, df=df)
                 col = p.parse()
                 if name is None:
                     name = _expr_name(toks, i, p.i, f"key{len(keys) + 1}")
@@ -3279,9 +3469,7 @@ class _StageCompiler:
                 operands.append(self.compile(part))
                 labels.append(f"union_arg{i}")
             elif re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", part):
-                if part.lower() not in self.tables:
-                    raise KqlError(f"KQL: union of unknown table {part!r}")
-                operands.append(self.tables[part.lower()])
+                operands.append(self._table(part, []))
                 labels.append(part)
             else:
                 raise KqlError(f"KQL: cannot parse union operand {part!r}")
@@ -3298,6 +3486,18 @@ class _StageCompiler:
         for o in operands[1:]:
             out = out.unionByName(o, allowMissingColumns=(kind == "outer"))
         return out
+
+    @staticmethod
+    def _on_keys(onspec: str, verb: str) -> tuple[str, str]:
+        """(left key, right key) of a join/lookup ``on`` spec: ``key`` or
+        ``$left.a == $right.b``."""
+        dollar = re.fullmatch(
+            r"\$left\.(\w+)\s*==\s*\$right\.(\w+)", onspec)
+        if dollar:
+            return dollar.group(1), dollar.group(2)
+        if re.fullmatch(r"\w+", onspec):
+            return onspec, onspec
+        raise KqlError(f"KQL: unsupported {verb} on-spec {onspec!r}")
 
     def _lookup(self, df: DataFrame, rest: str) -> DataFrame:
         """``lookup [kind=leftouter|inner] <Dim|(pipeline)> on key`` —
@@ -3324,18 +3524,8 @@ class _StageCompiler:
         if operand.startswith("("):
             right = self.compile(operand[1:-1].strip())
         else:
-            if operand.lower() not in self.tables:
-                raise KqlError(f"KQL: lookup of unknown table {operand!r}")
-            right = self.tables[operand.lower()]
-        onspec = m.group(3).strip()
-        dollar = re.fullmatch(
-            r"\$left\.(\w+)\s*==\s*\$right\.(\w+)", onspec)
-        if dollar:
-            lkey, rkey = dollar.group(1), dollar.group(2)
-        elif re.fullmatch(r"\w+", onspec):
-            lkey = rkey = onspec
-        else:
-            raise KqlError(f"KQL: unsupported lookup on-spec {onspec!r}")
+            right = self._table(operand, [])
+        lkey, rkey = self._on_keys(m.group(3).strip(), "lookup")
         clashes = sorted(c for c in right.columns
                          if c in df.columns and not (c == rkey == lkey))
         if clashes:
@@ -3357,8 +3547,6 @@ class _StageCompiler:
         nbins rows) and a collect_list per group — the series arrays are
         bounded by nbins, never by |input rows|. The timeline column gets
         the on-expression's name, mirroring Kusto's output."""
-        import datetime as _dt
-
         m = re.match(
             r"(?P<series>.+?)\s+on\s+(?P<on>.+?)\s+from\s+(?P<from>datetime\([^)]*\))"
             r"\s+to\s+(?P<to>datetime\([^)]*\))\s+step\s+(?P<step>\S+)"
@@ -3376,13 +3564,13 @@ class _StageCompiler:
             if len(body) >= 2 and body[0] in "'\"" and body[-1] == body[0]:
                 body = body[1:-1]
             try:
-                t = _dt.datetime.fromisoformat(body.replace("Z", "+00:00"))
+                t = _datetime.datetime.fromisoformat(body.replace("Z", "+00:00"))
             except ValueError as ex:
                 raise KqlError(
                     f"KQL: make-series bad datetime literal {body!r}: {ex}"
                 ) from None
             if t.tzinfo is None:
-                t = t.replace(tzinfo=_dt.timezone.utc)
+                t = t.replace(tzinfo=_datetime.timezone.utc)
             return int(t.timestamp())
 
 
@@ -3547,13 +3735,6 @@ class _StageCompiler:
             out.add(t.text)
         return out
 
-    @classmethod
-    def _sort_cols(cls, rest: str) -> list[Column]:
-        return cls._ordered(cls._sort_specs(rest))
-
-    def _order_by(self, df: DataFrame, rest: str) -> DataFrame:
-        return df.orderBy(*self._sort_cols(rest))
-
     def _top(self, df: DataFrame, rest: str) -> DataFrame:
         m = re.match(r"\s*(\d+)\s+by\s+(.*)", rest, re.DOTALL | re.IGNORECASE)
         if not m:
@@ -3637,8 +3818,6 @@ class _StageCompiler:
         the remainder scan is one more map-side-partial groupBy
         against a broadcast winner set, never a re-shuffle of the
         winner path."""
-        from pyspark.sql import Window
-
         levels = []
         for j, part in enumerate(_split_top_commas(rest)):
             part = part.strip()
@@ -3759,15 +3938,7 @@ class _StageCompiler:
         if how is None:
             raise KqlError(f"KQL: unsupported join kind {kind!r}")
         right = self.compile(m.group(2).strip())
-        onspec = m.group(3).strip()
-        dollar = re.fullmatch(
-            r"\$left\.(\w+)\s*==\s*\$right\.(\w+)", onspec)
-        if dollar:
-            lkey, rkey = dollar.group(1), dollar.group(2)
-        elif re.fullmatch(r"\w+", onspec):
-            lkey = rkey = onspec
-        else:
-            raise KqlError(f"KQL: unsupported join on-spec {onspec!r}")
+        lkey, rkey = self._on_keys(m.group(3).strip(), "join")
         # Kusto renames clashing right columns with a `1` suffix.
         clashes = [c for c in right.columns
                    if c in df.columns and not (c == rkey == lkey)]
@@ -3884,8 +4055,6 @@ def _kql_conjuncts(toks: list) -> list[tuple] | None:
         if t.kind == "string":
             return t.text
         if t.kind == "datetime":
-            import datetime as _dtm
-
             raw = t.text.strip("'\"")
             # the compiled filter is lit(text).cast("timestamp"), which
             # Spark reads in the SESSION zone for offset-free text but
@@ -3896,7 +4065,7 @@ def _kql_conjuncts(toks: list) -> list[tuple] | None:
                     r"[+-]\d{2}:?\d{2}$", raw):
                 return None
             try:
-                return _dtm.datetime.fromisoformat(raw)
+                return _datetime.datetime.fromisoformat(raw)
             except ValueError:
                 return None
         return None
@@ -3971,237 +4140,20 @@ def _mine_wheres(wheres: list[str]
     return preds, branches
 
 
-def _pipeline_refs(query: str) -> list[tuple[str, list[str]]]:
-    """(head_table_lower, leading_where_texts) for this pipeline AND,
-    recursively, for each ``join kind=...( sub )`` / parenthesized or
-    bare ``union`` operand — every place the compiler resolves a table
-    name from the ``tables`` mapping. Multi-statement queries (``let
-    Name = …;`` bindings) MIRROR the compiler exactly (r11 review —
-    both findings below were silent-divergence bugs):
-
-    * scalar lets substitute into later statements BEFORE any where
-      text is mined — the compiler substitutes too, so mining the raw
-      text would attribute a predicate the compiled query never
-      applies (a scalar let shadowing a column name turned `where
-      value >= 10` into constant-true while pruning still dropped
-      files by `value` — silent row loss); post-substitution the
-      texts agree, and a let-parameterized where (`where k >=
-      cutoff`) becomes minable as a bonus;
-    * a let whose NAME shadows a warehouse table rebinds it for every
-      LATER statement (the compiler's ``tabs[name] = …``), so later
-      references resolve to the let's DataFrame, not a second table
-      scan — refs to let-bound names are dropped here or the budget
-      would double-count (`let events = events | where …; events |
-      count` scans the table ONCE). The let's own body still scans
-      the table (the binding is not in scope inside itself, matching
-      the compiler's evaluation order). Known conservative gap: a
-      let consumed MORE than once in later statements (`A | join
-      (A) …`) plans one scan subtree per consumption but is counted
-      once here — the same direction as Spark's own exchange reuse,
-      never an over-refusal."""
-    out: list[tuple[str, list[str]]] = []
-    stmts = _split_statements(query)
-    if len(stmts) > 1:
-        subs: list[tuple[str, str]] = []
-        bound: set[str] = set()
-        for s in stmts:
-            m = _LET_RE.match(s)
-            if m:
-                body = _apply_scalar_lets(m.group(2).strip(), subs)
-                # toscalar/materialize wrap a real pipeline whose
-                # reads the governor must see; the toscalar NAME
-                # binds a scalar whose VALUE this pass cannot know
-                # (no driver action here), so it substitutes as a
-                # NEUTRAL unminable call — a later `where name >= 10`
-                # must contribute NOTHING to pruning rather than be
-                # mined as a column predicate the compiled query
-                # never applies (r11 review: the silent-row-loss
-                # class fixed for plain scalar lets persisted for
-                # wrapped ones). materialize over a scalar literal
-                # mirrors the compiler's scalar path exactly.
-                wrap, inner = _unwrap_let_body(body)
-                if wrap == "materialize" \
-                        and _scalar_let_source(inner) is not None:
-                    subs.append((m.group(1), inner.strip()))
-                    continue
-                if wrap is not None:
-                    out.extend(r for r in _pipeline_refs(inner)
-                               if r[0] not in bound)
-                    if wrap == "toscalar":
-                        subs.append((m.group(1), "__toscalar__(0)"))
-                    else:
-                        bound.add(m.group(1).lower())
-                    continue
-                if _scalar_let_source(body) is not None:
-                    subs.append((m.group(1), body.strip()))
-                    continue  # a scalar binding is not a pipeline
-                out.extend(r for r in _pipeline_refs(body)
-                           if r[0] not in bound)
-                bound.add(m.group(1).lower())
-            else:
-                out.extend(r for r in _pipeline_refs(
-                    _apply_scalar_lets(s, subs))
-                    if r[0] not in bound)
-        return out
-    stages = _split_stages(query)
-    if not stages:
-        return out
-    head = stages[0].strip()
-    if re.fullmatch(r"[A-Za-z_]\w*", head):
-        wheres: list[str] = []
-        for stage in stages[1:]:
-            m = re.match(r"where\s+(.*)", stage.strip(),
-                         re.DOTALL | re.IGNORECASE)
-            if not m:
-                break  # first non-where stage ends the minable prefix
-            wheres.append(m.group(1))
-        out.append((head.lower(), wheres))
-    for stage in stages[1:]:
-        s = stage.strip()
-        m = re.match(r"join\s+kind\s*=\s*[a-z]+\s*\((.*)\)\s*on\s+.+$",
-                     s, re.DOTALL | re.IGNORECASE)
-        if m:
-            out.extend(_pipeline_refs(m.group(1).strip()))
-            continue
-        # lookup reads a dimension table — the governor must see it
-        m = re.match(r"lookup\s+(?:kind\s*=\s*[a-z]+\s+)?"
-                     r"\((.*)\)\s*on\s+.+$",
-                     s, re.DOTALL | re.IGNORECASE)
-        if m:
-            out.extend(_pipeline_refs(m.group(1).strip()))
-            continue
-        m = re.match(r"lookup\s+(?:kind\s*=\s*[a-z]+\s+)?"
-                     r"([A-Za-z_]\w*)\s+on\s+.+$",
-                     s, re.DOTALL | re.IGNORECASE)
-        if m:
-            out.append((m.group(1).lower(), []))
-            continue
-        m = re.match(r"union\s+(?:kind\s*=\s*\w+\s+)?"
-                     r"(?:withsource\s*=\s*\w+\s+)?(.*)$", s,
-                     re.DOTALL | re.IGNORECASE)
-        if m:
-            for part in _split_top_commas(m.group(1)):
-                part = part.strip()
-                if part.startswith("(") and part.endswith(")"):
-                    out.extend(_pipeline_refs(part[1:-1].strip()))
-                elif re.fullmatch(r"[A-Za-z_]\w*", part):
-                    out.append((part.lower(), []))
-            continue
-        # an mv-apply BODY is a full sub-pipeline whose stages dispatch
-        # through apply_stage — a union/join inside it resolves tables,
-        # so the governor/estimator must see those reads too
-        m = re.match(r"mv-apply\s+[A-Za-z_]\w*\s+on\s*\((.*)\)\s*$",
-                     s, re.DOTALL | re.IGNORECASE)
-        if m:
-            # the body's stages operate on the exploded stream (no head
-            # table of their own): scan them for join/union resolutions
-            # by prefixing a placeholder head. The placeholder DOES
-            # match the head fullmatch (`[A-Za-z_]\w*` admits leading
-            # underscores — review finding), so filter its rows out
-            # here: a body-leading `where` belongs to the exploded
-            # stream, not to any warehouse table.
-            for st in _split_stages(m.group(1).strip()):
-                out.extend(r for r in
-                           _pipeline_refs("__mvapply_body__ | " + st)
-                           if r[0] != "__mvapply_body__")
-            continue
-        # a partition BODY is likewise a contextual sub-pipeline:
-        # joins/lookups/unions inside it resolve tables. BRANCH-mode
-        # partition additionally re-plans the WHOLE upstream pipeline
-        # (and the body) once per distinct key — up to the Kusto
-        # legacy 64-partition cap — so the statement is priced at the
-        # worst-case multiplier: an armed budget can never be dodged
-        # by wrapping a scan in `partition hint.strategy=legacy`.
-        # Refs in stages AFTER this one execute once on the unioned
-        # output and are appended (unmultiplied) later in this loop —
-        # exactly matching the runtime plan.
-        m = re.match(r"partition\s+((?:hint\.\w+\s*=\s*\w+\s+)*)"
-                     r"by\s+[A-Za-z_]\w*\s*\((.*)\)\s*$",
-                     s, re.DOTALL | re.IGNORECASE)
-        if m:
-            body = m.group(2).strip()
-            for st in _split_stages(body):
-                out.extend(r for r in
-                           _pipeline_refs("__partition_body__ | " + st)
-                           if r[0] != "__partition_body__")
-            hints = dict(re.findall(r"hint\.(\w+)\s*=\s*(\w+)",
-                                    m.group(1) or ""))
-            strategy = hints.get("strategy", "").lower()
-            reason = _StageCompiler._partition_vector_reason(body)
-            if strategy in ("legacy", "native") or (
-                    strategy != "shuffle" and reason is not None):
-                out = out * _StageCompiler._PARTITION_MAX
-    return out
-
-
-def _warehouse_refs(query: str, warehouse: dict[str, str]) -> list:
-    """One ``skipping.ScanRead`` per warehouse table — the ONE
-    attribution pass shared by the pruned-read path, the governor, and
-    the dry-run estimator so what executes can never drift from what is
-    estimated or enforced. ``refs`` counts the pipeline references
-    (0: never read). A table is attributable when it is word-mentioned
-    EXACTLY once in the raw text AND parsed as exactly one pipeline
-    reference: its leading-where conjuncts then belong to that one
-    read and become the read's branches; every other read prices and
-    reads as the full scan (``[[]]``)."""
-    from corkscrew_spark import skipping as _skip
-
-    refs: dict[str, list[list[str]]] = {}
-    for h, wheres in _pipeline_refs(query):
-        refs.setdefault(h, []).append(wheres)
-    out = []
-    for name, path in warehouse.items():
-        nrefs = refs.get(name.lower(), [])
-        mentions = len(re.findall(
-            rf"(?<!\w){re.escape(name)}(?!\w)", query, re.IGNORECASE))
-        branches: list[list[tuple]] = [[]]
-        if mentions == 1 and len(nrefs) == 1:
-            preds, dnf = _mine_wheres(nrefs[0])
-            branches = [preds + b for b in dnf] if dnf else [preds]
-        out.append(_skip.ScanRead(name, path, branches, refs=len(nrefs)))
-    return out
-
-
-def _externaldata_scans(query: str, roots: list[str] | None = None
-                        ) -> list:
-    """The query's ``externaldata`` reads as fixed-size
-    ``skipping.ScanRead``s at raw file weight (no zone maps exist for
-    arbitrary local files, so a read costs everything it opens). With
-    ``roots``, only reads the allow-list admits: the compiler refuses
-    any other before opening a file, so it is not statted."""
-    from corkscrew_spark import skipping as _skip
-
-    return [_skip.ScanRead(f"externaldata#{idx}", None, [[]],
-                           files=list(epaths),
-                           nbytes=externaldata_bytes(epaths))
-            for idx, (epaths, _fmt) in enumerate(externaldata_reads(query))
-            if roots is None or all(_externaldata_path_allowed(p, roots)
-                                    for p in epaths)]
-
-
-def kql_estimate_statement(query: str, warehouse: dict[str, str]
+def kql_estimate_statement(query: str, warehouse: dict[str, str],
+                           tables: dict[str, DataFrame] | None = None
                            ) -> dict:
     """The dry-run of ``kql_to_df_skipping``'s governor: the same
-    reads through the same ``skipping.admit`` call, with no budget.
-    Returns ``{"tables": {...}, "bytes_kept": <sum of every read's
-    estimate — an N-times-referenced table counts N times>, "reads":
-    n}``. Attributable tables price under their mined leading-where
-    conjuncts; multi-referenced or where-less tables at full scan;
-    tables without usable stats at their full listing bytes; tables
-    the pipeline never reads are absent. ``externaldata`` reads price
-    at raw file weight regardless of the allow-list (the dry-run
-    answers "what WOULD this cost"); the governor prices only
-    allow-listed reads, because a disallowed one is refused at compile
-    time before any file opens — parity holds on every executable
+    record compile (over the same ``tables``) and ``skipping.admit``
+    call, with no budget. Returns ``{"tables": {name: widest
+    estimate}, "bytes_kept": <sum of every read's estimate times its
+    references>, "reads": n}``; tables the statement never reads are
+    absent. ``externaldata`` reads price at raw file weight whatever
+    the allow-list says (the governor refuses a disallowed read at
+    compile time instead), so parity holds on every executable
     query."""
-    from corkscrew_spark import skipping as _skip
-
-    if not _split_stages(query):
-        raise KqlError("KQL: empty query")
-    est, _plans = _skip.admit(
-        _externaldata_scans(query)
-        + [r for r in _warehouse_refs(query, warehouse) if r.refs])
-    return est
+    return _Reads(SparkSession.active(), warehouse, tables,
+                  dry_run=True).admit(query, tables, None, None)
 
 
 def kql_to_df_skipping(spark, query: str, warehouse: dict[str, str],
@@ -4211,82 +4163,36 @@ def kql_to_df_skipping(spark, query: str, warehouse: dict[str, str],
                        ) -> DataFrame:
     """``kql_to_df`` with warehouse-directory sources read through
     zone-map/bloom data skipping: ``warehouse`` maps KQL table names to
-    table DIRECTORIES; each table referenced EXACTLY ONCE in the query
-    (the pipeline head, a ``join kind=…( sub )`` side, or a ``union``
-    operand) has that reference's LEADING ``where`` stages
-    (consecutive, before any other operator can rename or reshape
-    columns) mined for simple conjuncts and becomes a
-    ``read_skipping`` pruned read. Every stage still executes in full
-    on top — including those wheres — so the result is identical to a
-    plain read; stats only change how many files are opened.
-    Soundness net: the once-only check counts WORD OCCURRENCES of the
-    name in the raw query text (an upper bound on references), so a
-    second mention anywhere — even one the parser doesn't understand —
-    forces the plain read; multi-referenced tables are never pruned by
-    one reference's predicate.
+    table DIRECTORIES. The compiler resolves each reference itself
+    (``_StageCompiler._table``): a pipeline head's LEADING ``where``
+    stages (consecutive, after scalar-let substitution, before any
+    operator can reshape columns) are mined for simple conjuncts, and
+    the reference reads as a filter over the table's one plain read
+    that opens only the files they may match — so a table referenced
+    twice prunes each reference by its own wheres. Every stage still
+    executes in full on top, so the result is identical to a plain
+    read; stats only change how many files are opened.
 
     ``max_scan_bytes`` arms the same admission control as
     ``QueryEngine(max_scan_bytes=…)``, through the same
-    ``skipping.admit``: before any file opens, every read the pipeline
-    performs (``_pipeline_refs`` mirrors the compiler's resolution
-    sites exactly, and allow-listed ``externaldata`` reads count at raw
-    file weight) is planned ONCE and priced, the plan shared with the
-    pruned read. A once-referenced table prices under its mined
-    leading-where conjuncts; a multi-referenced table, or one with NO
-    minable predicate (the bare ``BigTable | take`` shape), at full
-    scan, so the most obviously over-budget pipeline is the first one
-    refused; a table without usable stats at its full listing bytes.
-    The budget is BOTH a per-reference and a query-total ceiling
-    (r10): each read's estimate, times its reference count, adds to a
-    running sum, refused with ``ScanBudgetExceeded`` once the sum
-    crosses the budget. ``kql_estimate_statement`` is the dry-run."""
-    from corkscrew_spark import skipping as _skip
-
-    if not _split_stages(query):
-        raise KqlError("KQL: empty query")
-    enforce = max_scan_bytes is not None
-    resolved: dict[str, DataFrame] = dict(tables or {})
-    # kql_to_df lowercases table keys, so a warehouse entry whose
-    # lowered name collides with a caller-supplied DataFrame would
-    # silently REPLACE it with a directory read — refuse instead of
-    # guessing which source the caller meant
-    clash = ({n.lower() for n in resolved}
-             & {n.lower() for n in warehouse})
-    if clash:
-        raise KqlError(
-            "KQL: table name(s) registered both as DataFrame and "
-            f"warehouse directory: {sorted(clash)} — pass each name "
-            "through exactly one of `tables`/`warehouse`")
-    reads = _warehouse_refs(query, warehouse)
-    # with no budget only the reads that prune are planned; the others
-    # read plain and nothing prices them
-    admitted = [r for r in reads if r.refs and (enforce or any(r.branches))]
-    external = (_externaldata_scans(query, _externaldata_roots_effective(
-        externaldata_roots)) if enforce else [])
-    _est, plans = _skip.admit(external + admitted, max_scan_bytes,
-                              price=enforce)
-    plan_of = dict(zip((r.name for r in admitted), plans[len(external):]))
-    for read in reads:
-        # a table whose name is never word-mentioned in the query text
-        # CANNOT be referenced (any reference must spell the name):
-        # skip its eager spark.read.parquet — on a 50-table warehouse
-        # that's 49 avoided directory listings + footer schema reads
-        # per query. Word-mention is the sound upper bound, not the
-        # parser's ref count, so a reference shape the parser misses
-        # still registers its table.
-        if not (read.refs or re.search(
-                rf"(?<!\w){re.escape(read.name)}(?!\w)", query,
-                re.IGNORECASE)):
-            continue
-        resolved[read.name] = plain = spark.read.parquet(read.path)
-        if read.name in plan_of and any(read.branches):
-            try:
-                resolved[read.name] = _skip.read_skipping_any(
-                    spark, read.path, read.branches,
-                    plan=plan_of[read.name], base=plain)
-            except Exception:  # noqa: BLE001 — plain read stands
-                pass
-    return kql_to_df(query, resolved, externaldata_roots)
+    ``skipping.admit``. A record compile runs first: the same compiler
+    over plain reads, with no Spark action (``toscalar`` substitutes a
+    typed placeholder; a branch-mode ``partition`` compiles its body
+    once and counts its reads 64 times; ``externaldata`` counts at raw
+    file weight). Each distinct read it logs is planned ONCE and
+    priced — a where-less one at full scan, one without usable stats
+    at its full listing bytes — and the running statement total
+    (estimate × references) is refused with ``ScanBudgetExceeded``
+    once it crosses the budget, before any data page opens. The real
+    compile reuses the admitted plans. ``bag_unpack`` and ``pivot``
+    read their output columns from the data, so they stop the record
+    pass; the statement then prices each warehouse table at full scan
+    once per word mention of its name. ``kql_estimate_statement`` is
+    the dry-run."""
+    reads = _Reads(spark, warehouse, tables)
+    if max_scan_bytes is not None:
+        reads.admit(query, tables, externaldata_roots, max_scan_bytes)
+    return _compile_query(query, tables or {}, externaldata_roots, reads)
 
 
 def kql_to_df(query: str, tables: dict[str, DataFrame],
@@ -4294,35 +4200,9 @@ def kql_to_df(query: str, tables: dict[str, DataFrame],
     """Compile a KQL pipeline string onto the given named DataFrames.
 
     `tables` maps table names (case-insensitive) to DataFrames; the
-    query's first pipeline stage must name one of them.
-
-    Type mismatches Kusto rejects at compile time (a numeric column
-    compared to a non-numeric string literal) would otherwise surface
-    as an opaque executor CAST_INVALID_INPUT mid-action under Spark's
-    ANSI folding — forcing the optimized plan here converts them into
-    an immediate KqlError. The probe uses the classic-PySpark ``_jdf``
-    internal, so it is capability-gated: under Spark Connect (no
-    ``_jdf``) compilation stays lazy and the mismatch surfaces at
-    action time instead — degraded error UX, never a broken compiler.
+    query's first pipeline stage must name one of them. A numeric
+    operand compared to a non-numeric string literal — which Kusto
+    rejects at compile time — raises ``KqlError`` here, not an
+    executor ``CAST_INVALID_INPUT`` mid-action.
     """
-    df = _compile_query(query, tables, externaldata_roots)
-    if not hasattr(df, "_jdf"):  # Spark Connect: no JVM handle
-        return df
-    if df.isStreaming:
-        # the compiler is source-agnostic: KQL stages compose onto
-        # streaming frames too (r11) — but a streaming plan cannot be
-        # eagerly optimized outside writeStream.start(), so the
-        # type-mismatch probe stands down and mismatches surface at
-        # stream start (same degraded-UX contract as Spark Connect)
-        return df
-    try:
-        df._jdf.queryExecution().optimizedPlan()
-    except Exception as ex:  # Py4J wraps the Spark exception classes
-        msg = str(ex)
-        if "CAST_INVALID_INPUT" in msg:
-            first = msg.splitlines()[0]
-            raise KqlError(
-                "KQL: type mismatch in comparison — a numeric column is "
-                f"compared to a non-numeric literal ({first})") from ex
-        raise
-    return df
+    return _compile_query(query, tables, externaldata_roots)

@@ -426,30 +426,3 @@ def hashed_ngram_score(df: DataFrame, id_col: str, text_col: str = "text",
         margin.alias("margin"),
         F.round(margin / (n_terms * F.lit(500000.0)), 6).alias("score"),
     )
-
-
-#: unicode-hygiene replacement cascade: (pattern, replacement), ordered.
-#: Stays in the Java-regex ∩ RE2 subset like the PII rules.
-UNICODE_CLEANUP_RULES: list[tuple[str, str]] = [
-    (r"[​‌‍﻿­]", ""),       # zero-width / soft hyphen
-    (r"[‘’‚′]", "'"),            # curly single quotes
-    (r"[“”„″]", '"'),            # curly double quotes
-    (r"[–—―]", "-"),                  # en/em/horizontal dashes
-    (r"…", "..."),                              # ellipsis char
-    (r"[  -  　]", " "),     # exotic spaces → space
-    (r"[\x00-\x08\x0b\x0c\x0e-\x1f\x7f]", ""),       # control chars (keep \t\n\r)
-    (r"[ \t]+", " "),                                # collapse runs of blanks
-]
-
-
-def normalize_unicode(text_col: str | Column) -> Column:
-    """Ingest-hygiene text normalization: strip zero-width and control
-    characters, fold typographic quotes/dashes/ellipses/spaces to their
-    ASCII forms, collapse blank runs — the cleanup pass before any
-    fingerprinting or tokenization so that visually-identical documents
-    hash identically. A regexp_replace cascade in whole-stage codegen:
-    map-only, linear scan, no UDF."""
-    out = F.col(text_col) if isinstance(text_col, str) else text_col
-    for pattern, repl in UNICODE_CLEANUP_RULES:
-        out = F.regexp_replace(out, pattern, repl)
-    return F.trim(out)

@@ -969,7 +969,7 @@ def kql_externaldata(spark: SparkSession, sf_dir: str) -> DataFrame:
         | order by r_name asc
         """
     tabs = register_tables(spark, sf_dir)
-    est = kql_estimate_statement(q, {})
+    est = kql_estimate_statement(q, {}, tables=tabs)
     nbytes = os.path.getsize(path)
     if est["bytes_kept"] != nbytes or est["reads"] != 1:
         raise RuntimeError(
@@ -1063,8 +1063,8 @@ def kql_partition_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan + one shuffle regardless of the key's cardinality — Kusto's
     shuffle strategy, chosen automatically. The legacy 64-branch
     compilation exists for bodies with no grouped form and is priced
-    at its worst-case multiplier by the scan governor
-    (kql._pipeline_refs). Ties break on o_orderkey, deterministic."""
+    at its worst-case multiplier by the scan governor's record pass.
+    Ties break on o_orderkey, deterministic."""
     return kql_to_df(
         """
         orders

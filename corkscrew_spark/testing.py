@@ -13,6 +13,7 @@ import io
 import os
 import re
 import urllib.parse
+import uuid
 
 import duckdb
 import pandas as pd
@@ -106,6 +107,21 @@ def scanned_files(df: DataFrame) -> list[str]:
                 re.escape(spelled) + r"(?=[,)\s]|$)", plan):
             got.append(uri)
     return got
+
+
+@contextlib.contextmanager
+def count_jobs(spark: SparkSession):
+    """Count the Spark jobs the block runs, under one fresh job group:
+    ``with count_jobs(spark) as jobs: ...`` then ``jobs()``. Public API
+    only (``setJobGroup`` and ``statusTracker``); jobs the block starts
+    from other threads are not counted."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        yield lambda: len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def compare_to_oracle(spark: SparkSession, name: str, sf_dir: str) -> int:

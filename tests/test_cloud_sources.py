@@ -1,11 +1,11 @@
-"""Azure/GCP bulk sources + change adapters: schema + normalization."""
+"""Azure/GCP bulk sources: schema + normalization."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from corkscrew_spark.ingest import cloud_sources
-from corkscrew_spark.schema import CHANGE_EVENT_SCHEMA, RESOURCE_SCHEMA
+from corkscrew_spark.schema import RESOURCE_SCHEMA
 
 
 def test_azure_bulk_source(spark):
@@ -23,18 +23,6 @@ def test_gcp_bulk_source(spark):
     assert df.schema == RESOURCE_SCHEMA
     assert df.filter(F.col("provider") != "gcp").count() == 0
     assert df.count() >= 3 * 8
-
-
-def test_change_feed_normalization(spark):
-    for provider in ("azure", "gcp"):
-        df = cloud_sources.change_feed(spark, provider, ["scope-x"])
-        assert df.schema == CHANGE_EVENT_SCHEMA
-        rows = df.collect()
-        assert {r.change_type for r in rows} == {"CREATE", "UPDATE", "DELETE"}
-        deletes = [r for r in rows if r.change_type == "DELETE"]
-        assert all(r.severity == "HIGH" for r in deletes)
-        updates = [r for r in rows if r.change_type == "UPDATE"]
-        assert all(r.previous_state and r.current_state for r in updates)
 
 
 def test_cross_provider_union(spark):

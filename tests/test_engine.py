@@ -16,7 +16,7 @@ from corkscrew_spark.engine import (
     quote_literal,
 )
 from corkscrew_spark.functions.json_helpers import register_json_helpers
-from corkscrew_spark.testing import scanned_files
+from corkscrew_spark.testing import count_jobs, scanned_files
 
 
 @pytest.fixture(scope="module")
@@ -492,8 +492,6 @@ def test_pruned_lookup_runs_one_job(spark, tmp_path):
     the pruned read takes its schema from the registered plain view
     instead of inferring it from the kept files' footers (a second
     job per lookup)."""
-    import uuid
-
     from corkscrew_spark import skipping
 
     path = str(tmp_path / "lk")
@@ -506,16 +504,10 @@ def test_pruned_lookup_runs_one_job(spark, tmp_path):
     assert len(skipping.plan_skip(path, [("id", "=", 123)])["kept"]) < 8
     assert [tuple(r) for r in eng.execute(sql, {"id": 7}).rows()] \
         == [(7, 0)]
-    sc = spark.sparkContext
-    group = f"lookup-tripwire-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "pruned lookup job count")
-    try:
+    with count_jobs(spark) as jobs:
         rows = eng.execute(sql, {"id": 123}).rows()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
     assert [tuple(r) for r in rows] == [(123, 4)]
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert jobs <= 1, f"pruned lookup ran {jobs} jobs"
+    assert jobs() <= 1, f"pruned lookup ran {jobs()} jobs"
 
 
 class TestJoinSkipping:

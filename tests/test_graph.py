@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 
 from corkscrew_spark.operators import graph
+from corkscrew_spark.testing import count_jobs
 
 
 def _edges(spark, pairs):
@@ -648,7 +649,6 @@ def _query_jobs(spark, sf_dir, name) -> int:
     """Jobs one noop materialization of registered query ``name`` runs at
     sf0.01, counted under one job group (table registration outside)."""
     import os
-    import uuid
 
     from corkscrew_spark.catalog import register_tables
     from corkscrew_spark.plans.queries import QUERIES
@@ -657,14 +657,9 @@ def _query_jobs(spark, sf_dir, name) -> int:
     if not os.path.isdir(sf):
         pytest.skip(f"no sf0.01 test data next to {sf_dir}")
     register_tables(spark, sf)
-    sc = spark.sparkContext
-    group = f"{name}-tripwire-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, f"{name} job count")
-    try:
+    with count_jobs(spark) as jobs:
         QUERIES[name](spark, sf).write.format("noop").mode("overwrite").save()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    return jobs()
 
 
 def test_triangles_job_count_tripwire(spark, sf_dir):

@@ -38,53 +38,6 @@ def test_provider_filter(spark):
     assert result["by_provider"] == {"kubernetes": 11}
 
 
-def test_region_scoring_formula(spark):
-    """calculateRegionScore: penalties, boosts, preference, clamp,
-    NULL-latency default 0.5 (region_detector.go:148-180)."""
-    rows = [
-        # name, latency_ms, error_rate, service_count
-        ("us-east-1", 100.0, 0.0, 60),     # 1.0 +0.2 +0.2 -> clamp 1.0
-        ("ap-south-9", 1500.0, 0.4, 5),    # 1.0 -0.3 -0.2 = 0.5
-        ("eu-west-1", 700.0, 0.0, 25),     # 1.0 -0.1 +0.1 +0.15 = 1.0+
-        ("xx-none-1", None, 0.0, 0),       # unmeasured -> 0.5 default
-        ("us-bad-1", 2000.0, 1.0, 0),      # 1.0 -0.3 -0.5 = 0.2
-    ]
-    df = spark.createDataFrame(
-        rows, "region string, latency_ms double, error_rate double, "
-              "service_count int")
-    got = {r.region: (r.priority_score, r.priority_reason)
-           for r in idms.prioritize_regions(df).collect()}
-    assert got["us-east-1"][0] == 1.0
-    assert got["ap-south-9"][0] == 0.5
-    assert got["eu-west-1"][0] == 1.0  # clamped
-    assert got["xx-none-1"][0] == 0.5
-    assert abs(got["us-bad-1"][0] - 0.2) < 1e-9
-    assert got["us-east-1"][1].startswith("High priority")
-    assert got["us-bad-1"][1].startswith("Very low priority")
-
-
-def test_service_scoring_formula(spark):
-    """calculateServiceScore + priority buckets
-    (service_detector.go:130-164, :232-242)."""
-    rows = [
-        ("ec2", 20, 0.0),       # .5+.3+.2+.2+.3 -> clamp 1.0 -> pri 1
-        ("obscure-svc", 0, 0.0),  # .5 -> pri 3
-        ("obscure-svc2", 0, 1.0),  # .5-.3=.2 -> pri 4
-        ("guardduty", 5, 0.0),  # .5+.3+.1+.2+0.15(security)=1.0+ clamp
-        ("sqldatabase", 2, 0.5),  # .5+.3+.1+.2-.15+.25=1.2 clamp 1.0
-    ]
-    df = spark.createDataFrame(
-        rows, "service string, resource_count int, error_rate double")
-    got = {r.service: (r.activity_score, r.priority)
-           for r in idms.prioritize_services(df).collect()}
-    assert got["ec2"] == (1.0, 1)
-    assert got["obscure-svc"] == (0.5, 3)
-    assert abs(got["obscure-svc2"][0] - 0.2) < 1e-9
-    assert got["obscure-svc2"][1] == 4
-    assert got["guardduty"] == (1.0, 1)
-    assert got["sqldatabase"] == (1.0, 1)
-
-
 def test_service_boost_longest_key_wins(spark):
     """'gcpiam' must match its own 0.3 entry, not stop at 'iam'; a name
     hitting only a security keyword gets 0.15."""

@@ -7,8 +7,30 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from corkscrew_spark.kql import KqlError, kql_to_df
-from corkscrew_spark.testing import compare_to_oracle, scanned_files
+from corkscrew_spark.kql import (KqlError, kql_estimate_statement,
+                                 kql_to_df, kql_to_df_skipping)
+from corkscrew_spark.testing import (compare_to_oracle, count_jobs,
+                                     scanned_files)
+
+
+@pytest.fixture(scope="module")
+def wh(spark, tmp_path_factory):
+    """Two small warehouse tables, ``T`` and ``U``: k 0..799 range-
+    clustered into 8 files with zone maps on k, v = k % 7, p = k % 3,
+    and a JSON-string bag b = {"x": k % 2}."""
+    from corkscrew_spark import skipping
+
+    root = tmp_path_factory.mktemp("kql_wh")
+    out = {}
+    for name in ("T", "U"):
+        path = str(root / name.lower())
+        spark.range(800).selectExpr(
+            "id AS k", "id % 7 AS v", "id % 3 AS p",
+            "to_json(named_struct('x', id % 2)) AS b",
+        ).repartitionByRange(8, "k").write.parquet(path)
+        skipping.compute_stats(spark, path, ["k"])
+        out[name] = path
+    return out
 
 
 @pytest.fixture(scope="module")
@@ -666,6 +688,21 @@ def test_numeric_vs_string_literal_is_compile_error(spark):
                      t).count() == 1
 
 
+def test_numeric_vs_string_literal_every_comparison(spark):
+    """The compile-time type check covers every comparison shape — a
+    literal on either side, in/!in, between, a computed operand — and
+    admits the string literals Spark's cast reads as numbers."""
+    t = {"T": spark.createDataFrame([(1, 2.5, "a")],
+                                    "id long, v double, s string")}
+    for cond in ("'x' == id", "id != 'x'", "id in ('x')", "id !in ('x')",
+                 "id between ('a' .. 'b')", "id + 1 > 'x'", "id <= '1.5'",
+                 "v >= 'x'"):
+        with pytest.raises(KqlError, match="type mismatch"):
+            kql_to_df(f"T | where {cond}", t)
+    assert kql_to_df("T | where id == ' 1 ' and v < '2.5e1' and s == 'a' "
+                     "| count", t).first()["Count"] == 1
+
+
 class TestKqlSkipping:
     """kql_to_df_skipping: warehouse-dir sources read through zone maps
     mined from the pipeline's leading where stages — result identity
@@ -855,11 +892,11 @@ class TestKqlJoinSideSkipping:
         files = scanned_files(got)
         assert 0 < len([f for f in files if "users_t" in f]) < 4
 
-    def test_multi_reference_forces_plain(self, spark, dirs):
+    def test_multi_reference_prunes_each_reference(self, spark, dirs):
         """The same table as head AND join side (different wheres):
-        one resolved frame serves both references, so pruning either
-        reference's predicate would drop the other's rows — the
-        once-only word-count net must force the plain read."""
+        each reference is its own filter over the table's one plain
+        read, pruned by that reference's own wheres, so the statement
+        opens fewer files than the table has and loses no row."""
         from corkscrew_spark.kql import kql_to_df, kql_to_df_skipping
 
         ev, _us = dirs
@@ -869,9 +906,8 @@ class TestKqlJoinSideSkipping:
         got = kql_to_df_skipping(spark, q, {"Ev": ev})
         plain = kql_to_df(q, {"Ev": spark.read.parquet(ev)})
         assert got.first()["Count"] == plain.first()["Count"] > 0
-        # the resolved source really was the FULL table
-        assert len([f for f in scanned_files(got)
-                    if "events_t" in f]) == 8
+        assert 0 < len([f for f in scanned_files(got)
+                        if "events_t" in f]) < 8
 
 
 class TestKqlScanBudget:
@@ -928,17 +964,18 @@ class TestKqlScanBudget:
     def test_mv_apply_body_reads_are_governed(self, spark, table):
         """A union/join inside an mv-apply BODY resolves tables through
         apply_stage — the governor must see those reads too (review
-        finding: _pipeline_refs skipped mv-apply bodies, so the body's
-        table bypassed admission control). Also: a warehouse table the
-        query never mentions must not be eagerly registered."""
+        finding: the body's table once bypassed admission control).
+        Also: a warehouse table the query never mentions must not be
+        eagerly registered."""
         from corkscrew_spark.engine import ScanBudgetExceeded
-        from corkscrew_spark.kql import (_pipeline_refs,
+        from corkscrew_spark.kql import (kql_estimate_statement,
                                          kql_to_df_skipping)
 
         q = ("S | mv-apply xs on ( union T | summarize n = count() )")
-        assert ("t", []) in _pipeline_refs(q)
         small = spark.createDataFrame([(1, ["a"])],
                                       "id long, xs array<string>")
+        assert set(kql_estimate_statement(
+            q, {"T": table}, tables={"S": small})["tables"]) == {"t"}
         with pytest.raises(ScanBudgetExceeded, match="budget"):
             kql_to_df_skipping(spark, q, {"T": table},
                                tables={"S": small}, max_scan_bytes=1)
@@ -949,9 +986,9 @@ class TestKqlScanBudget:
         assert got.first()["Count"] == 1
 
     def test_multi_reference_enforced_at_full_scan(self, spark, table):
-        """A twice-read table can't attribute either where, so each
-        read is a plain full scan — and the governor refuses it on
-        exactly that estimate."""
+        """A twice-read table prices each reference under its own
+        wheres, and the governor refuses the statement on that
+        estimate."""
         from corkscrew_spark.engine import ScanBudgetExceeded
         from corkscrew_spark.kql import kql_to_df_skipping
 
@@ -1071,9 +1108,9 @@ class TestKqlScanBudget:
         assert 0 < len(scanned_files(got)) < 8  # really pruned
 
     def test_kql_estimate_scan_dry_run(self, spark, table, tmp_path):
-        """kql_estimate_statement is the dry-run half: mined-predicate
-        estimate for attributable reads, full-scan estimate for bare
-        or multi-referenced ones, absent for unread/no-stats tables —
+        """kql_estimate_statement is the dry-run half: each reference
+        priced under its own mined predicates, full-scan estimate for
+        bare ones, absent for unread/no-stats tables —
         never saying 'will run' for a pipeline the governor refuses."""
         from pyspark.sql import functions as F
 
@@ -1088,12 +1125,12 @@ class TestKqlScanBudget:
         bare = kql_estimate_statement("T | take 5",
                                       {"T": table})["tables"]["t"]
         assert bare["files_kept"] == bare["files_total"] == 8
-        # multi-referenced: full scan too (no attribution)
+        # multi-referenced: each reference prices under its own wheres
         multi = kql_estimate_statement(
             "T | where k >= 700 | join kind=inner "
             "(T | where k < 50 | project v, k2=k) on v | count",
             {"T": table})["tables"]["t"]
-        assert multi["files_kept"] == 8
+        assert 0 < multi["files_kept"] < 8
         # DNF leading where estimates through the union-bound path
         dnf = kql_estimate_statement(
             "T | where k < 50 or k >= 750 | count",
@@ -1137,21 +1174,21 @@ class TestKqlScanBudget:
                                max_scan_bytes=1)
 
 
-def test_mvapply_body_placeholder_not_a_ref():
-    """r10 review: `[A-Za-z_]\\w*` DOES match a leading underscore, so
-    the `__mvapply_body__` placeholder head used to surface as a
-    pipeline ref of its own, with any body-leading `where` attributed
-    to it. The placeholder must never appear in the returned refs —
-    while real table reads inside the body still resolve."""
-    from corkscrew_spark.kql import _pipeline_refs
-
-    refs = _pipeline_refs(
-        "S | mv-apply xs on ( where xs > 0 | union T )")
-    assert ("t", []) in refs
-    assert all(h != "__mvapply_body__" for h, _w in refs)
-    # body with ONLY a where stage: nothing to resolve, nothing fake
-    refs = _pipeline_refs("S | mv-apply xs on ( where xs > 0 )")
-    assert all(h != "__mvapply_body__" for h, _w in refs)
+def test_mvapply_body_placeholder_not_a_ref(spark, wh):
+    """A body-leading `where` filters the exploded stream, not a
+    warehouse table: a table read inside an mv-apply body is governed
+    at full scan, and a body with no table read reads nothing."""
+    s = {"S": spark.createDataFrame([(1, [1, 2])],
+                                    "id long, xs array<long>")}
+    est = kql_estimate_statement(
+        "S | mv-apply xs on ( where xs > 0 | union T "
+        "| summarize n = count() )", wh, tables=s)
+    assert est["reads"] == 1
+    assert est["tables"]["t"]["files_kept"] == 8
+    est = kql_estimate_statement(
+        "S | mv-apply xs on ( where xs > 0 | summarize n = count() )",
+        wh, tables=s)
+    assert est["reads"] == 0 and est["tables"] == {}
 
 
 def test_division_by_zero_yields_null_not_crash(spark):
@@ -1287,23 +1324,16 @@ def test_let_statements(spark):
         kql_to_df("let x = ; T | count", t)
 
 
-def test_let_bodies_are_governed(spark, tmp_path):
+def test_let_bodies_are_governed(spark, wh):
     """A warehouse read inside a `let` BODY is a real scan: the
-    governor must see it (refs recurse into every statement), and
-    the let-bound read still prunes when attributable."""
-    from pyspark.sql import functions as F
-
+    governor must see it, and the let-bound read still prunes by the
+    body's own wheres."""
     from corkscrew_spark import skipping
     from corkscrew_spark.engine import ScanBudgetExceeded
-    from corkscrew_spark.kql import _pipeline_refs, kql_to_df_skipping
 
-    path = str(tmp_path / "let_t")
-    spark.range(800).select(
-        F.col("id").alias("k")).repartitionByRange(
-        8, "k").write.parquet(path)
-    skipping.compute_stats(spark, path, ["k"])
+    path = wh["T"]
     q = "let Big = T | where k >= 700; Big | count"
-    assert ("t", ["k >= 700"]) in _pipeline_refs(q)
+    assert kql_estimate_statement(q, wh)["tables"]["t"]["files_kept"] == 1
     with pytest.raises(ScanBudgetExceeded, match="budget"):
         kql_to_df_skipping(spark, q, {"T": path}, max_scan_bytes=1)
     pruned = skipping.estimate_scan(path, [("k", ">=", 700)])
@@ -1458,15 +1488,15 @@ def test_datetime_and_dynamic_scalar_functions(spark):
                      t).first()["Count"] == 2
 
 
-def test_toscalar_and_materialize_lets(spark):
+def test_toscalar_and_materialize_lets(spark, wh):
     """r11: `let x = toscalar(<pipeline>);` collects the first
     column of the first row at compile time (Kusto semantics) and
     substitutes it as a literal; `materialize(…)` is a transparent
-    caching hint. Wrapped bodies' table reads stay visible to the
-    governance refs pass."""
+    caching hint. Wrapped bodies' table reads are governed, and
+    prune by their own wheres."""
     import datetime
 
-    from corkscrew_spark.kql import KqlError, _pipeline_refs, kql_to_df
+    from corkscrew_spark.kql import KqlError, kql_to_df
 
     ev = spark.createDataFrame(
         [(1, "click", 5.0, datetime.datetime(2024, 1, 1, 10)),
@@ -1487,11 +1517,14 @@ def test_toscalar_and_materialize_lets(spark):
     assert kql_to_df(
         "let M = materialize(T | where et == 'click'); M | count",
         t).first()["Count"] == 2
-    # refs see through both wrappers (governance)
-    refs = _pipeline_refs(
-        "let mx = toscalar(T | where k > 3 | summarize max(k)); "
-        "U | count")
-    assert ("t", ["k > 3"]) in refs and ("u", []) in refs
+    # both wrappers' reads are governed (the dry-run sees them)
+    est = kql_estimate_statement(
+        "let mx = toscalar(T | where k >= 700 | summarize max(k)); "
+        "U | count", wh)["tables"]
+    assert est["t"]["files_kept"] == 1 and est["u"]["files_kept"] == 8
+    est = kql_estimate_statement(
+        "let M = materialize(T | where k >= 700); M | count", wh)
+    assert est["reads"] == 1 and est["tables"]["t"]["files_kept"] == 1
     with pytest.raises(KqlError, match="returned no rows"):
         kql_to_df("let x = toscalar(T | where v > 100 "
                   "| summarize m = max(v) by et); T | count", t)
@@ -1549,14 +1582,59 @@ def test_let_shadowing_warehouse_table_counts_one_scan(
     spark.range(800).select(F.col("id").alias("k")).repartitionByRange(
         8, "k").write.parquet(path)
     skipping.compute_stats(spark, path, ["k"])
-    full = skipping.estimate_scan(path, [])["bytes_kept"]
+    pruned = skipping.estimate_scan(
+        path, [("k", ">=", 700)])["bytes_kept"]
     q = "let T = T | where k >= 700; T | count"
     est = kql_estimate_statement(q, {"T": path})
     assert est["reads"] == 1
-    assert est["bytes_kept"] == full  # 3 mentions: unattributable
+    assert est["bytes_kept"] == pruned  # the let body's own wheres
     got = kql_to_df_skipping(spark, q, {"T": path},
-                             max_scan_bytes=full + 1)
+                             max_scan_bytes=pruned)
     assert got.first()["Count"] == 100
+
+
+def test_unrecordable_statement_priced_by_mention(spark, wh):
+    """bag_unpack reads its output columns from the data, and a
+    toscalar placeholder cannot fill a literal-only slot (`take n`), so
+    the record pass stops there: the statement prices each warehouse
+    table at full scan once per mention of its name, and a budget of
+    exactly that admits it with the plain read's rows."""
+    from corkscrew_spark import skipping
+    from corkscrew_spark.engine import ScanBudgetExceeded
+
+    full = skipping.estimate_scan(wh["T"], [])["bytes_kept"]
+    q = ("T | where k >= 700 | evaluate bag_unpack(b) "
+         "| summarize n = count() by x")
+    assert kql_estimate_statement(q, wh)["bytes_kept"] == full
+    with pytest.raises(ScanBudgetExceeded):
+        kql_to_df_skipping(spark, q, wh, max_scan_bytes=full - 1)
+    got = kql_to_df_skipping(spark, q, wh, max_scan_bytes=full)
+    plain = kql_to_df(q, {"T": spark.read.parquet(wh["T"])})
+    assert sorted(map(tuple, got.collect())) \
+        == sorted(map(tuple, plain.collect())) == [("0", 50), ("1", 50)]
+    q = "let n = toscalar(U | summarize max(p)); T | take n"
+    assert kql_estimate_statement(q, wh)["bytes_kept"] == 2 * full
+    assert kql_to_df_skipping(spark, q, wh,
+                              max_scan_bytes=2 * full).count() == 2
+
+
+def test_record_pass_runs_no_action(spark, wh):
+    """The record pass compiles without a Spark action: toscalar takes
+    a typed placeholder and a branch-mode partition skips its
+    distinct-key collect. A dry-run and a budget refusal therefore run
+    at most one job per table (its plain read's schema inference)."""
+    from corkscrew_spark.engine import ScanBudgetExceeded
+
+    q = ("let mx = toscalar(U | summarize max(k)); "
+         "T | where k >= mx | partition hint.strategy=legacy by p "
+         "( summarize n = count() )")
+    with count_jobs(spark) as jobs:
+        est = kql_estimate_statement(q, wh)
+    assert est["reads"] == 1 + 64 and jobs() <= 2
+    with count_jobs(spark) as jobs:
+        with pytest.raises(ScanBudgetExceeded):
+            kql_to_df_skipping(spark, q, wh, max_scan_bytes=1)
+    assert jobs() <= 2
 
 
 def test_pivot_column_named_like_aggregate_function(spark):
@@ -1803,14 +1881,14 @@ def test_lookup_and_union_withsource(spark):
     assert [(r["Src"], r["n"]) for r in rows] == [("T", 2), ("U", 2)]
 
 
-def test_lookup_reads_are_governed(spark, tmp_path):
-    """The lookup operand is a warehouse read — it must surface in
-    _pipeline_refs (governance/estimation) like join/union operands."""
-    from corkscrew_spark.kql import _pipeline_refs
-
-    assert ("u", []) in _pipeline_refs("T | lookup kind=leftouter U on k")
-    assert ("u", []) in _pipeline_refs("T | lookup (U | project k) on k")
-    assert ("u", []) in _pipeline_refs("T | union withsource=Src U")
+def test_lookup_reads_are_governed(spark, wh):
+    """The lookup operand is a warehouse read — governed (priced by
+    the dry-run) like join/union operands, bare or parenthesized."""
+    for q in ("T | project k | lookup kind=leftouter U on k",
+              "T | project k | lookup (U | project k) on k",
+              "T | union withsource=Src U"):
+        est = kql_estimate_statement(q, wh)
+        assert est["reads"] == 2 and set(est["tables"]) == {"t", "u"}, q
 
 
 def test_print_and_range_heads(spark):
@@ -2127,7 +2205,6 @@ def test_externaldata_governed(spark, tmp_path):
     weight — governor refusal and dry-run report identical bytes."""
     from corkscrew_spark.engine import ScanBudgetExceeded
     from corkscrew_spark.kql import (externaldata_bytes,
-                                     externaldata_reads,
                                      kql_estimate_statement,
                                      kql_to_df_skipping)
 
@@ -2137,7 +2214,6 @@ def test_externaldata_governed(spark, tmp_path):
     q = (f"externaldata (v:long) ['{csv}'] "
          "with (format='csv', ignoreFirstRecord=true) "
          "| summarize s = sum(v)")
-    assert externaldata_reads(q) == [([str(csv)], "csv")]
     est = kql_estimate_statement(q, {})
     assert est["bytes_kept"] == nbytes == externaldata_bytes([str(csv)])
     assert est["reads"] == 1
@@ -2148,8 +2224,10 @@ def test_externaldata_governed(spark, tmp_path):
                             externaldata_roots=[str(tmp_path)])
     assert ok.first()["s"] == sum(range(1000))
     # a keyword inside a string literal is not a read
-    assert externaldata_reads(
-        "T | where name == 'externaldata'") == []
+    names = spark.createDataFrame([("externaldata",)], "name string")
+    assert kql_estimate_statement(
+        "T | where name == 'externaldata'", {},
+        tables={"T": names})["reads"] == 0
 
 
 def test_integer_literal_contracts_loud(tiny_events):
@@ -2377,27 +2455,26 @@ class TestKqlPartition:
             kql_to_df("T | partition by k ( project-away * | count )",
                       {"T": pdata})
 
-    def test_pipeline_refs_branch_multiplier(self):
+    def test_pipeline_refs_branch_multiplier(self, wh):
         """Branch-mode partition re-plans the upstream pipeline per
-        key: the governor prices head AND body refs at the worst-case
-        64; vectorized partition prices once; refs AFTER the partition
-        stage price once (they run on the unioned output)."""
-        from collections import Counter
+        key: the governor prices head AND body reads at the worst-case
+        64; vectorized partition prices once; reads AFTER the
+        partition stage price once (they run on the unioned output)."""
+        from corkscrew_spark import skipping
 
-        from corkscrew_spark.kql import _pipeline_refs
-
-        vec = Counter(r[0] for r in _pipeline_refs(
-            "orders | partition by p ( join kind=inner (customer) "
-            "on k | count )"))
-        assert vec == {"orders": 1, "customer": 1}
-        br = Counter(r[0] for r in _pipeline_refs(
-            "orders | partition hint.strategy=legacy by p "
-            "( join kind=inner (customer) on k | getschema )"))
-        assert br == {"orders": 64, "customer": 64}
-        after = Counter(r[0] for r in _pipeline_refs(
-            "orders | partition hint.strategy=legacy by p ( getschema ) "
-            "| join kind=inner (nation) on n"))
-        assert after == {"orders": 64, "nation": 1}
+        full = skipping.estimate_scan(wh["T"], [])["bytes_kept"]
+        assert full == skipping.estimate_scan(wh["U"], [])["bytes_kept"]
+        for q, reads in (
+                ("T | partition by p ( join kind=inner (U) on k "
+                 "| count )", 2),
+                ("T | partition hint.strategy=legacy by p "
+                 "( join kind=inner (U) on k | getschema )", 128),
+                ("T | partition hint.strategy=legacy by p "
+                 "( summarize n = count() ) "
+                 "| join kind=inner (U | project n = k) on n", 65)):
+            est = kql_estimate_statement(q, wh)
+            assert (est["reads"], est["bytes_kept"]) \
+                == (reads, reads * full), q
 
     def test_branch_mode_governed_at_multiplier(self, spark, tmp_path):
         """An armed budget that admits one full scan refuses the same

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from corkscrew_spark import skipping, warehouse
+from corkscrew_spark.testing import count_jobs
 
 
 def _write_clustered(spark, path, n_files=8, rows_per=100):
@@ -1612,22 +1613,14 @@ def test_wide_pruned_read_builds_without_a_job(spark, oddly):
     """A pruned read keeping more than 32 files (Spark's parallel
     listing threshold) is a filter over the plain read: building it
     lists nothing, so it runs no Spark job."""
-    import uuid
-
     preds = [("k", ">=", 80)]
     plan = skipping.plan_skip(oddly, preds)
     assert 32 < len(plan["kept"]) < len(plan["kept"]) + len(plan["pruned"])
     base = spark.read.parquet(oddly)
-    sc = spark.sparkContext
-    group = f"pruned-build-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "pruned read build")
-    try:
+    with count_jobs(spark) as jobs:
         got = skipping.read_skipping(spark, oddly, preds, plan=plan,
                                      base=base)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    assert jobs == 0, f"building the pruned read ran {jobs} jobs"
+    assert jobs() == 0, f"building the pruned read ran {jobs()} jobs"
     assert got.count() == 400
 
 

@@ -274,28 +274,3 @@ class TestHashedNgramScore:
         a = t.hashed_ngram_score(df, "doc_id", "text").collect()[0]
         b = t.hashed_ngram_score(df, "doc_id", "text").collect()[0]
         assert a == b
-
-
-class TestNormalizeUnicode:
-    def test_folds_typography_and_strips_controls(self, spark):
-        from corkscrew_spark.operators import text as t
-        rows = [
-            (1, "“Hello” — it’s fine…"),
-            (2, "zero​width\x07 and\ttabs   collapsed"),
-            (3, "  already clean  "),
-        ]
-        df = spark.createDataFrame(rows, "id long, text string")
-        got = {r.id: r.clean for r in df.select(
-            "id", t.normalize_unicode("text").alias("clean")).collect()}
-        assert got[1] == '"Hello" - it\'s fine...'
-        assert got[2] == "zerowidth and tabs collapsed"
-        assert got[3] == "already clean"
-
-    def test_identical_after_cleanup_hash_identically(self, spark):
-        from corkscrew_spark.operators import text as t
-        df = spark.createDataFrame(
-            [(1, "same ‘text’ here"), (2, "same 'text' here")],
-            "id long, text string")
-        fps = [r.fp for r in df.select(
-            t.fingerprint(t.normalize_unicode("text")).alias("fp")).collect()]
-        assert fps[0] == fps[1]
